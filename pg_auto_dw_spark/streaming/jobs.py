@@ -17,6 +17,10 @@ loads), so the Spark-native equivalents are:
   become hub rows via the same hash+dedup logic; idempotency comes
   from ``dropDuplicates`` on the hash key with state, mirroring the
   anti-join of the batch loader.
+- ``_zone_stream``: the landing-zone engine. Every ingest zone (JSONL,
+  quality gate, Bloom and semantic decontam, digest dedup, near-dup,
+  media) is a preset on it, and its docstring states the exactly-once
+  contract they share.
 
 Scale: watermark bounds state; the windowed agg shuffles on
 (window, event_type) which is low-cardinality -> AQE coalesces; the
@@ -706,6 +710,271 @@ def vector_index_ingest_stream(
     )
 
 
+# -- landing-zone engine ------------------------------------------------
+
+
+def _zone_stream(
+    spark: SparkSession,
+    wh,
+    source_dir: str,
+    checkpoint_dir: str,
+    ingest: Callable,
+    *,
+    parquet_schema: T.StructType | None = None,
+    after_commit: list[Callable] | None = None,
+    maintain: tuple[str, ...] = (),
+    maintenance_every: int = 0,
+    maintenance_kwargs: dict | None = None,
+    retry: Callable[[], None] | None = None,
+):
+    """The landing-zone engine. Every ingest zone runs on it: plain,
+    quality-gated, Bloom-decontaminating and semantic-decontaminating
+    JSONL, digest dedup, near-dup and media. Each public
+    ``*_ingest_stream`` is a preset that names its tables and its
+    ``*_ingest_apply``; the apply holds only the zone's route (the
+    typed batch in, ``{table: frame}`` plus stats out). This function
+    and the helpers below it do everything else.
+
+    Per micro-batch, in this order:
+
+    1. An empty batch is skipped.
+    2. ``_admit`` creates the zone's batch-id ledger on first use and
+       looks the batch id up in it. A committed id is a replay and
+       ends the batch. Otherwise it parses the batch: JSONL lines split
+       into typed rows and verbatim quarantined lines (malformed JSON
+       and schema drift), or a parquet batch pinned once.
+    3. ``ingest`` runs the zone's route and then ``_land``: target
+       tables are created on first use, and ONE ``wh.transaction``
+       lands every route table, the quarantined lines and the ledger
+       row.
+    4. The ``after_commit`` hooks read the typed batch: the NDV sketch
+       merge and the dedup zone's bloom absorb. Each is idempotent, or
+       rebuilt from the tables at stream start, so a crash between the
+       commit and a hook can only under-count.
+    5. Every ``maintenance_every`` committed batches, ``wh.maybe_compact``
+       runs on the ``maintain`` tables with ``maintenance_kwargs``.
+       Compaction is its own generation commit: a crash between it and
+       the batch loses the rewrite, never rows.
+
+    Exactly-once contract. ``foreachBatch`` is at-least-once: a crash
+    after the warehouse commit but before the checkpoint commit replays
+    the batch under the same id. The ledger lives INSIDE the batch's
+    transaction, so the journal lands the batch's tables and its ledger
+    row together or not at all. A replay finds its id and does nothing;
+    a crash before the commit leaves nothing partial, so the re-run
+    lands the batch once. The checkpoint and the ledger must live and
+    die together: wiping the checkpoint restarts batch numbering at 0,
+    which a surviving ledger treats as already ingested.
+
+    ``ingest(batch_df, batch_id)`` returns the typed batch the hooks
+    read, or None for a replay; replays run no hook and do not count
+    toward maintenance. ``retry`` (decontam only) rebuilds the zone's
+    state after a failed batch, which then re-runs once; the atomic
+    transaction makes the re-run safe. The first failure is logged
+    before the retry, so a deterministic error keeps its cause."""
+    since = 0  # committed batches since the last maintenance run
+
+    def sink(batch_df, batch_id):
+        nonlocal since
+        if batch_df.isEmpty():
+            return
+        try:
+            typed = ingest(batch_df, batch_id)
+        except Exception:
+            if retry is None:
+                raise
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "zone batch %s failed; rebuilding zone state and retrying once",
+                batch_id,
+                exc_info=True,
+            )
+            retry()
+            typed = ingest(batch_df, batch_id)
+        if typed is None:
+            return
+        for hook in after_commit or ():
+            hook(typed)
+        since += 1
+        if 0 < maintenance_every <= since:
+            since = 0
+            for t in maintain:
+                wh.maybe_compact(t, **(maintenance_kwargs or {}))
+
+    if parquet_schema is None:
+        source = spark.readStream.text(source_dir)
+    else:
+        source = spark.readStream.schema(parquet_schema).parquet(source_dir)
+    return (
+        source.writeStream.outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(sink)
+        .start()
+    )
+
+
+def _admit(
+    wh,
+    owner: str,
+    batch_df,
+    batch_id: int,
+    schema: T.StructType | None = None,
+    quarantine_table: str | None = None,
+    corrupt_col: str = "_corrupt_record",
+):
+    """The replay guard and parse of one batch (``_zone_stream`` step
+    2): None when ``batch_id`` is already in ``owner``'s ledger, else
+    ``(typed, appends)``. ``appends`` holds the quarantined lines (when
+    ``quarantine_table`` is given, the batch is raw JSONL lines under
+    ``schema``) and the ledger row, for the batch's transaction."""
+    ledger = f"{owner}.ingest_log"
+    if not wh.exists(ledger):
+        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
+    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
+        return None
+    appends = [(ledger, wh.spark.createDataFrame([(int(batch_id),)], "batch_id bigint"))]
+    if quarantine_table is None:
+        return batch_df.localCheckpoint(), appends
+    from ..sources import split_jsonl_lines
+
+    # pinned: the parse is read by both appends and the counts
+    typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema, corrupt_col)
+    if not wh.exists(quarantine_table):
+        wh.create_table(
+            quarantine_table, T.StructType([T.StructField("raw_line", T.StringType())])
+        )
+    return typed, [(quarantine_table, quarantined), *appends]
+
+
+def _land(wh, appends: list, creates: list = ()) -> None:
+    """The batch commit (``_zone_stream`` step 3): each ``(name,
+    schema[, partition_by])`` of ``creates`` is created if missing, then
+    every ``(table, frame)`` of ``appends`` lands in ONE transaction."""
+    for name, *spec in creates:
+        if not wh.exists(name):
+            wh.create_table(name, *spec)
+    with wh.transaction([t for t, _ in appends]) as txn:
+        for t, df in appends:
+            txn.append(t, df)
+
+
+def _split_apply(
+    wh,
+    tables: dict,
+    schema: T.StructType,
+    batch_df,
+    batch_id: int,
+    route: Callable,
+    corrupt_col: str = "_corrupt_record",
+) -> dict:
+    """The apply of the zones that split typed rows across tables (quality
+    gate, Bloom decontam, semantic decontam). ``tables`` maps each stat
+    key to its table: ``"clean"`` owns the ledger, ``"quarantined"``
+    takes the malformed lines, and ``route(typed)`` returns the frame of
+    every other key. Returns the row count per key plus ``"replay"``."""
+    admitted = _admit(
+        wh, tables["clean"], batch_df, batch_id, schema, tables["quarantined"], corrupt_col
+    )
+    if admitted is None:
+        return {**dict.fromkeys(tables, 0), "replay": True}
+    typed, appends = admitted
+    frames = {**route(typed), "quarantined": dict(appends)[tables["quarantined"]]}
+    routed = [k for k in tables if k != "quarantined"]
+    _land(
+        wh,
+        [(tables[k], frames[k]) for k in routed] + appends,
+        [(tables[k], schema) for k in routed],
+    )
+    return {**{k: frames[k].count() for k in tables}, "replay": False}
+
+
+def _ledgered(wh, owner: str, apply: Callable, schema=None, quarantine_table=None):
+    """``ingest`` for the zones whose apply takes ``extra_appends``
+    (digest dedup, near-dup, media): ``apply(typed, extra_appends)``
+    lands the batch's quarantined lines and ledger row in its own
+    transaction."""
+
+    def ingest(batch_df, batch_id):
+        admitted = _admit(wh, owner, batch_df, batch_id, schema, quarantine_table)
+        if admitted is None:
+            return None
+        apply(*admitted)
+        return admitted[0]
+
+    return ingest
+
+
+def _ndv_hook(wh, corpus_table: str, ndv_cols: list[str] | None) -> list:
+    """The ingest-offered NDV ledger (``<corpus_table>.ndv``) as a
+    post-commit hook: every well-formed value presented at the front
+    door, not corpus-row NDV. Register-max merge is idempotent, so a
+    replay re-merges the same registers, and a crash before the merge
+    only under-counts until those values arrive again."""
+    if not ndv_cols:
+        return []
+
+    def hook(typed):
+        from ..functions.sketch import update_ndv_sketches
+
+        update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
+
+    return [hook]
+
+
+class _Sidecars:
+    """The probe-side sidecar ledgers of the near-dup and media zones,
+    optionally partitioned by a hash bucket of their probe key
+    (``n_sidecar_parts``). ``bucket_keys`` maps each sidecar to the
+    columns its bucket hashes. The layout is fixed at first ingest, and
+    a call whose ``parts`` disagrees with a stored sidecar fails loudly
+    instead of mis-probing."""
+
+    def __init__(self, wh, parts: int | None, bucket_keys: dict[str, list[str]]):
+        self.wh, self.parts = wh, parts
+        self.partition_by = ["__bucket"] if parts is not None else None
+        self.bucket = {
+            t: F.pmod(F.xxhash64(*cols), F.lit(parts)) for t, cols in bucket_keys.items()
+        } if parts is not None else {}
+        for t in bucket_keys:
+            if not wh.exists(t):
+                continue
+            has = "__bucket" in wh.read(t).columns
+            if has != (parts is not None):
+                raise ValueError(
+                    f"{t} layout mismatch: table is "
+                    f"{'bucketed' if has else 'unpartitioned'} but this call "
+                    f"passed n_sidecar_parts={parts}; the sidecar "
+                    f"layout is fixed at first ingest"
+                )
+
+    def probe(self, table: str, keys: DataFrame, on: list[str]) -> DataFrame:
+        """``_ledger_hits`` of sidecar ``table`` for the batch-sized
+        ``keys``. Bucketed, the probe collects the batch's bucket set
+        and filters ``__bucket IN (...)`` before the semi join, so the
+        scan partition-prunes; it prunes only when the set leaves most
+        partitions untouched (<= 0.8 x parts), since a set covering
+        everything pays listing and filter overhead for nothing."""
+        ledger = self.wh.read(table)
+        if self.parts is not None:
+            buckets = [
+                r["b"] for r in keys.select(self.bucket[table].alias("b")).distinct().collect()
+            ]
+            if len(buckets) <= self.parts * 0.8:
+                ledger = ledger.filter(F.col("__bucket").isin(buckets))
+            ledger = ledger.drop("__bucket")
+        return _ledger_hits(ledger, keys, on)
+
+    def staged(self, table: str, df: DataFrame) -> DataFrame:
+        """New sidecar rows ready to append. Bucketed, one batch-sized
+        shuffle per sidecar makes each append write ONE file per touched
+        bucket, not one per (input partition x bucket)."""
+        if self.parts is None:
+            return df
+        return df.withColumn("__bucket", self.bucket[table]).repartition("__bucket")
+
+
 def jsonl_ingest_apply(
     wh,
     clean_table: str,
@@ -722,18 +991,14 @@ def jsonl_ingest_apply(
     min_quality_score: float = 0.0,
     text_col: str = "text",
 ) -> dict:
-    """Apply one micro-batch of raw JSONL lines transactionally:
-    parse/split with the same from_json contract as
-    ``sources.read_jsonl_quarantine``, then append the clean rows, the
-    quarantined lines, AND the batch-id ledger row in ONE warehouse
-    transaction. Exactly-once across foreachBatch replays comes from
-    the ledger living INSIDE the transaction: a replayed batch finds
-    its id already committed and no-ops, while a crash before the
-    commit left no partial append to collide with (the journal
-    roll-forward lands all three tables or none).
+    """One micro-batch of raw JSONL lines through the landing-zone
+    engine (``_zone_stream`` states the exactly-once contract): typed
+    rows land in ``clean_table`` and malformed or schema-drift lines
+    verbatim in ``quarantine_table``, with the same from_json contract
+    as ``sources.read_jsonl_quarantine``.
 
-    OPTIONAL QUALITY GATE (r11 VERDICT directive 6): with
-    ``rejected_table`` set, typed rows must also pass
+    OPTIONAL QUALITY GATE: with ``rejected_table`` set, typed rows must
+    also pass
     (a) the Gopher rule verdict (``quality_gopher=True`` -- pure
     map-only expressions composed into the same scan, the
     text.gopher_exprs composition the datacard uses; tune via
@@ -751,47 +1016,24 @@ def jsonl_ingest_apply(
     adds one batch-sized pass -- the LEDGER is never scanned or
     shuffled by it.
 
-    The ledger (``<clean_table>.ingest_log``) and the stream checkpoint
-    must live and die together: wiping the checkpoint restarts batch
-    numbering at 0, which the surviving ledger would treat as already
-    ingested. That is the standard transactional-foreachBatch contract,
-    stated here so operators don't discover it in production.
-
     Returns {"clean": n, "quarantined": n[, "rejected": n],
     "replay": bool}."""
-    from pyspark.sql import functions as F
-
     if (quality_gopher or quality_weights is not None) and rejected_table is None:
         # a silently-disabled gate is a quiet data-quality failure in
-        # a landing zone (r12 ADVICE): fail loudly instead
+        # a landing zone: fail loudly instead
         raise ValueError(
             "quality_gopher/quality_weights set but rejected_table is None; "
             "the quality gate needs a rejected_table to route failures to"
         )
-    gate_on = rejected_table is not None and (
-        quality_gopher or quality_weights is not None
-    )
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        out = {"clean": 0, "quarantined": 0, "replay": True}
-        if gate_on:
-            out["rejected"] = 0
-        return out
+    tables = {"clean": clean_table, "quarantined": quarantine_table}
+    if not (quality_gopher or quality_weights is not None):
+        return _split_apply(
+            wh, tables, schema, batch_df, batch_id, lambda typed: {"clean": typed}, corrupt_col
+        )
 
-    from ..sources import split_jsonl_lines
-
-    clean, quarantined = split_jsonl_lines(
-        batch_df.localCheckpoint(),  # parsed once, read by 2 appends + counts
-        schema,
-        corrupt_col,
-    )
-
-    rejected = None
-    if gate_on:
+    def route(typed):
         verdict = F.lit(True)
-        frame = clean
+        frame = typed
         if quality_gopher:
             from ..functions.text import gopher_exprs
 
@@ -818,39 +1060,15 @@ def jsonl_ingest_apply(
             "__qpass", F.coalesce(verdict, F.lit(False))
         ).localCheckpoint()
         helper_cols = [c for c in ("__qrk", "__qscore", "__qpass") if c in flagged.columns]
-        clean = flagged.filter(F.col("__qpass")).drop(*helper_cols)
-        rejected = flagged.filter(~F.col("__qpass")).drop(*helper_cols)
+        return {
+            "clean": flagged.filter(F.col("__qpass")).drop(*helper_cols),
+            "rejected": flagged.filter(~F.col("__qpass")).drop(*helper_cols),
+        }
 
-    if not wh.exists(clean_table):
-        wh.create_table(clean_table, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    if gate_on and not wh.exists(rejected_table):
-        wh.create_table(rejected_table, schema)
-    spark = wh.spark
-    tables = [clean_table, quarantine_table, ledger]
-    if gate_on:
-        tables.insert(2, rejected_table)
-    with wh.transaction(tables) as txn:
-        txn.append(clean_table, clean)
-        txn.append(quarantine_table, quarantined)
-        if gate_on:
-            txn.append(rejected_table, rejected)
-        txn.append(
-            ledger,
-            spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-        )
-    out = {
-        "clean": clean.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
-    }
-    if gate_on:
-        out["rejected"] = rejected.count()
-    return out
+    return _split_apply(
+        wh, {**tables, "rejected": rejected_table}, schema, batch_df, batch_id, route,
+        corrupt_col,
+    )
 
 
 def jsonl_ingest_stream(
@@ -864,10 +1082,10 @@ def jsonl_ingest_stream(
     corrupt_col: str = "_corrupt_record",
     **quality_gate,
 ):
-    """Streaming landing-zone JSONL ingestion: new files under
-    ``source_dir`` stream in as raw lines, split into typed clean rows
-    vs verbatim quarantined lines (schema drift included), and land in
-    two warehouse tables through the transactional batch applier --
+    """Streaming landing-zone JSONL ingestion: the ``jsonl_ingest_apply``
+    preset on the landing-zone engine (``_zone_stream``). New files
+    under ``source_dir`` stream in as raw lines and split into typed
+    clean rows vs verbatim quarantined lines (schema drift included) --
     the streaming twin of ``sources.read_jsonl_quarantine`` and the
     front door a continuously-crawling corpus feed needs. State is
     only the file-source log; the parse is stateless, so the stream
@@ -882,22 +1100,14 @@ def jsonl_ingest_stream(
     evaluated per batch; pass a localCheckpoint-pinned frame so a
     restarted stream serves the same model bytes."""
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        jsonl_ingest_apply(
+    def ingest(batch_df, batch_id):
+        stats = jsonl_ingest_apply(
             wh, clean_table, quarantine_table, schema, batch_df, batch_id,
             corrupt_col, **quality_gate,
         )
+        return None if stats["replay"] else batch_df
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _zone_stream(spark, wh, source_dir, checkpoint_dir, ingest)
 
 
 def jsonl_decontam_ingest_apply(
@@ -922,54 +1132,27 @@ def jsonl_decontam_ingest_apply(
       ``clean_table``),
     - ``quarantine_table``: verbatim malformed / schema-drift lines.
 
-    Same exactly-once ledger-inside-the-transaction contract as
-    ``jsonl_ingest_apply``; the bloom row is FROZEN bytes built once at
-    stream start, so every batch probes the same filter and a restart
-    cannot shift verdicts."""
-    from pyspark.sql import functions as F
-
+    Exactly-once through the landing-zone engine (``_zone_stream``);
+    the bloom row is FROZEN bytes built once at stream start, so every
+    batch probes the same filter and a restart cannot shift verdicts."""
     from ..functions.corpus import _with_bloom_hit
 
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        return {"clean": 0, "contaminated": 0, "quarantined": 0, "replay": True}
+    def route(typed):
+        # route each row by its own in-place probe verdict -- no id joins,
+        # so NULL-id rows route by their text like any other row (an
+        # id-keyed semi join would misfile every NULL id as contaminated)
+        flagged = _with_bloom_hit(typed, bloom, text_col).localCheckpoint()
+        return {
+            "clean": flagged.filter(~F.col("bloom_hit")).drop("bloom_hit"),
+            "contaminated": flagged.filter(F.col("bloom_hit")).drop("bloom_hit"),
+        }
 
-    from ..sources import split_jsonl_lines
-
-    typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-    # route each row by its own in-place probe verdict -- no id joins,
-    # so NULL-id rows route by their text like any other row (an
-    # id-keyed semi join would misfile every NULL id as contaminated)
-    flagged = _with_bloom_hit(typed, bloom, text_col).localCheckpoint()
-    clean = flagged.filter(~F.col("bloom_hit")).drop("bloom_hit")
-    contaminated = flagged.filter(F.col("bloom_hit")).drop("bloom_hit")
-
-    for t in (clean_table, contaminated_table):
-        if not wh.exists(t):
-            wh.create_table(t, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    spark = wh.spark
-    with wh.transaction(
-        [clean_table, contaminated_table, quarantine_table, ledger]
-    ) as txn:
-        txn.append(clean_table, clean)
-        txn.append(contaminated_table, contaminated)
-        txn.append(quarantine_table, quarantined)
-        txn.append(
-            ledger, spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        )
-    return {
-        "clean": clean.count(),
-        "contaminated": contaminated.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
+    tables = {
+        "clean": clean_table,
+        "contaminated": contaminated_table,
+        "quarantined": quarantine_table,
     }
+    return _split_apply(wh, tables, schema, batch_df, batch_id, route)
 
 
 def jsonl_decontam_ingest_stream(
@@ -989,77 +1172,45 @@ def jsonl_decontam_ingest_stream(
     maintenance_every: int = 0,
     maintenance_kwargs: dict | None = None,
 ):
-    """Streaming decontaminating landing zone: the jsonl ingest front
-    door composed with broadcast-Bloom decontamination, so benchmark-
-    contaminated documents never enter the training-eligible table in
-    the first place (filter-at-ingest beats scrub-later at corpus
-    scale: the contaminated rows are never re-read by every downstream
-    pass). The bitset is built ONCE from the benchmark at stream start
-    (bounded driver work): ``bloom_build`` returns a DRIVER-LOCAL
-    relation (frozen bytes, identical across batches and restarts), so
-    steady state needs no cluster-resident block at all. The sink still
-    keeps a rebuild-and-retry-once path as defense in depth -- the
-    bloom's determinism licenses it (same benchmark -> bit-identical
-    bitset -> identical verdicts), and the apply's transaction is
-    atomic (ledger inside), so the retry never double-writes. The
-    first failure is LOGGED before the retry: a deterministic error
-    would otherwise silently re-run a full benchmark gram collect and
-    fail again with the original cause discarded.
+    """Streaming decontaminating landing zone: the
+    ``jsonl_decontam_ingest_apply`` preset on the landing-zone engine
+    (``_zone_stream``), so benchmark-contaminated documents never enter
+    the training-eligible table in the first place (filter-at-ingest
+    beats scrub-later at corpus scale: the contaminated rows are never
+    re-read by every downstream pass). The bitset is built ONCE from
+    the benchmark at stream start (bounded driver work): ``bloom_build``
+    returns a DRIVER-LOCAL relation (frozen bytes, identical across
+    batches and restarts), so steady state needs no cluster-resident
+    block at all. The zone still passes the engine a
+    rebuild-and-retry-once hook as defense in depth -- the bloom's
+    determinism licenses it (same benchmark -> bit-identical bitset ->
+    identical verdicts).
 
     ``maintenance_every`` > 0 runs ``wh.maybe_compact`` on the clean
-    table every N committed batches (``maintenance_kwargs`` forwarded)
-    -- same post-commit maintenance loop as
-    ``jsonl_dedup_ingest_stream``."""
-    import logging
+    table every N committed batches (``maintenance_kwargs``
+    forwarded)."""
     from ..functions.corpus import bloom_build
 
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        wh.maybe_compact(clean_table, **(maintenance_kwargs or {}))
-
-    def _build():
+    def build():
         return bloom_build(
             benchmark, n=n, m_bits=m_bits, text_col=text_col, id_col=id_col
         )
 
-    holder = {"bloom": _build()}
+    holder = {"bloom": build()}
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        try:
-            jsonl_decontam_ingest_apply(
-                wh, clean_table, contaminated_table, quarantine_table, schema,
-                holder["bloom"], batch_df, batch_id, text_col,
-            )
-        except Exception:
-            logging.getLogger(__name__).warning(
-                "decontam apply failed for batch %s; rebuilding bloom and "
-                "retrying once",
-                batch_id,
-                exc_info=True,
-            )
-            holder["bloom"] = _build()
-            jsonl_decontam_ingest_apply(
-                wh, clean_table, contaminated_table, quarantine_table, schema,
-                holder["bloom"], batch_df, batch_id, text_col,
-            )
-        _maybe_maintain()
+    def ingest(batch_df, batch_id):
+        stats = jsonl_decontam_ingest_apply(
+            wh, clean_table, contaminated_table, quarantine_table, schema,
+            holder["bloom"], batch_df, batch_id, text_col,
+        )
+        return None if stats["replay"] else batch_df
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark, wh, source_dir, checkpoint_dir, ingest,
+        maintain=(clean_table,),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
+        retry=lambda: holder.update(bloom=build()),
     )
 
 
@@ -1220,18 +1371,6 @@ def dedup_ingest_apply(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if not wh.exists(ledger_table):
-        wh.create_table(
-            ledger_table,
-            T.StructType(
-                [
-                    T.StructField("digest", T.StringType()),
-                    T.StructField("first_id", canon.schema[id_col].dataType),
-                ]
-            ),
-        )
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, typed.schema)
     n_batch = typed.count()
     n_nulls = nulls.count()
     n_canon = canon.count()
@@ -1244,9 +1383,10 @@ def dedup_ingest_apply(
         n_possible = possible.count()
     else:
         possible, definite, n_possible = canon, None, n_canon
-    if n_possible == 0:
+    if n_possible == 0 or not wh.exists(ledger_table):
         # every survivor is provably absent from the ledger (bloom has
-        # no false negatives) -- the ledger is never even scanned
+        # no false negatives, or there is no ledger yet) -- the ledger
+        # is never even scanned
         new = canon
     else:
         ledger = wh.read(ledger_table).select(F.col("digest").alias("__digest"))
@@ -1259,17 +1399,31 @@ def dedup_ingest_apply(
     # leaves either the whole batch or none of it, so the replay guard
     # can never disagree with the corpus (NULL-text rows are undeduped
     # and would double-append under a split-transaction replay)
-    extra = extra_appends or []
-    with wh.transaction([corpus_table, ledger_table, *[t for t, _ in extra]]) as txn:
-        txn.append(corpus_table, new.drop("__digest").unionByName(nulls))
-        txn.append(
-            ledger_table,
-            new.select(
-                F.col("__digest").alias("digest"), F.col(id_col).alias("first_id")
+    _land(
+        wh,
+        [
+            (corpus_table, new.drop("__digest").unionByName(nulls)),
+            (
+                ledger_table,
+                new.select(
+                    F.col("__digest").alias("digest"), F.col(id_col).alias("first_id")
+                ),
             ),
-        )
-        for t, df in extra:
-            txn.append(t, df)
+            *(extra_appends or []),
+        ],
+        [
+            (
+                ledger_table,
+                T.StructType(
+                    [
+                        T.StructField("digest", T.StringType()),
+                        T.StructField("first_id", canon.schema[id_col].dataType),
+                    ]
+                ),
+            ),
+            (corpus_table, typed.schema),
+        ],
+    )
     return {
         "ingested": n_new + n_nulls,
         "dup_within_batch": (n_batch - n_nulls) - n_canon,
@@ -1292,14 +1446,14 @@ def jsonl_dedup_ingest_stream(
     maintenance_kwargs: dict | None = None,
     ndv_cols: list[str] | None = None,
 ):
-    """Deduplicating JSONL landing zone: the ingest front door composed
-    with the digest-ledger dedup, so a re-crawled or re-submitted
-    document can never enter the corpus twice across ANY horizon --
-    batches, restarts, or months of feeds. Per micro-batch, in one
-    warehouse transaction: typed new-digest rows append to
-    ``corpus_table``, their digests to ``<corpus_table>.digests``,
-    malformed lines verbatim to ``quarantine_table``, and the batch id
-    to the ingest ledger (replayed batches are exact no-ops).
+    """Deduplicating JSONL landing zone: the ``dedup_ingest_apply``
+    preset on the landing-zone engine (``_zone_stream``), so a
+    re-crawled or re-submitted document can never enter the corpus
+    twice across ANY horizon -- batches, restarts, or months of feeds.
+    Per micro-batch, in one warehouse transaction: typed new-digest
+    rows append to ``corpus_table``, their digests to
+    ``<corpus_table>.digests``, malformed lines verbatim to
+    ``quarantine_table``, and the batch id to the zone's ledger.
 
     ``ledger_bloom_m_bits`` turns on the digest-bloom front filter:
     the stream builds a ``bloom_build_keys`` bitset over the EXISTING
@@ -1311,15 +1465,12 @@ def jsonl_dedup_ingest_stream(
     per-batch ledger scan entirely; resubmission-heavy batches pay one
     scan, never a ledger shuffle.
 
-    ``maintenance_every`` > 0 wires the small-file maintenance loop in:
-    every N committed batches the sink runs ``wh.maybe_compact`` on the
-    landing tables (corpus + digest ledger) with ``maintenance_kwargs``
-    forwarded -- the health probe is an O(files) directory listing, so
-    the cadence costs nothing until one-file-per-batch accretion
-    actually crosses the threshold, and then exactly one rewrite
-    repays it. Maintenance runs AFTER the batch transaction commits
-    (compaction is a separate generation commit; a crash between them
-    loses only the rewrite, never rows).
+    ``maintenance_every`` > 0 runs ``wh.maybe_compact`` on the corpus
+    and the digest ledger every N committed batches
+    (``maintenance_kwargs`` forwarded). The health probe is an O(files)
+    directory listing, so the cadence costs nothing until
+    one-file-per-batch accretion actually crosses the threshold, and
+    then exactly one rewrite repays it.
 
     ``ndv_cols`` maintains the incremental NDV ledger
     (``sketch.update_ndv_sketches`` on ``<corpus_table>.ndv``) over
@@ -1331,33 +1482,12 @@ def jsonl_dedup_ingest_stream(
     coincide (rejection means the text digest was already ledgered);
     for side columns ingest-offered is the monitoring-correct grain
     (what arrived), and corpus-grain NDV is one ``ndv_sketch_rows``
-    pass over the corpus table when needed. Like the bloom absorb it
-    runs AFTER the batch transaction: the sketch merge is its own
-    generation swap, and because register-max merge is idempotent the
-    crash window is benign in BOTH directions -- a replayed batch
-    re-merges to the same registers, and a batch that committed rows
-    but crashed before the merge only under-estimates until a later
-    batch carrying those values lands (sketches are monotone; they
-    never over-count)."""
+    pass over the corpus table when needed."""
     import numpy as np
 
     from ..functions.corpus import _gram_hash_pair, bloom_build_keys
-    from ..sources import split_jsonl_lines
 
     ledger_table = f"{corpus_table}.digests"
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, ledger_table):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
     bloom_state: dict | None = None
     if ledger_bloom_m_bits is not None:
         if wh.exists(ledger_table):
@@ -1374,11 +1504,12 @@ def jsonl_dedup_ingest_stream(
             "n_keys": int(head["n_grams"]),
         }
 
-    def _absorb_batch_digests(typed):
+    def absorb_batch_digests(typed):
         """OR this batch's digests into the maintained bitset (batch-
         sized collect; superset of the NEW digests is fine -- extra
         bits only raise the false-positive rate, never break the
-        no-false-negative contract)."""
+        no-false-negative contract). Post-commit: a crash before it
+        restarts with a ledger-rebuilt bloom."""
         h1, h2 = _gram_hash_pair(F.col("__d"))
         pairs = (
             typed.select(F.sha2(F.col(text_col), 256).alias("__d"))
@@ -1404,52 +1535,21 @@ def jsonl_dedup_ingest_stream(
             "bits array<bigint>, m_bits bigint, k int, n int, n_grams bigint",
         ).localCheckpoint(eager=True)
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
-            )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-        if not wh.exists(quarantine_table):
-            wh.create_table(
-                quarantine_table,
-                T.StructType([T.StructField("raw_line", T.StringType())]),
-            )
-        # ONE transaction for the whole batch: corpus, digests,
-        # quarantine, and the replay guard land together or not at all
-        stats = dedup_ingest_apply(
+    def apply(typed, extra_appends):
+        dedup_ingest_apply(
             wh, corpus_table, ledger_table, typed, text_col, id_col,
-            extra_appends=[
-                (quarantine_table, quarantined),
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
+            extra_appends=extra_appends,
             ledger_bloom=bloom_state["df"] if bloom_state is not None else None,
         )
-        if bloom_state is not None:
-            # AFTER the commit: a crash before this point restarts with
-            # a ledger-rebuilt bloom; a crash after loses nothing
-            _absorb_batch_digests(typed)
-        if ndv_cols:
-            from ..functions.sketch import update_ndv_sketches
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
-        return stats
-
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark, wh, source_dir, checkpoint_dir,
+        _ledgered(wh, corpus_table, apply, schema, quarantine_table),
+        after_commit=([absorb_batch_digests] if bloom_state is not None else [])
+        + _ndv_hook(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, ledger_table),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )
 
 
@@ -1696,47 +1796,18 @@ def neardup_ingest_apply(
         n_within_dups = dup_members.count()
     canon_sigs = wide.join(canon_ids, id_col, "left_semi")
 
-    # sidecar partition buckets (opt-in): the probe collects its
-    # (batch-sized) bucket set and the scan partition-prunes to those
-    use_buckets = n_sidecar_parts is not None
-    if use_buckets:
-        band_bucket = F.pmod(F.xxhash64(F.col("band_key")), F.lit(n_sidecar_parts))
-        id_bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sidecar_parts))
-
-    def _check_layout(table: str) -> None:
-        has = "__bucket" in wh.read(table).columns
-        if has != use_buckets:
-            raise ValueError(
-                f"{table} layout mismatch: table is "
-                f"{'bucketed' if has else 'unpartitioned'} but this call "
-                f"passed n_sidecar_parts={n_sidecar_parts}; the sidecar "
-                f"layout is fixed at first ingest"
-            )
-
     # -- cross-batch probe ----------------------------------------------
+    sidecars = _Sidecars(
+        wh, n_sidecar_parts, {bands_table: ["band_key"], sig_table: [id_col]}
+    )
     cross_dup_canon = None
     matched = None
     if wh.exists(bands_table):
-        _check_layout(bands_table)
         canon_bands = bands.join(canon_ids, id_col, "left_semi")
         probe_keys = canon_bands.select("band", "band_key").distinct().localCheckpoint(
             eager=True
         )  # read twice: bucket-set collect + the broadcast semi
-        ledger_bands = wh.read(bands_table)
-        if use_buckets:
-            probe_buckets = [
-                r["b"]
-                for r in probe_keys.select(band_bucket.alias("b")).distinct().collect()
-            ]
-            # prune only when the batch leaves most partitions
-            # untouched -- a bucket set covering everything pays
-            # listing/filter overhead for nothing
-            if len(probe_buckets) <= n_sidecar_parts * 0.8:
-                ledger_bands = ledger_bands.filter(
-                    F.col("__bucket").isin(probe_buckets)
-                )
-            ledger_bands = ledger_bands.drop("__bucket")
-        hits = _ledger_hits(ledger_bands, probe_keys, ["band", "band_key"])
+        hits = sidecars.probe(bands_table, probe_keys, ["band", "band_key"])
         # hot-bucket cap: at most max_probe_bucket existing docs verify
         # per bucket (deterministic min-id order); a verified near-dup
         # only needs ONE corpus witness, so the cap trades nothing but
@@ -1760,18 +1831,7 @@ def neardup_ingest_apply(
             .localCheckpoint(eager=True)
         )
         cand_ids = cand.select(F.col("id_b").alias(id_col)).distinct()
-        ledger_sigs = wh.read(sig_table)
-        if use_buckets:
-            sig_buckets = [
-                r["b"]
-                for r in cand_ids.select(id_bucket.alias("b")).distinct().collect()
-            ]
-            if len(sig_buckets) <= n_sidecar_parts * 0.8:
-                ledger_sigs = ledger_sigs.filter(
-                    F.col("__bucket").isin(sig_buckets)
-                )
-            ledger_sigs = ledger_sigs.drop("__bucket")
-        corpus_sigs = _ledger_hits(ledger_sigs, cand_ids, [id_col])
+        corpus_sigs = sidecars.probe(sig_table, cand_ids, [id_col])
         verified = _sim_pairs(cand, wide, corpus_sigs)
         matched = verified.groupBy("id_a").agg(F.min("id_b").alias("matched_id"))
         cross_dup_canon = matched.select(F.col("id_a").alias(id_col))
@@ -1783,52 +1843,31 @@ def neardup_ingest_apply(
         else canon_ids.join(cross_dup_canon, id_col, "left_anti")
     )
     new_rows = batch.join(keep_canon, id_col, "left_semi").unionByName(unsigned)
-    new_bands = bands.join(keep_canon, id_col, "left_semi")
-    new_sigs = canon_sigs.join(keep_canon, id_col, "left_semi")
-    if use_buckets:
-        # one batch-sized shuffle per sidecar so each append writes ONE
-        # file per touched bucket, not one per (input partition x
-        # bucket) -- the partitioned layout would otherwise multiply
-        # small-file pressure by the batch's partition count
-        new_bands = new_bands.withColumn("__bucket", band_bucket).repartition(
-            "__bucket"
-        )
-        new_sigs = new_sigs.withColumn("__bucket", id_bucket).repartition(
-            "__bucket"
-        )
+    new_bands = sidecars.staged(bands_table, bands.join(keep_canon, id_col, "left_semi"))
+    new_sigs = sidecars.staged(sig_table, canon_sigs.join(keep_canon, id_col, "left_semi"))
     n_new = new_rows.count()
 
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, batch.schema)
-    sidecar_parts = ["__bucket"] if use_buckets else None
-    if not wh.exists(bands_table):
-        wh.create_table(bands_table, new_bands.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(bands_table)
-    if not wh.exists(sig_table):
-        wh.create_table(sig_table, new_sigs.schema, partition_by=sidecar_parts)
-    extra = list(extra_appends or [])
+    # the signature sidecar is created first: the probe reads it
+    # whenever the bands sidecar exists
+    creates = [
+        (corpus_table, batch.schema),
+        (sig_table, new_sigs.schema, sidecars.partition_by),
+        (bands_table, new_bands.schema, sidecars.partition_by),
+    ]
+    appends = [(corpus_table, new_rows), (bands_table, new_bands), (sig_table, new_sigs)]
+    appends += extra_appends or []
     dup_links = _dup_links(matched, dup_members, id_col)
     if dupes_table is not None and dup_links is not None:
         dupes = batch.join(dup_links, id_col)
-        if not wh.exists(dupes_table):
-            wh.create_table(dupes_table, dupes.schema)
-        extra.append((dupes_table, dupes))
+        creates.append((dupes_table, dupes.schema))
+        appends.append((dupes_table, dupes))
     if monitor is not None:
         # created at FIRST ingest, not first saturation: empty always
-        # means healthy, never monitoring-off (r13 review fix)
-        if not wh.exists(monitor_table):
-            wh.create_table(monitor_table, monitor.schema)
+        # means healthy, never monitoring-off
+        creates.append((monitor_table, monitor.schema))
         if not monitor.isEmpty():
-            extra.append((monitor_table, monitor))
-    with wh.transaction(
-        [corpus_table, bands_table, sig_table, *[t for t, _ in extra]]
-    ) as txn:
-        txn.append(corpus_table, new_rows)
-        txn.append(bands_table, new_bands)
-        txn.append(sig_table, new_sigs)
-        for t, df in extra:
-            txn.append(t, df)
+            appends.append((monitor_table, monitor))
+    _land(wh, appends, creates)
     return {
         "n_batch": n_batch,
         "n_unsigned": n_unsigned,
@@ -1856,74 +1895,33 @@ def jsonl_neardup_ingest_stream(
     ndv_cols: list[str] | None = None,
     monitor_table: str | None = None,
 ):
-    """Near-dup-deduplicating JSONL landing zone: the ingest front door
-    composed with ``neardup_ingest_apply``, so a re-crawl that differs
-    only by boilerplate never enters the corpus twice. Same
-    transactional spine as ``jsonl_dedup_ingest_stream``: per batch,
-    typed survivors + band/signature ledger rows + quarantined lines +
-    the replay guard land in ONE warehouse transaction (replayed
-    batches are exact no-ops); the optional maintenance cadence
+    """Near-dup-deduplicating JSONL landing zone: the
+    ``neardup_ingest_apply`` preset on the landing-zone engine
+    (``_zone_stream``), so a re-crawl that differs only by boilerplate
+    never enters the corpus twice. Per batch, typed survivors,
+    band/signature ledger rows, quarantined lines and the batch id land
+    in ONE warehouse transaction; the optional maintenance cadence
     compacts the corpus and both sidecars post-commit. ``ndv_cols``
-    maintains the ingest-offered NDV ledger post-commit, same grain
-    and crash argument as the exact-dedup zone."""
-    from ..sources import split_jsonl_lines
+    maintains the ingest-offered NDV ledger post-commit, the same grain
+    as the exact-dedup zone."""
 
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
-
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, f"{corpus_table}.bands", f"{corpus_table}.minhash"):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
-            )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-        if not wh.exists(quarantine_table):
-            wh.create_table(
-                quarantine_table,
-                T.StructType([T.StructField("raw_line", T.StringType())]),
-            )
-        stats = neardup_ingest_apply(
+    def apply(typed, extra_appends):
+        neardup_ingest_apply(
             wh, corpus_table, typed, text_col, id_col,
             sim_threshold=sim_threshold,
             dupes_table=dupes_table,
             n_sidecar_parts=n_sidecar_parts,
             monitor_table=monitor_table,
-            extra_appends=[
-                (quarantine_table, quarantined),
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
+            extra_appends=extra_appends,
         )
-        if ndv_cols:
-            from ..functions.sketch import update_ndv_sketches
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
-        return stats
-
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark, wh, source_dir, checkpoint_dir,
+        _ledgered(wh, corpus_table, apply, schema, quarantine_table),
+        after_commit=_ndv_hook(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, f"{corpus_table}.bands", f"{corpus_table}.minhash"),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )
 
 
@@ -1941,14 +1939,15 @@ def jsonl_semdecon_ingest_apply(
     n_probes: int = 4,
     text_col: str = "text",
 ) -> dict:
-    """One micro-batch of the SEMANTIC decontaminating landing zone
-    (r12): the paraphrase-grade twin of ``jsonl_decontam_ingest_apply``
-    -- where the Bloom zone catches verbatim n-gram leaks, this one
+    """One micro-batch of the SEMANTIC decontaminating landing zone:
+    the paraphrase-grade twin of ``jsonl_decontam_ingest_apply`` --
+    where the Bloom zone catches verbatim n-gram leaks, this one
     embeds each typed row under the persisted chunk index's FROZEN
     geometry (``semsearch.semantic_decontaminate``) and routes rows
     whose text lands cosine >= ``threshold`` against any indexed chunk
     to ``contaminated_table``. Three-way split in ONE warehouse
-    transaction with the same exactly-once batch ledger.
+    transaction, exactly-once through the landing-zone engine
+    (``_zone_stream``).
 
     Routing keys on a checkpoint-pinned synthetic row key (the quality
     -gate rule): every row routes by its OWN text, so NULL or
@@ -1967,54 +1966,30 @@ def jsonl_semdecon_ingest_apply(
 
     Per batch the gate costs one embed pass + one cell-pruned probe of
     the index, both batch-sized; the ledger is never touched by it."""
-    from pyspark.sql import functions as F
 
-    ledger = f"{clean_table}.ingest_log"
-    if not wh.exists(ledger):
-        wh.create_table(ledger, T.StructType([T.StructField("batch_id", T.LongType())]))
-    if wh.read(ledger).filter(F.col("batch_id") == batch_id).count() > 0:
-        return {"clean": 0, "contaminated": 0, "quarantined": 0, "replay": True}
+    def route(typed):
+        from ..functions.semsearch import semantic_decontaminate
 
-    from ..functions.semsearch import semantic_decontaminate
-    from ..sources import split_jsonl_lines
+        keyed = typed.withColumn(
+            "__srk", F.monotonically_increasing_id()
+        ).localCheckpoint()
+        flags = semantic_decontaminate(
+            index_wh, index_name,
+            keyed.select("__srk", text_col),
+            threshold=threshold, n_probes=n_probes,
+            eval_id_col="__srk", text_col=text_col,
+        ).select(F.col("eval_id").alias("__srk")).distinct()
+        return {
+            "clean": keyed.join(flags, "__srk", "left_anti").drop("__srk"),
+            "contaminated": keyed.join(flags, "__srk", "left_semi").drop("__srk"),
+        }
 
-    typed, quarantined = split_jsonl_lines(batch_df.localCheckpoint(), schema)
-    keyed = typed.withColumn(
-        "__srk", F.monotonically_increasing_id()
-    ).localCheckpoint()
-    flags = semantic_decontaminate(
-        index_wh, index_name,
-        keyed.select("__srk", text_col),
-        threshold=threshold, n_probes=n_probes,
-        eval_id_col="__srk", text_col=text_col,
-    ).select(F.col("eval_id").alias("__srk")).distinct()
-    contaminated = keyed.join(flags, "__srk", "left_semi").drop("__srk")
-    clean = keyed.join(flags, "__srk", "left_anti").drop("__srk")
-
-    for t in (clean_table, contaminated_table):
-        if not wh.exists(t):
-            wh.create_table(t, schema)
-    if not wh.exists(quarantine_table):
-        wh.create_table(
-            quarantine_table,
-            T.StructType([T.StructField("raw_line", T.StringType())]),
-        )
-    spark = wh.spark
-    with wh.transaction(
-        [clean_table, contaminated_table, quarantine_table, ledger]
-    ) as txn:
-        txn.append(clean_table, clean)
-        txn.append(contaminated_table, contaminated)
-        txn.append(quarantine_table, quarantined)
-        txn.append(
-            ledger, spark.createDataFrame([(int(batch_id),)], "batch_id bigint")
-        )
-    return {
-        "clean": clean.count(),
-        "contaminated": contaminated.count(),
-        "quarantined": quarantined.count(),
-        "replay": False,
+    tables = {
+        "clean": clean_table,
+        "contaminated": contaminated_table,
+        "quarantined": quarantine_table,
     }
+    return _split_apply(wh, tables, schema, batch_df, batch_id, route)
 
 
 def jsonl_semdecon_ingest_stream(
@@ -2032,32 +2007,25 @@ def jsonl_semdecon_ingest_stream(
     n_probes: int = 4,
     text_col: str = "text",
 ):
-    """Streaming SEMANTIC decontaminating landing zone: the JSONL
-    front door composed with chunk-index semantic decontamination, so
-    paraphrase-grade benchmark leaks (which share no grams with their
-    source and sail through the Bloom zone) route to the contaminated
-    audit table as they ARRIVE. Run it beside (not instead of) the
-    Bloom zone: exact backstop + semantic net is the full
-    decontamination posture. State is only the file-source log; the
-    per-batch cost is one embed pass + one pruned index probe."""
+    """Streaming SEMANTIC decontaminating landing zone: the
+    ``jsonl_semdecon_ingest_apply`` preset on the landing-zone engine
+    (``_zone_stream``), so paraphrase-grade benchmark leaks (which
+    share no grams with their source and sail through the Bloom zone)
+    route to the contaminated audit table as they ARRIVE. Run it beside
+    (not instead of) the Bloom zone: exact backstop + semantic net is
+    the full decontamination posture. State is only the file-source
+    log; the per-batch cost is one embed pass + one pruned index
+    probe."""
 
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        jsonl_semdecon_ingest_apply(
+    def ingest(batch_df, batch_id):
+        stats = jsonl_semdecon_ingest_apply(
             wh, clean_table, contaminated_table, quarantine_table, schema,
             index_wh, index_name, batch_df, batch_id,
             threshold=threshold, n_probes=n_probes, text_col=text_col,
         )
+        return None if stats["replay"] else batch_df
 
-    return (
-        spark.readStream.text(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
+    return _zone_stream(spark, wh, source_dir, checkpoint_dir, ingest)
 
 
 def _media_chunk_keys(hashes: DataFrame, n_chunks: int = 8) -> DataFrame:
@@ -2332,7 +2300,7 @@ def media_ingest_apply(
         min_bytes is not None or reject_unsigned or decode_rules
     ) and rejected_table is None:
         # a silently-disabled gate is a quiet data-quality failure in
-        # a landing zone (the text zone's r12 ADVICE rule, applied here)
+        # a landing zone (the text zone's rule, applied here)
         raise ValueError(
             "min_bytes/reject_unsigned/decode_rules set but rejected_table "
             "is None; the media quality gate needs a rejected_table to "
@@ -2341,16 +2309,17 @@ def media_ingest_apply(
     gate_on = rejected_table is not None and (
         min_bytes is not None or reject_unsigned or bool(decode_rules)
     )
-    if embed_index is not None and (
-        not wh.exists(f"{embed_index}.build_config")
-        or not wh.read(f"{embed_index}.build_config").collect()
-    ):
-        # validated at the front door, BEFORE any zone table is
-        # created: a missing index must leave no state behind
-        raise ValueError(
-            f"embed_index {embed_index!r} has no build_config row -- "
-            "build it with build_ivf_index first"
-        )
+    icfg_rows = None
+    if embed_index is not None:
+        if wh.exists(f"{embed_index}.build_config"):
+            icfg_rows = wh.read(f"{embed_index}.build_config").collect()
+        if not icfg_rows:
+            # validated at the front door, BEFORE any zone table is
+            # created: a missing index must leave no state behind
+            raise ValueError(
+                f"embed_index {embed_index!r} has no build_config row -- "
+                "build it with build_ivf_index first"
+            )
     id_col = "media_id"  # the MEDIA_SCHEMA key media_hash_rows emits
     phash_table = f"{corpus_table}.phash"
     chunks_table = f"{corpus_table}.chunks"
@@ -2360,15 +2329,15 @@ def media_ingest_apply(
         "max_frames": max_frames,
         "min_spread": min_spread,
     }
-    # Guard on ROW presence, not table existence (r13 ADVICE): the cfg
-    # table is created OUTSIDE the ingest transaction, so a crash
-    # between create_table and the txn commit leaves it existing but
-    # EMPTY. Keying the guard off exists() would then (a) IndexError
-    # every retry on collect()[0] and (b) never append the pin row
-    # again, permanently disabling the key-space guard. An empty cfg
-    # table instead means "first successful ingest still pending": the
-    # retry validates nothing (there is no committed ledger state to
-    # protect) and re-stages the pin row into the same transaction.
+    # Guard on ROW presence, not table existence: the cfg table is
+    # created OUTSIDE the ingest transaction, so a crash between
+    # create_table and the txn commit leaves it existing but EMPTY.
+    # Keying the guard off exists() would then (a) IndexError every
+    # retry on collect()[0] and (b) never append the pin row again,
+    # permanently disabling the key-space guard. An empty cfg table
+    # instead means "first successful ingest still pending": the retry
+    # validates nothing (there is no committed ledger state to protect)
+    # and re-stages the pin row into the same transaction.
     cfg_pinned = False
     if wh.exists(cfg_table):
         cfg_rows = wh.read(cfg_table).collect()
@@ -2528,51 +2497,18 @@ def media_ingest_apply(
     )
     canon_chunks = _media_chunk_keys(canon_hashes, n_chunks)
 
-    # sidecar partition buckets (opt-in): each probe collects its
-    # (batch-sized) bucket set and the scan partition-prunes to those
-    use_buckets = n_sidecar_parts is not None
-    if use_buckets:
-        chunk_bucket = F.pmod(
-            F.xxhash64(F.col("media_type"), F.col("pos"), F.col("val")),
-            F.lit(n_sidecar_parts),
-        )
-        id_bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sidecar_parts))
-
-    def _check_layout(table: str) -> None:
-        has = "__bucket" in wh.read(table).columns
-        if has != use_buckets:
-            raise ValueError(
-                f"{table} layout mismatch: table is "
-                f"{'bucketed' if has else 'unpartitioned'} but this call "
-                f"passed n_sidecar_parts={n_sidecar_parts}; the sidecar "
-                f"layout is fixed at first ingest"
-            )
-
     # -- cross-batch probe ------------------------------------------
+    sidecars = _Sidecars(
+        wh, n_sidecar_parts,
+        {chunks_table: ["media_type", "pos", "val"], phash_table: [id_col]},
+    )
     matched = None
     cross_dup_canon = None
     if wh.exists(chunks_table):
-        _check_layout(chunks_table)
         probe_keys = canon_chunks.select(
             "media_type", "pos", "val"
         ).distinct().localCheckpoint(eager=True)
-        ledger_chunks = wh.read(chunks_table)
-        if use_buckets:
-            probe_buckets = [
-                r["b"]
-                for r in probe_keys.select(chunk_bucket.alias("b"))
-                .distinct()
-                .collect()
-            ]
-            # prune only when the batch leaves most partitions untouched
-            if len(probe_buckets) <= n_sidecar_parts * 0.8:
-                ledger_chunks = ledger_chunks.filter(
-                    F.col("__bucket").isin(probe_buckets)
-                )
-            ledger_chunks = ledger_chunks.drop("__bucket")
-        hits = _ledger_hits(
-            ledger_chunks, probe_keys, ["media_type", "pos", "val"]
-        )
+        hits = sidecars.probe(chunks_table, probe_keys, ["media_type", "pos", "val"])
         from pyspark.sql import Window
 
         w = Window.partitionBy("media_type", "pos", "val").orderBy(
@@ -2600,23 +2536,11 @@ def media_ingest_apply(
             .localCheckpoint(eager=True)
         )
         cand_ids = cand.select(F.col("id_b").alias(id_col)).distinct()
-        if use_buckets:
+        if n_sidecar_parts is not None:
             cand_ids = cand_ids.localCheckpoint(
                 eager=True
             )  # read twice: bucket-set collect + the broadcast semi
-        _check_layout(phash_table)
-        ledger_hashes = wh.read(phash_table)
-        if use_buckets:
-            hash_buckets = [
-                r["b"]
-                for r in cand_ids.select(id_bucket.alias("b")).distinct().collect()
-            ]
-            if len(hash_buckets) <= n_sidecar_parts * 0.8:
-                ledger_hashes = ledger_hashes.filter(
-                    F.col("__bucket").isin(hash_buckets)
-                )
-            ledger_hashes = ledger_hashes.drop("__bucket")
-        corpus_hashes = _ledger_hits(ledger_hashes, cand_ids, [id_col])
+        corpus_hashes = sidecars.probe(phash_table, cand_ids, [id_col])
         a = canon_hashes.select(
             F.col(id_col).alias("id_a"), F.col("frame_no").alias("fa"),
             F.col("mhash").alias("h_a"),
@@ -2653,38 +2577,30 @@ def media_ingest_apply(
         else canon_ids.join(cross_dup_canon, id_col, "left_anti")
     )
     new_rows = gated.join(keep_canon, id_col, "left_semi").unionByName(unsigned)
-    new_hashes = canon_hashes.join(keep_canon, id_col, "left_semi")
-    new_chunks = canon_chunks.join(keep_canon, id_col, "left_semi")
-    if use_buckets:
-        # one batch-sized shuffle per sidecar so each append writes ONE
-        # file per touched bucket, not one per (input partition x
-        # bucket) -- the text zone's small-file-pressure rule
-        new_hashes = new_hashes.withColumn("__bucket", id_bucket).repartition(
-            "__bucket"
-        )
-        new_chunks = new_chunks.withColumn("__bucket", chunk_bucket).repartition(
-            "__bucket"
-        )
+    new_hashes = sidecars.staged(
+        phash_table, canon_hashes.join(keep_canon, id_col, "left_semi")
+    )
+    new_chunks = sidecars.staged(
+        chunks_table, canon_chunks.join(keep_canon, id_col, "left_semi")
+    )
     n_new = new_rows.count()
 
-    if not wh.exists(corpus_table):
-        wh.create_table(corpus_table, batch.schema)
-    sidecar_parts = ["__bucket"] if use_buckets else None
-    if not wh.exists(phash_table):
-        wh.create_table(phash_table, new_hashes.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(phash_table)
-    if not wh.exists(chunks_table):
-        wh.create_table(chunks_table, new_chunks.schema, partition_by=sidecar_parts)
-    else:
-        _check_layout(chunks_table)
-    extra = list(extra_appends or [])
+    # the phash sidecar is created first: the probe reads it whenever
+    # the chunks sidecar exists
+    creates = [
+        (corpus_table, batch.schema),
+        (phash_table, new_hashes.schema, sidecars.partition_by),
+        (chunks_table, new_chunks.schema, sidecars.partition_by),
+    ]
+    appends = [
+        (corpus_table, new_rows), (phash_table, new_hashes), (chunks_table, new_chunks)
+    ]
+    appends += extra_appends or []
     dup_links = _dup_links(matched, dup_members, id_col)
     if dupes_table is not None and dup_links is not None:
         dupes = batch.join(dup_links, id_col)
-        if not wh.exists(dupes_table):
-            wh.create_table(dupes_table, dupes.schema)
-        extra.append((dupes_table, dupes))
+        creates.append((dupes_table, dupes.schema))
+        appends.append((dupes_table, dupes))
     n_rejected = 0
     if gate_on:
         rejected = rejected_parts[0]
@@ -2695,10 +2611,9 @@ def media_ingest_apply(
         # created at FIRST gated ingest (not first rejection): a
         # monitoring consumer can always read it, and empty means
         # healthy -- never gate-off (the monitor-table precedent)
-        if not wh.exists(rejected_table):
-            wh.create_table(rejected_table, rejected.schema)
+        creates.append((rejected_table, rejected.schema))
         if n_rejected:
-            extra.append((rejected_table, rejected))
+            appends.append((rejected_table, rejected))
     if monitor_table is not None:
         # over-cap bucket audit rows (hamming_bucket_stats per family on
         # the SAME batch hash frame the pair joins read): corpus-wide
@@ -2708,40 +2623,31 @@ def media_ingest_apply(
         # frame is batch-sized; most batches emit ZERO rows. The table
         # is created at FIRST ingest (not first saturation), so a
         # monitoring consumer can always read it and empty means
-        # healthy, never monitoring-off (r13 review fix).
+        # healthy, never monitoring-off.
         monitor = (
             monitor_parts[0]
             .unionByName(monitor_parts[1])
             .unionByName(monitor_parts[2])
             .localCheckpoint(eager=True)
         )
-        if not wh.exists(monitor_table):
-            wh.create_table(monitor_table, monitor.schema)
+        creates.append((monitor_table, monitor.schema))
         if not monitor.isEmpty():
-            extra.append((monitor_table, monitor))
+            appends.append((monitor_table, monitor))
     if embed_index is not None:
-        # incremental cross-modal index maintenance (r15): the ADMITTED
-        # rows embed through the one encoder seam, assign against the
+        # incremental cross-modal index maintenance: the ADMITTED rows
+        # embed through the one encoder seam, assign against the
         # index's FROZEN codebook (append_to_ivf_index's no-retrain
         # posture -- periodic rebuilds own distribution drift), and the
         # assignment rows land in the SAME transaction as the corpus
         # append, so the searchable index and the corpus can never
-        # disagree about what was ingested. The index must be PRE-BUILT
-        # (build_ivf_index needs training vectors); a missing index
-        # fails loudly here, before any state changes. Geometry (dims /
-        # columns) comes from the index's own build_config -- never
-        # from caller knobs that could drift from the stored codebook.
+        # disagree about what was ingested. Geometry (dims / columns)
+        # comes from the index's own build_config -- never from caller
+        # knobs that could drift from the stored codebook.
         import json as _json
 
         from ..functions.multimodal import embed_media
         from ..functions.similarity import _assign_against, with_quantized
 
-        icfg_rows = wh.read(f"{embed_index}.build_config").collect()
-        if not icfg_rows:
-            raise ValueError(
-                f"embed_index {embed_index!r} has no build_config row -- "
-                "build it with build_ivf_index first"
-            )
         icfg = _json.loads(icfg_rows[0]["config"])
         vecs = (
             embed_media(new_rows, dims=icfg["dims"])
@@ -2760,29 +2666,21 @@ def media_ingest_apply(
         )
         # idempotent by id (append_to_ivf_index's global-probe rule):
         # a direct-apply retry appends nothing; stream replays already
-        # short-circuit on the batch log before reaching here
+        # short-circuit on the batch ledger before reaching here
         assigned = assigned.join(
             wh.read(f"{embed_index}.assignment").select(icfg["id_col"]),
             icfg["id_col"],
             "left_anti",
         ).localCheckpoint(eager=True)
         if not assigned.isEmpty():
-            extra.append((f"{embed_index}.assignment", assigned))
+            appends.append((f"{embed_index}.assignment", assigned))
     if not cfg_pinned:
         cfg_df = wh.spark.createDataFrame(
             [tuple(cfg.values())], schema=", ".join(f"{k} int" for k in cfg)
         )
-        if not wh.exists(cfg_table):
-            wh.create_table(cfg_table, cfg_df.schema)
-        extra.append((cfg_table, cfg_df))
-    with wh.transaction(
-        [corpus_table, phash_table, chunks_table, *[t for t, _ in extra]]
-    ) as txn:
-        txn.append(corpus_table, new_rows)
-        txn.append(phash_table, new_hashes)
-        txn.append(chunks_table, new_chunks)
-        for t, df in extra:
-            txn.append(t, df)
+        creates.append((cfg_table, cfg_df.schema))
+        appends.append((cfg_table, cfg_df))
+    _land(wh, appends, creates)
     return {
         "n_batch": n_batch,
         "n_unsigned": n_unsigned,
@@ -2890,64 +2788,31 @@ def media_ingest_stream(
     ndv_cols: list[str] | None = None,
     **apply_kwargs,
 ):
-    """Streaming media landing zone: a parquet-file front door (media
-    batches arrive as files of MEDIA_SCHEMA rows -- binary payloads
-    don't ride JSONL) composed with ``media_ingest_apply``, so a
-    re-upload of yesterday's image/audio/video -- byte-identical OR
-    re-encoded within the perceptual-hash tolerance -- never enters the
-    corpus twice. Same transactional spine as the text zones: per
-    batch, surviving rows + both hash-ledger sidecars + the replay
-    guard land in ONE warehouse transaction (replayed batches are
-    exact no-ops); the optional maintenance cadence compacts the
-    corpus and both sidecars post-commit."""
-    batch_log = f"{corpus_table}.ingest_log"
-    maint_state = {"since": 0}
+    """Streaming media landing zone: the ``media_ingest_apply`` preset
+    on the landing-zone engine (``_zone_stream``) behind a parquet-file
+    front door (media batches arrive as files of MEDIA_SCHEMA rows --
+    binary payloads don't ride JSONL), so a re-upload of yesterday's
+    image/audio/video -- byte-identical OR re-encoded within the
+    perceptual-hash tolerance -- never enters the corpus twice. Per
+    batch, surviving rows, both hash-ledger sidecars and the batch id
+    land in ONE warehouse transaction; the optional maintenance cadence
+    compacts the corpus and both sidecars post-commit, and ``ndv_cols``
+    maintains the ingest-offered NDV ledger post-commit."""
 
-    def _maybe_maintain():
-        if maintenance_every <= 0:
-            return
-        maint_state["since"] += 1
-        if maint_state["since"] < maintenance_every:
-            return
-        maint_state["since"] = 0
-        for t in (corpus_table, f"{corpus_table}.phash", f"{corpus_table}.chunks"):
-            wh.maybe_compact(t, **(maintenance_kwargs or {}))
-
-    def sink(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        if not wh.exists(batch_log):
-            wh.create_table(
-                batch_log, T.StructType([T.StructField("batch_id", T.LongType())])
-            )
-        if wh.read(batch_log).filter(F.col("batch_id") == batch_id).count() > 0:
-            return
-        typed = batch_df.localCheckpoint()
+    def apply(typed, extra_appends):
         media_ingest_apply(
             wh, corpus_table, typed,
             dupes_table=dupes_table,
-            extra_appends=[
-                (
-                    batch_log,
-                    spark.createDataFrame([(int(batch_id),)], "batch_id bigint"),
-                ),
-            ],
+            extra_appends=extra_appends,
             **apply_kwargs,
         )
-        if ndv_cols:
-            # ingest-offered NDV ledger, post-commit -- same grain and
-            # single-writer crash argument as the text zones
-            from ..functions.sketch import update_ndv_sketches
 
-            update_ndv_sketches(wh, f"{corpus_table}.ndv", typed, ndv_cols)
-        _maybe_maintain()
-
-    return (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    return _zone_stream(
+        spark, wh, source_dir, checkpoint_dir,
+        _ledgered(wh, corpus_table, apply),
+        parquet_schema=schema,
+        after_commit=_ndv_hook(wh, corpus_table, ndv_cols),
+        maintain=(corpus_table, f"{corpus_table}.phash", f"{corpus_table}.chunks"),
+        maintenance_every=maintenance_every,
+        maintenance_kwargs=maintenance_kwargs,
     )

@@ -514,9 +514,10 @@ class Warehouse:
         # Zero-partition empty frame: createDataFrame([], schema)
         # parallelizes over defaultParallelism, so the metadata-only
         # CREATE was a 32-empty-task write job (~0.5s each; four of
-        # them per fresh index warehouse). An emptyRDD writes just the
-        # directory + _SUCCESS with no tasks at all (guide section 5:
-        # metadata work should not fan out).
+        # them per fresh index warehouse). An emptyRDD write still runs
+        # one commit job, but with one (or zero) tasks instead of
+        # defaultParallelism empty tasks (guide section 5: metadata work
+        # should not fan out).
         empty = self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
         writer = empty.write.mode("overwrite")
         if partition_by:

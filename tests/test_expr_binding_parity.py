@@ -8,6 +8,7 @@ the outputs bit-for-bit equal, so any drift in operation order (and
 therefore IEEE result bits) fails loudly."""
 
 import os
+import struct
 
 from pyspark.sql import functions as F
 
@@ -74,9 +75,16 @@ def _old_shape_embedding(docs, dims, idf_by_dim, id_col="doc_id"):
 
 def _bits(rows):
     """Collapse collected rows to a comparable structure where doubles
-    compare by exact bit pattern (== on Python floats is bit-exact for
-    non-NaN, and these pipelines never emit NaN)."""
-    return sorted(tuple(r) for r in ((r[0], tuple(r[1]), r[2]) for r in rows))
+    compare by exact bit pattern: each double is packed to its 8
+    little-endian IEEE-754 bytes, so -0.0 and 0.0 differ (Python ``==``
+    would call them equal)."""
+
+    def d(x):
+        return None if x is None else struct.pack("<d", x)
+
+    return sorted(
+        (r[0], tuple(d(x) for x in r[1]), r[2]) for r in rows
+    )
 
 
 def test_embedding_norm_binding_bit_identical(spark):

@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -89,7 +90,7 @@ def child(probe_dir: str) -> None:
             fn(spark, probe_dir).write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
         times.sort()
-        out[name] = {"median": times[len(times) // 2], "reps": times}
+        out[name] = {"median": statistics.median(times), "reps": times}
     print("CHILD_RESULT " + json.dumps({"cpus": int(cpus), "rows": out}))
     spark.stop()
 
@@ -113,6 +114,8 @@ def main() -> None:
                 None,
             )
             if line is None:
+                # keep the runs that did finish: print them before failing
+                print(json.dumps(results))
                 print(r.stdout[-3000:], file=sys.stderr)
                 print(r.stderr[-3000:], file=sys.stderr)
                 raise RuntimeError(f"child at {cpus} cores produced no result")
