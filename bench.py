@@ -27,40 +27,25 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
-    # DV pipeline
-    "hub_load_customer",
-    "sat_load_customer",
     "hub_load_lineitem_composite",
     "link_load_order_part_supplier",
     "status_source_column",
     "scd2_merge_state",
-    # analytical
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
     "top_orders_per_customer",
-    "events_hourly_rollup",
-    # training-data pipeline (registered as implemented)
     "dedup_exact_documents",
     "dedup_minhash_lsh_pairs",
     "dedup_embedding_cosine",
     "text_quality_scores",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    # round-4 operators (r4 VERDICT directive 3: correctness-green but
-    # previously perf-untracked)
     "scd2_partitioned_merge",
     "corpus_decontaminate",
     "source_profile_customer",
-    # round-5 operators
-    "events_asof_last_purchase",
     "pit_user_daily",
     "events_range_click_attribution",
     "documents_stratified_sample",
-    "events_salted_type_stats",
     "documents_chunked_windows",
-    "documents_keyword_tfidf",
-    # round-5 session additions (merge verbs, classic shapes, window)
     "dim_upsert_customer",
     "gdpr_delete_customer",
     "q18_large_volume_orders",
@@ -68,135 +53,49 @@ HEADLINE = [
     "documents_pii_redaction",
     "documents_leakfree_split",
     "documents_boilerplate_removal",
-    # round-6 additions (r5 VERDICT directive 7: every operator family
-    # gets a perf regression canary)
     "time_travel_versions",
     "schema_evolution_customer",
-    "events_range_same_user_attribution",  # stream-stream attribution batch twin
-    "events_value_quantile_sketch",  # r7: now times sketch + bounds VERIFIER
-    # (the exact-rank check), not the bare sketch -- same definition
-    # round-over-round from r7 on, regression canary intact
-    "documents_pii_scan",
-    "dedup_clusters",
-    "text_unigram_logprob",
-    # round-7 addition: persisted-IVF-index external search (index build
-    # itself is charged to the session cold pass, like _ivf_index)
+    "events_value_quantile_sketch",
     "ann_ivf_index_search",
-    # round-7 registrations (driver rows due r8; tracked here from day 1
-    # so r8 has a builder baseline to compare against)
-    "documents_pack_sequences",
     "text_bigram_logprob",
     "documents_duplicated_spans",
-    # round-8 registrations (tracked from day 1): PQ recall-ladder
-    # bounds row (trains/encodes + three ladder legs incl. the
-    # verifier-only full-shortlist rerank) and the JSONL landing-zone
-    # round-trip (write-once fixture in the cold pass; measured reps
-    # time read.text + from_json split only)
     "ann_pq_recall_bounds",
     "documents_jsonl_roundtrip",
-    # round-8 mid-order registrations (first driver rows due r9):
-    # model-based data selection, then the exact-substring scrub (the
-    # removal action on the duplicated_span_stats signal)
     "documents_dsir_weights",
     "documents_quality_linear",
-    "documents_span_scrub",
     "dedup_semantic_keep",
-    # round-8 session-2 mid-order registrations (first driver rows due
-    # r9): Gopher rule filter (map-only codegen scan), broadcast-Bloom
-    # decontamination (the zero-join scale path; bitset build charged
-    # to the measured passes -- it IS the operator), exact equi-width
-    # histogram (ANALYZE-pass companion to the sketch family)
     "documents_gopher_rules",
     "documents_bloom_decontaminate",
     "events_value_histogram",
     "orders_constraint_audit",
-    # round-9 mid-order registrations (first driver rows due r10;
-    # tracked from day 1 per the standing practice): pinned-merge BPE
-    # apply, shard-plan map, snapshot diff over the template-scratch
-    # warehouse pair, one-pass grouped correlation matrix, hashed
-    # TF-IDF embedding (exploded integer emit)
     "documents_bpe_token_counts",
     "documents_shard_plan",
     "warehouse_snapshot_diff",
     "events_correlation_matrix",
     "documents_hashed_embedding",
     "documents_source_overlap",
-    # round-10 mid-order registrations (first driver rows due r11;
-    # tracked from day 1 per the standing practice): quality-binned
-    # curriculum sampling (zero-shuffle pushed filter), tokenizer
-    # fertility audit (one Arrow pass + bounded groupBy), inference
-    # batch-plan audit (salted per-band window + batch-bounded agg),
-    # corpus data card (one conditional-agg pass)
-    "quality_binned_sample",
     "tokenizer_stats",
     "inference_batch_plan_stats",
-    "corpus_datacard",
-    # r10 session op registered mid-order same round: MOSS winnowing
-    # fingerprints (gram explode + one windowed MIN, doc-local)
     "documents_winnow_fingerprints",
-    # round-11 mid-order registrations (first driver rows due r12;
-    # tracked from day 1 per the standing practice): SFT chat render +
-    # span replay (one conversation-key shuffle), eval EM/F1 scoring
-    # (two token-count shuffles + example-key join), datacard drift
-    # (two conditional-agg passes + group-sized outer join), DoReMi
-    # reweighting (domain-grain, window over tens of rows)
     "sft_render_chat_spans",
     "eval_scores_report",
     "corpus_datacard_drift",
     "doremi_domain_weights",
-    # round-12 mid-order registrations (first driver rows due r13;
-    # tracked from day 1 per the standing practice): NDV ledger
-    # bounds row (split/sketch/merge + the exact-distinct verifier),
-    # classifier training contract (4 full-batch iterations + the
-    # token-stream integer verifier), semantic decontamination (chunk
-    # index build charged to the session cold pass like _ivf_wh;
-    # measured reps time embed + every-cell probe), preference-pair
-    # assembly (all_pairs + cap), winnowing near-dup composition
-    # (fingerprints -> capped bucket join -> exact Jaccard), and
-    # perceptual-hash image near-dup (Arrow dhash pass + pigeonhole)
     "documents_ndv_ledger",
     "classifier_train_contract",
     "semantic_decontaminate_flags",
     "preference_pairs_orders",
     "winnow_near_dup_pairs_docs",
     "image_near_dup_pairs_docs",
-    # round-13 mid-order registrations (first driver rows due r14;
-    # tracked from day 1 per the standing practice): audio envelope
-    # fingerprint near-dup (one Arrow envelope pass + the shared capped
-    # pigeonhole join) and frame-grain video near-dup (frame explode +
-    # packed-key pigeonhole join + the shared-frames evidence rollup)
     "audio_near_dup_pairs_docs",
     "video_near_dup_pairs_docs",
-    # r13 session op registered mid-order same round: the media
-    # landing zone's unified hash kernel (ONE Arrow pass dispatching
-    # per media_type, map-only -- the phash sidecar surface; the
-    # registered ORACLE replays it as the three per-family byte
-    # replays union'd, but the Spark side is the one-pass kernel)
     "media_hash_rows_docs",
-    # round-14 mid-order registrations (first driver rows due r15;
-    # tracked from day 1 per the standing practice): media-text pair
-    # assembly (full perceptual pair posture -> CC -> canonical
-    # re-point -> caption equi-join -> bipartite pair-group CC) and
-    # the per-type media datacard (one conditional-agg pass)
     "media_text_pairs_docs",
     "media_datacard_docs",
-    # round-15 mid-order registrations (first driver rows due r16;
-    # tracked from day 1 per the standing practice): interleaved
-    # multimodal packing (decode_media cost pass + the pack_sequences
-    # bucket construction + one bounded per-example item window),
-    # media datacard drift (two conditional-agg passes + a 3-row outer
-    # join), and the decode-rule verdict kernel (one Arrow decode pass
-    # + a JVM-side when-chain -- the zone gate's shared kernel)
     "documents_pack_multimodal",
     "media_datacard_drift_docs",
     "media_decode_rules_docs",
-    # r15 session op registered mid-order same round: the packing
-    # WRITER's token stream (the planner's bounded windows + ONE
-    # posexplode; row count = corpus token count, forced by count())
     "documents_packed_token_stream",
-    # r15 session op registered mid-order same round: modality-budgeted
-    # sampling (the token_budget_sample bucket construction + one
-    # doc-keyed media-bill combine off the decode_media cost pass)
     "documents_multimodal_budget_sample",
 ]
 
@@ -215,7 +114,7 @@ def main() -> None:
     from pg_auto_dw_spark.session import get_spark
 
     spark = get_spark("bench")
-    qmap = queries_catalog.bench_queries()
+    qmap = queries_catalog.queries()
     # JVM/codegen warmup so the first measured query isn't charged for it
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     qmap["q1_pricing_summary"](spark, sf_dir).count()
@@ -369,15 +268,7 @@ def main() -> None:
     reps: dict[str, list[float]] = {}
     stats: dict[str, str] = {}  # which estimator produced each number
     jobs: dict[str, int] = {}
-    # r13 VERDICT directive 7: rows retired from the correctness
-    # rotation leave the headline suite too (13 rows, ~5.5s at r13 --
-    # offsetting the three new day-1 media rows so bench wall stays
-    # flat as registrations accumulate). The builders stay reachable
-    # through bench_queries() for ad-hoc retiming; HEADLINE keeps the
-    # full historical list so round-over-round artifact diffs can
-    # still name every row that ever ran.
-    headline = [n for n in HEADLINE if n not in queries_catalog._RETIRED]
-    for name in headline:
+    for name in HEADLINE:
         fn = qmap.get(name)
         if fn is None:
             continue
@@ -494,7 +385,7 @@ def main() -> None:
         import hashlib
 
         compact.pop("queries", None)
-        order = [n for n in headline if n in timings]
+        order = [n for n in HEADLINE if n in timings]
         compact["q"] = [
             -1 if timings[n] < 0 else int(round(timings[n] * 100)) for n in order
         ]

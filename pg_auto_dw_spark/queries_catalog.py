@@ -34,309 +34,22 @@ def register(name: str, sql: str | None):
     return deco
 
 
-# The driver verifies queries in dict order and may cap how many it
-# runs (r2-r5 each ran 50; later registrations got no CORRECTNESS row).
-# Rotation policy: no query goes two rounds unverified; with a 50-slot
-# cap and <=100 ROTATION rows (mid-order registrations join the cycle
-# at their first driver round) the rotation is a strict two-round
-# cycle -- _PRIORITY is exactly the set that RESTED last round (plus
-# any query added or reshaped this round), _DEPRIORITIZED is the set
-# verified last round. These invariants are now EXECUTABLE:
-# tests/test_catalog_invariants.py fails the build on any arithmetic
-# slip (r11 lesson -- see the CORRECTION below).
-# Round 11 state (executed per the r10 VERDICT directive 2 / the r10
-# catalog note, with ONE arithmetic correction): _PRIORITY = the 50
-# rows that rested in r10 MINUS five retirements drawn from that
-# resting set PLUS the 5 r10 mid-order registrations taking their
-# first driver rows (quality_binned_sample, tokenizer_stats,
-# inference_batch_plan_stats, corpus_datacard,
-# documents_winnow_fingerprints). Exactly 50. _DEPRIORITIZED = the 50
-# rows verified in r10 (CORRECTNESS_r10: 50/50 green) minus the
-# retired documents_pii_scan = 49. Catalog: 99 oracle-rotation rows =
-# 50 + 49, strict two-round cycle, no query more than one round
-# stale, plus the 4 MID-order r12-candidate registrations below
-# (first driver rows due r12).
-# CORRECTION vs the r10 note: it designated documents_pii_scan as one
-# of five RESTING retirements, but pii_scan actually RAN (green) in
-# r10 -- it sat in r10's _PRIORITY, not its resting set. Retiring it
-# therefore frees an r12 slot, not an r11 one, and only FOUR
-# designated retirements came out of the resting 50; a sixth
-# retirement (documents_keyword_tfidf, from the resting set) restores
-# the exactly-50 arithmetic. All six rationales:
-# Retired r10 (the five the r9 note designated; all were RESTING in
-# r9, so nothing loses an in-window row; coverage held elsewhere;
-# builders stay benched via _RETIRED/bench_queries):
-#   text_token_counts      (proxy-count math embedded in the verified
-#                           corpus_token_budget_sample and
-#                           documents_pack_sequences plans; exact
-#                           counts have their own driver row via
-#                           documents_bpe_token_counts)
-#   text_fingerprints      (sha256 key held by dedup_exact_documents +
-#                           auto_dw_hash_parity; md5-prefix integer
-#                           math held by documents_shard_plan and the
-#                           minhash/simhash oracles)
-#   ann_cosine_topk        (the brute-force kernel is the verified
-#                           ground truth inside ann_pq_recall_bounds
-#                           and the recall harness; the filtered twin
-#                           ann_cosine_topk_filtered keeps the row
-#                           shape under driver verification)
-#   multimodal_frame_samples (Arrow mapInPandas plumbing + fake-codec
-#                           contract held by multimodal_decode_stats +
-#                           test_multimodal_codec.py -- the holder
-#                           argument that retired multimodal_resize)
-#   customer_order_coalesce_outer (J1/P5 held by
-#                           orders_without_lineitems_anti + the status
-#                           engine rows; coalesce projection appears
-#                           in every loader oracle)
-# MID-order r10 registrations (the first four are the r9 VERDICT
-# directive-6 designations, the fifth is an r10 session op; each
-# locally verified via tools/check_oracle.py at sf0.01 AND sf0.001 +
-# a clean hard-error dtype_audit before registration; taking their
-# first driver rows in r11 at the head of _PRIORITY):
-#   corpus_datacard          (integer/sha2-distinct surface only; the
-#                            two percentile_approx fields excluded)
-#   tokenizer_stats          (pinned literal merges, exact integer
-#                            fixed-point ratios)
-#   inference_batch_plan_stats (md5 order + integer band/batch math)
-#   quality_binned_sample    (multiplicative-hash rank, cross-engine
-#                            exact like the sampler family)
-#   documents_winnow_fingerprints (md5-prefix hashes + the 2^20
-#                            min-key packing + window MIN -- fully
-#                            integer; hypothesis-pinned vs a Python
-#                            reference winnower)
-# Retired r11 (executed per the r10 note; rationales):
-#   hub_load_customer      (S7/J5/A4 anti-join+hash load shape held by
-#                           hub_load_lineitem_composite -- same loader
-#                           code path with composite keys on top)
-#   sat_load_customer      (satellite hashdiff/anti-join shape held by
-#                           sat_load_lineitem_composite; both stay on
-#                           the bench watch list regardless)
-#   lineitem_stats_by_flag (multi-key GROUP BY agg family A6 held by
-#                           q1_pricing_summary on the same table and
-#                           keys)
-#   events_asof_last_purchase (union+carry-forward as-of kernel is
-#                           verbatim inside the verified pit_user_daily
-#                           composition; range family stays via
-#                           events_range_click_attribution)
-#   documents_pii_scan     (the conditional-agg profile shape is held
-#                           by source_profile_customer + the datacard
-#                           row; the regex bank itself stays driver-
-#                           verified through documents_pii_redaction,
-#                           which applies the SAME patterns. Was green
-#                           in r10, NOT resting -- see the CORRECTION
-#                           above)
-#   documents_keyword_tfidf (the sixth, restoring the exactly-50
-#                           arithmetic: its smoothed-idf kernel --
-#                           log((N+1)/(df+1)) over the exploded token
-#                           frame -- is driver-verified through
-#                           documents_hashed_embedding (green r10,
-#                           same idf math feeding the hashed dims);
-#                           the explode-tokenize shape is held by
-#                           part_name_tokens_explode and
-#                           documents_bpe_token_counts, and the
-#                           per-key top-n window by
-#                           top_orders_per_customer (all green r10))
-# MID-order r11 registrations at positions 51-54, outside the driver
-# cap (the r10 VERDICT directive-4 designations; each locally
-# verified via tools/check_oracle.py at sf0.01 AND sf0.001 + a clean
-# hard-error dtype_audit before registration; first driver rows due
-# r12): sft_render_chat_spans (pure string/integer -- render + the
-# running-offset replay + trainable_char_stats composition),
-# eval_scores_report (integer EM/common/token counts, fixed-point
-# f1), corpus_datacard_drift (integer deltas + boolean flag over the
-# corpus_datacard surface), doremi_domain_weights (scaled-BIGINT
-# emit; see its docstring for the cross-engine boundary argument).
-# Round 12 state (EXECUTED per the r11 note and the r11 VERDICT
-# directive 1): _PRIORITY = the 49 rows that rested in r11 MINUS the
-# three designated retirements below PLUS the 4 r11 mid-order
-# registrations taking their first driver rows (sft_render_chat_spans,
-# eval_scores_report, corpus_datacard_drift, doremi_domain_weights).
-# Exactly 50. _DEPRIORITIZED = the 50 rows verified in r11
-# (CORRECTNESS_r11: 50/50 green). Invariants re-checked via
-# tests/test_catalog_invariants.py before commit.
-# MID-order r12 registrations (r11 VERDICT directives 2-3; each
-# check_oracle-green at sf0.001 AND sf0.01 AND sf0.1 + clean
-# hard-error dtype_audit before registration; first driver rows due
-# r13, matched 1:1 by _NEXT_RETIREMENT_CANDIDATES below):
-#   documents_ndv_ledger     (HLL split/merge/estimate under the
-#                            bounds-check contract -- the
-#                            events_value_quantile_sketch precedent)
-#   classifier_train_contract (training-population/feature-space
-#                            integers + convergence booleans; EXACT
-#                            WEIGHT PARITY deliberately excluded --
-#                            the gradient is an unordered double sum
-#                            through a nonlinear iteration, the
-#                            order-dependent-float class the r11
-#                            cross-SF sweep eliminated; exact values
-#                            stay pinned at 1e-9 in pytest)
-#   semantic_decontaminate_flags (every-cell-probed = exact
-#                            brute-force flag set; quantized-int64
-#                            cosine, the ANN family contract)
-#   preference_pairs_orders  (all_pairs + cap replay; parquet doubles
-#                            are bit-identical both engines so gaps
-#                            and the cap's total order are exact)
-#   winnow_near_dup_pairs_docs (fingerprint replay + capped bucket
-#                            join + exact 5-shingle Jaccard)
-#   image_near_dup_pairs_docs (perceptual dHash over the stub codec +
-#                            the shared capped pigeonhole join --
-#                            hex-slice byte replay, all integers)
-# Retired r12 (the three the r11 note designated as candidates; final
-# call CONFIRMED -- all three were RESTING in r11, so nothing loses an
-# in-window row; coverage held elsewhere; builders stay benched):
-#   ann_ivf_topk           (single-probe is the n_probes=1 special
-#                           case of the verified
-#                           ann_ivf_multiprobe_topk kernel -- same
-#                           codebook broadcast, same cell shuffle;
-#                           the persisted-index twin
-#                           ann_ivf_index_search keeps the frozen-
-#                           geometry path under driver verification)
-#   text_unigram_logprob   (same add-k-smoothed explode->count->log10
-#                           LM kernel as the verified
-#                           text_bigram_logprob, which embeds the
-#                           unigram frame as its conditioning
-#                           denominator; word-grain token math also
-#                           held by text_word_entropy)
-#   dedup_clusters         (the connected-components surface rides the
-#                           verified dedup_keep_best_documents row,
-#                           which drives the SAME per-session cluster
-#                           assignment through its keep-rule; the
-#                           candidate side stays via
-#                           dedup_minhash_lsh_pairs)
-# r13 oracle CANDIDATE (new r11 session op, pytest-verified):
-# winnow_near_dup_pairs -- fully SQL-expressible (the fingerprint
-# oracle exists; the overlap-count bucket join and the exact shingle
-# Jaccard both have DuckDB replays in dedup_ngram_jaccard /
-# documents_winnow_fingerprints); needs its own retire-and-replace
-# designation when registered.
-# Retired r9 (all were RESTING in r8; coverage held elsewhere;
-# events_interarrival_stats' LAG(ts) math is held by events_sessionize
-# + the A1/A6 shapes of events_hourly_rollup/events_salted_type_stats):
-#   customer_balance_ranks   (idiomatic window family held by
-#                             status_window_flags -- the SURVEY W1/W2
-#                             row -- plus sat_current_view)
-#   events_range_same_user_attribution (binned range-join family held
-#                             by events_range_click_attribution; the
-#                             stream-stream twin stays pytest-covered;
-#                             row stays in bench HEADLINE as a canary
-#                             via _RETIRED/bench_queries -- bench and
-#                             correctness-slot membership independent)
-#   documents_sample_fixed_n (per-stratum exact-count math embedded in
-#                             documents_mixture_sample's verified
-#                             plan; stratified_sample row stays)
-#   dedup_ngram_containment  (verifier-after-candidates n-gram overlap
-#                             family held by dedup_ngram_jaccard +
-#                             corpus_contamination_pairs)
-#   events_distinct_users_by_type (exact distinct held by
-#                             events_salted_type_stats' skew-safe
-#                             distinct twin + events_heavy_hitter_users)
-#   multimodal_resize        (Arrow mapInPandas plumbing + deterministic
-#                             fake-codec contract held by
-#                             multimodal_features -- same kernel shape,
-#                             same decode seam -- plus the codec
-#                             contract tests in test_multimodal_codec.py)
-# Retired builders stay importable and benchable (_RETIRED +
-# bench_queries()) but are excluded from queries()/oracle_sql().
-# Pre-registration gate (r8 VERDICT directive 2): a clean
-# `python tools/dtype_audit.py` hard-error run (0 ERRORs; int128/
-# decimal128 and type-class mismatches are hard errors) is MANDATORY
-# before any oracle enters this file.
-# Resting set snapshot:
-# python -c "from pg_auto_dw_spark import queries_catalog as q; \
-#            print(list(q.queries())[50:])"
-_RETIRED = {
-    # r9 retirements
-    "customer_balance_ranks",
-    "events_range_same_user_attribution",
-    "documents_sample_fixed_n",
-    "dedup_ngram_containment",
-    "events_distinct_users_by_type",
-    "multimodal_resize",
-    "events_interarrival_stats",
-    # r10 retirements (the five the r9 note designated; rationales in
-    # the note above)
-    "text_token_counts",
-    "text_fingerprints",
-    "ann_cosine_topk",
-    "multimodal_frame_samples",
-    "customer_order_coalesce_outer",
-    # r11 retirements (the r10 note's five, plus documents_keyword_tfidf
-    # -- see the rotation note above for the arithmetic correction and
-    # all six rationales)
-    "hub_load_customer",
-    "sat_load_customer",
-    "lineitem_stats_by_flag",
-    "events_asof_last_purchase",
-    "documents_pii_scan",
-    "documents_keyword_tfidf",
-    # r12 retirements (the three the r11 note designated; rationales
-    # in the rotation note above)
-    "ann_ivf_topk",
-    "text_unigram_logprob",
-    "dedup_clusters",
-    # r13 retirements (the six the r12 note designated; rationales in
-    # the rotation note above)
-    "quality_binned_sample",
-    "documents_span_scrub",
-    "events_value_winsorized_stats",
-    "events_click_purchase_funnel",
-    "sat_current_view",
-    "q13_order_count_distribution",
-    # r14 retirements (the three the r13 note designated, final call
-    # confirmed; rationales in the r13 candidates note below:
-    # multimodal_decode_stats's stub-codec seam stays exercised by
-    # multimodal_features + the three media rows; events_hourly_rollup
-    # is an exact subset of events_rollup_hierarchy's leaf level;
-    # dedup_simhash_hamming's pigeonhole generator is the shared
-    # dedup.hamming_chunk_pairs, driver-verified through the image /
-    # audio / video rows)
-    "multimodal_decode_stats",
-    "events_hourly_rollup",
-    "dedup_simhash_hamming",
-    # r15 retirements (the two the r14 note designated, final call
-    # confirmed; rationales in the r15 candidates note below:
-    # corpus_datacard's aggregate surface is an exact subset of
-    # corpus_datacard_drift, which computes a datacard per snapshot
-    # before diffing; events_salted_type_stats' salting family stays
-    # driver-covered via events_customer_salted_join -- the salted
-    # JOIN, the harder shape -- plus events_heavy_hitter_users)
-    "corpus_datacard",
-    "events_salted_type_stats",
-    # r16 retirements (the five the r15 note designated -- matching
-    # the five r15 mid-order registrations so the exactly-50
-    # arithmetic closes -- final call confirmed; coverage rationales
-    # in the r15 candidates note below: corpus_contamination_pairs is
-    # replayed inside corpus_decontaminate (in this round's
-    # _PRIORITY); ann_lsh_bucket_topk's band-join kernel stays via
-    # dedup_minhash_lsh_pairs (also _PRIORITY); the INSERT..SELECT
-    # anti-join sink keeps hub_load_lineitem_composite +
-    # link_load_order_part_supplier on the same composite grain;
-    # documents_pack_sequences' placement CTE is replayed whole by
-    # documents_packed_token_stream; corpus_token_budget_sample's
-    # bucket-greedy prefix is replayed whole by
-    # documents_multimodal_budget_sample)
-    "corpus_contamination_pairs",
-    "ann_lsh_bucket_topk",
-    "sat_load_lineitem_composite",
-    "documents_pack_sequences",
-    "corpus_token_budget_sample",
-}
-# Round 16 state (EXECUTED per the r15 note and the r15 VERDICT
-# directive 8): _PRIORITY = the 50 rows that rested in r15 MINUS the
-# five designated retirements (all five confirmed RESTING in r15,
-# coverage rationales above) PLUS the five r15 mid-order
-# registrations taking their first driver rows. Exactly 50.
-# _DEPRIORITIZED = the 50 rows verified in r15 (CORRECTNESS_r15:
-# 50/50 green). Invariants re-checked via
-# tests/test_catalog_invariants.py before commit.
+# The driver verifies the first 50 rows of queries() against their
+# DuckDB oracles. _PRIORITY (exactly 50 rows) sets that head,
+# _DEPRIORITIZED the tail, and registrations in neither list sit
+# between them in registration order; _NEXT_RETIREMENT_CANDIDATES names
+# the resting rows a new mid-order registration would displace.
+# tests/test_catalog_invariants.py checks this shape. Retiring a row
+# means deleting its builder and oracle in the same commit. A clean
+# `python tools/dtype_audit.py` run is required before an oracle enters
+# this file. The rotation history lives in git and in the VERDICT.md /
+# CORRECTNESS_r*.json records.
 _PRIORITY = [
-    # r15 mid-order registrations: first driver rows (r15 VERDICT #8)
     "documents_pack_multimodal",
     "media_datacard_drift_docs",
     "media_decode_rules_docs",
     "documents_packed_token_stream",
     "documents_multimodal_budget_sample",
-    # the 45 rows that rested in r15 (50 minus the five designated
-    # retirements executed this round -- see the r16 rotation note)
     "media_hash_rows_docs",
     "audio_near_dup_pairs_docs",
     "video_near_dup_pairs_docs",
@@ -384,14 +97,8 @@ _PRIORITY = [
     "dedup_keep_best_documents",
 ]
 _DEPRIORITIZED = [
-    # the 50 rows verified in r15 (CORRECTNESS_r15: 50/50 green --
-    # this was r15's _PRIORITY, resting this round per the two-round
-    # rotation)
-    # r14 mid-order registrations: first driver rows (r14 VERDICT #1)
     "media_text_pairs_docs",
     "media_datacard_docs",
-    # the 48 rows that rested in r14 (50 minus the two designated
-    # retirements executed in r15 -- see the r15 rotation note)
     "documents_ndv_ledger",
     "classifier_train_contract",
     "semantic_decontaminate_flags",
@@ -441,239 +148,10 @@ _DEPRIORITIZED = [
     "status_source_column",
     "tracking_union_except",
 ]
-# Designated retirement CANDIDATES for the NEXT rotation (final call
-# at r13; every mid-order registration must be matched by one so the
-# exactly-50 arithmetic closes -- test_catalog_invariants.py enforces
-# len(mid) <= len(this list) and membership in the resting set). All
-# five are in today's resting set (_DEPRIORITIZED); coverage held
-# elsewhere:
-#   quality_binned_sample    (multiplicative-hash rank sampler family
-#                            held by documents_stratified_sample +
-#                            documents_mixture_sample -- same rank
-#                            kernel, exact per-stratum rates; the
-#                            quality-bin input shape rides the
-#                            verified documents_quality_linear score)
-#   documents_span_scrub     (the gram-instance frame + duplicated-
-#                            span flags are documents_duplicated_spans
-#                            verbatim -- scrub is its filter
-#                            composition; that row stays in rotation)
-#   events_value_winsorized_stats (single-pass value-scan clamp aggs
-#                            held by events_value_histogram -- same
-#                            fixed-bin scan shape -- plus the
-#                            quantile-bound contract row
-#                            events_value_quantile_sketch)
-#   events_click_purchase_funnel (conditional-agg pivot on the same
-#                            table and keys held by events_type_pivot;
-#                            the event-ordering family stays via
-#                            events_sessionize)
-#   sat_current_view         (per-key latest-window shape held by
-#                            latest_transformer_responses +
-#                            status_window_flags -- the W1/W2 rows;
-#                            the satellite surface itself stays
-#                            driver-verified via
-#                            dv_round_trip_customer and
-#                            sat_load_lineitem_composite)
-# (The r12 session op image_near_dup_pairs was REGISTERED same-round
-# as image_near_dup_pairs_docs once its hex-slice byte replay proved
-# exact -- see the registration at the end of this file -- so it takes
-# the sixth candidate slot below instead of an r13 candidacy note.)
-#   q13_order_count_distribution (sixth candidate, matching the sixth
-#                            mid-order registration: the LEFT-join
-#                            count-distribution shape is held by
-#                            q18_large_volume_orders +
-#                            q22_inactive_rich_customers (join-back /
-#                            anti family) and J1 stays driver-covered
-#                            via the status rows)
-# Round 13 state (EXECUTED per the r12 note and the r12 VERDICT
-# directive 1): _PRIORITY = the 50 rows that rested in r12 MINUS the
-# six designated retirements (quality_binned_sample,
-# documents_span_scrub, events_value_winsorized_stats,
-# events_click_purchase_funnel, sat_current_view,
-# q13_order_count_distribution -- all six confirmed RESTING in r12,
-# coverage rationales in the r12 note above) PLUS the six r12
-# mid-order registrations taking their first driver rows
-# (documents_ndv_ledger, classifier_train_contract,
-# semantic_decontaminate_flags, preference_pairs_orders,
-# winnow_near_dup_pairs_docs, image_near_dup_pairs_docs). Exactly 50.
-# _DEPRIORITIZED = the 50 rows verified in r12 (CORRECTNESS_r12:
-# 50/50 green). Invariants re-checked via
-# tests/test_catalog_invariants.py before commit.
-# Designated retirement CANDIDATES for the NEXT rotation (final call
-# at r14; every r13 mid-order registration must be matched by one so
-# the exactly-50 arithmetic closes). All three are in today's resting
-# set (_DEPRIORITIZED); coverage held elsewhere:
-#   multimodal_decode_stats  (Arrow decode-stats kernel rides the
-#                            same stub-codec seam as
-#                            multimodal_features -- in this round's
-#                            _PRIORITY -- and the seam is exercised
-#                            end-to-end by image_near_dup_pairs_docs,
-#                            also in _PRIORITY; the codec contract
-#                            stays pinned in
-#                            tests/test_multimodal_codec.py)
-#   events_hourly_rollup     (exact subset of events_rollup_hierarchy
-#                            -- the hierarchy row computes the hourly
-#                            grain as its leaf level before rolling
-#                            up -- and the time-bucket agg family
-#                            also stays via events_sessionize; both
-#                            driver-green in r12, resting this round)
-#   dedup_simhash_hamming    (the pigeonhole candidate join is the
-#                            shared dedup.hamming_chunk_pairs
-#                            generator, driver-verified through
-#                            image_near_dup_pairs_docs -- the r12
-#                            refactor proved the two rides
-#                            hash-identical -- and the text near-dup
-#                            family stays via
-#                            winnow_near_dup_pairs_docs +
-#                            dedup_minhash_lsh_pairs)
-# Designated retirement CANDIDATES for the NEXT rotation (final call
-# at r15; every r14 mid-order registration must be matched by one so
-# the exactly-50 arithmetic closes). Both are in today's resting set
-# (_DEPRIORITIZED = the r13-green 50); coverage held elsewhere:
-#   corpus_datacard          (the datacard aggregate surface is an
-#                            exact subset of corpus_datacard_drift --
-#                            the drift row computes a datacard per
-#                            snapshot before diffing, the
-#                            events_hourly_rollup-precedent shape --
-#                            and drift sits in this round's _PRIORITY)
-#   events_salted_type_stats (the salting family stays driver-covered
-#                            via events_customer_salted_join -- the
-#                            salted JOIN, the harder shape -- and
-#                            events_heavy_hitter_users, the skew
-#                            detection row; all three rode the same
-#                            skew.py kernels since r10)
-# Designated retirement CANDIDATES for the NEXT rotation (final call
-# at r16; every r15 mid-order registration must be matched by one so
-# the exactly-50 arithmetic closes). All are in today's resting set
-# (_DEPRIORITIZED = the r14-green 50); coverage held elsewhere:
-#   corpus_contamination_pairs (the gram-instance contamination join
-#                            is replayed end-to-end inside
-#                            corpus_decontaminate -- the harder
-#                            composition, in today's resting set and
-#                            due back at r16 -- and the
-#                            decontamination family stays driver-live
-#                            via semantic_decontaminate_flags and
-#                            documents_bloom_decontaminate, both in
-#                            this round's _PRIORITY)
-#   ann_lsh_bucket_topk      (the ANN surface keeps four driver rows:
-#                            ann_cosine_topk_filtered -- the brute
-#                            ground truth, this round's _PRIORITY --
-#                            plus ann_ivf_multiprobe_topk,
-#                            ann_ivf_index_search, and
-#                            ann_pq_recall_bounds; the LSH band-join
-#                            kernel itself stays driver-covered via
-#                            dedup_minhash_lsh_pairs, which rides the
-#                            same bucket-join generator)
-#   sat_load_lineitem_composite (the INSERT..SELECT anti-join sink --
-#                            SURVEY S7 -- keeps two driver rows via
-#                            hub_load_lineitem_composite and
-#                            link_load_order_part_supplier on the
-#                            same composite-key grain, and the
-#                            satellite surface itself stays
-#                            driver-verified via
-#                            dv_round_trip_customer, in this round's
-#                            _PRIORITY)
-#   documents_pack_sequences (fourth candidate, matching the fourth
-#                            r15 mid documents_packed_token_stream:
-#                            the token-stream oracle replays the
-#                            ENTIRE pack_sequences placement CTE
-#                            before exploding per-token, so its
-#                            coverage is a strict superset -- the
-#                            events_hourly_rollup exact-subset
-#                            precedent; the multimodal planner row
-#                            documents_pack_multimodal ALSO carries
-#                            the same bucket construction and is a
-#                            sibling r15 mid)
-#   corpus_token_budget_sample (fifth candidate, matching the fifth
-#                            r15 mid documents_multimodal_budget_sample:
-#                            that oracle replays this row's ENTIRE
-#                            lang-CASE + bucket-greedy prefix
-#                            construction and extends the budget cost
-#                            with the per-example media bill -- empty
-#                            links degenerate to this row byte-exactly
-#                            (pinned in tests/test_multimodal_budget.py),
-#                            the documents_pack_sequences exact-subset
-#                            precedent one entry up)
-# r16: the five candidates above were RETIRED this round (the r16
-# rotation executed them); r16 is an optimization round with NO new
-# registrations, so no mid-order rows need matching candidates and
-# the list is empty until the next build round registers queries.
 _NEXT_RETIREMENT_CANDIDATES = []
-# NOTE for round 13: EXECUTED -- see the "Round 13 state" note beside
-# _NEXT_RETIREMENT_CANDIDATES above (the mechanical swap the r12 note
-# prescribed, invariants re-run before commit).
-# r13 oracle candidacies: EXECUTED. Both media rows are REGISTERED
-# mid-order this round (end of this file), check_oracle-green at
-# sf0.001/sf0.01/sf0.1:
-#   audio_near_dup_pairs_docs -- the designated r12 candidate (the
-#     image SQL with a 65x1 envelope grid; all integers). 0 pairs at
-#     sf<=0.01 / 1 pair at sf0.1 on the synthetic corpus (full-payload
-#     envelopes only collide on planted exact-dup texts), same
-#     sparse-result profile as image_near_dup_pairs_docs; the
-#     pair-join machinery is additionally driver-covered dense via
-#     the video row below and pytest-covered by planted twins
-#     (tests/test_multimodal_audio.py).
-#   video_near_dup_pairs_docs -- the name-the-slot resolution of the
-#     r12 VERDICT's residual 2: frame-grain packed keys, the image
-#     SQL plus a frame explode and the shared-frames >= 2 rollup;
-#     dense at every SF (3005 pairs at sf0.001, 40647 at sf0.1).
-#   media_hash_rows_docs -- the third r13 registration (added with the
-#     media landing zone): multimodal.media_hash_rows, the zone's
-#     one-pass hash kernel and phash-sidecar surface, replayed as the
-#     union of the three per-family byte replays. Dense at every SF
-#     (2731 rows at sf0.001).
-# Retire-and-replace designations (the exactly-50 arithmetic at r14):
-# audio_near_dup_pairs_docs is matched by dedup_simhash_hamming,
-# video_near_dup_pairs_docs by multimodal_decode_stats, and
-# media_hash_rows_docs by events_hourly_rollup -- three mids, three
-# candidates, the r14 swap closes exactly.
-# Round 14 state (EXECUTED per the r13 note and the r13 VERDICT
-# directive 1): _PRIORITY = the 50 rows that rested in r13 MINUS the
-# three designated retirements (multimodal_decode_stats,
-# events_hourly_rollup, dedup_simhash_hamming -- all three confirmed
-# RESTING in r13, coverage rationales in the r13 note above) PLUS the
-# three r13 mid-order registrations taking their first driver rows
-# (media_hash_rows_docs, audio_near_dup_pairs_docs,
-# video_near_dup_pairs_docs -- the audio row DENSIFIED first per the
-# r13 VERDICT's What's wrong #1: planted envelope-preserving twins,
-# 17 pairs at sf0.01 instead of 0, byte-exact at three SFs). Exactly
-# 50. _DEPRIORITIZED = the 50 rows verified in r13 (CORRECTNESS_r13:
-# 50/50 green). Invariants re-checked via
-# tests/test_catalog_invariants.py before commit.
-# r14 mid-order registrations (first driver rows due r15), both
-# check_oracle-green at sf0.001/sf0.01/sf0.1:
-#   media_text_pairs_docs -- the r13 VERDICT directive-5 assembly
-#     (deduped image canonicals joined to caption docs with both
-#     sides' cluster ids and the bipartite pair group), with planted
-#     twins so the canonical re-point fires at every SF. Matched by
-#     corpus_datacard in _NEXT_RETIREMENT_CANDIDATES above.
-#   media_datacard_docs -- the per-type media ANALYZE surface (one
-#     conditional-agg pass; avg_bytes the lone float, exact-int
-#     division). Matched by events_salted_type_stats. Two mids, two
-#     candidates -- the r15 swap closes exactly.
-# Round 15 state (EXECUTED per the r14 note and the r14 VERDICT
-# directive 1): _PRIORITY = the 50 rows that rested in r14 MINUS the
-# two designated retirements (corpus_datacard,
-# events_salted_type_stats -- both confirmed RESTING in r14, coverage
-# rationales in the r14 note above) PLUS the two r14 mid-order
-# registrations taking their first driver rows (media_text_pairs_docs,
-# media_datacard_docs). Exactly 50. _DEPRIORITIZED = the 50 rows
-# verified in r14 (CORRECTNESS_r14: 50/50 green). Invariants
-# re-checked via tests/test_catalog_invariants.py before commit.
-# r15 mid-order registrations (first driver rows due r16), all five
-# check_oracle-green at sf0.001/sf0.01/sf0.1, each matched by one
-# _NEXT_RETIREMENT_CANDIDATES entry so the exactly-50 arithmetic at
-# r16 closes (rationales in the candidate block above):
-#   documents_pack_multimodal      <- corpus_contamination_pairs
-#   media_datacard_drift_docs      <- ann_lsh_bucket_topk
-#   media_decode_rules_docs        <- sat_load_lineitem_composite
-#   documents_packed_token_stream  <- documents_pack_sequences
-#   documents_multimodal_budget_sample <- corpus_token_budget_sample
-# (the last two pairings are exact-subset: each mid's oracle replays
-# its candidate's ENTIRE construction CTE before extending it).
 
 
 def _ordered(names: list[str]) -> list[str]:
-    names = [n for n in names if n not in _RETIRED]
     head = [n for n in _PRIORITY if n in names]
     tail = [n for n in _DEPRIORITIZED if n in names]
     mid = [n for n in names if n not in head and n not in tail]
@@ -686,17 +164,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {n: _ORACLE[n] for n in _ordered(list(_ORACLE))}
-
-
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """queries() plus retired-but-still-benched builders: retirement
-    frees a correctness-rotation slot, it does not delete the perf
-    canary (bench HEADLINE membership is independent of the slot)."""
-    out = queries()
-    for n in sorted(_RETIRED):
-        if n in _QUERIES:
-            out[n] = _QUERIES[n]
-    return out
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -720,7 +187,7 @@ def _scratch_dir(prefix: str) -> str:
 # clone's bookkeeping never shares inodes with the template's. Cost is
 # O(file count) metadata ops, ~1ms -- vs ~0.8s re-writing the initial
 # dim through Spark per call. Same accounting as the IVF index
-# (_ivf_index): the one-time build lands in the cold pass.
+# (_ivf_wh): the one-time build lands in the cold pass.
 _SCRATCH_TEMPLATE_CACHE: dict[tuple, str] = {}
 
 
@@ -782,50 +249,6 @@ def customer_business_key():
 
 
 @register(
-    "hub_load_customer",
-    f"""
-    SELECT sha256(CAST(c_custkey AS VARCHAR)) AS hub_customer_hk,
-           '{LOAD_TS_STR}' AS load_ts,
-           'main' AS record_source,
-           CAST(c_custkey AS VARCHAR) AS c_custkey_bk
-    FROM customer
-    """,
-)
-def hub_load_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hub staging rows (reference: dv_loader.rs:160-176): sha256 hash key
-    over ::TEXT-rendered BK parts, comma-joined."""
-    from .build.loader import hub_stage_df
-
-    src = load_table(spark, sf_dir, "customer")
-    df = hub_stage_df(src, customer_business_key(), load_ts=LOAD_TS)
-    return df.withColumn("load_ts", F.date_format("load_ts", "yyyy-MM-dd HH:mm:ss"))
-
-
-@register(
-    "sat_load_customer",
-    f"""
-    SELECT sha256(CAST(c_custkey AS VARCHAR)) AS hub_customer_hk,
-           '{LOAD_TS_STR}' AS load_ts,
-           'main' AS record_source,
-           sha256(concat_ws(',',
-                            c_name,
-                            CAST(c_nationkey AS VARCHAR),
-                            CAST(CAST(c_acctbal AS DECIMAL(38,2)) AS VARCHAR),
-                            c_mktsegment)) AS sat_customer_hd,
-           c_name, c_nationkey, c_acctbal, c_mktsegment
-    FROM customer
-    """,
-)
-def sat_load_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Satellite staging rows with hash-diff (reference: dv_loader.rs:325-357)."""
-    from .build.loader import satellite_stage_df
-
-    src = load_table(spark, sf_dir, "customer")
-    df = satellite_stage_df(src, customer_business_key(), "customer", load_ts=LOAD_TS)
-    return df.withColumn("load_ts", F.date_format("load_ts", "yyyy-MM-dd HH:mm:ss"))
-
-
-@register(
     "ghost_records_customer",
     """
     SELECT sha256('-1') AS hub_customer_hk,
@@ -843,12 +266,6 @@ def ghost_records_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "customer")
     df = ghost_records_df(src, customer_business_key())
     return df.withColumn("load_ts", F.date_format("load_ts", "yyyy-MM-dd HH:mm:ss"))
-
-
-# hub_new_keys_anti_join retired r8 (slot freed for ann_pq_recall_bounds /
-# documents_jsonl_roundtrip): SURVEY J5 anti-join coverage held by
-# hub_load_customer (r7 green, left_anti inside build/loader.py) and
-# orders_without_lineitems_anti.
 
 
 # ---------------------------------------------------------------------------
@@ -1499,36 +916,6 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_hourly_rollup",
-    """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-           event_type,
-           COUNT(*) AS n_events,
-           COUNT(DISTINCT user_id) AS n_users,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window batch rollup on the event stream table (the batch
-    twin of the streaming job in streaming/jobs.py), including the
-    nanos->micros timestamp normalization."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-    )
-
-
-@register(
     "events_rollup_hierarchy",
     """
     SELECT COALESCE(event_type, 'ALL') AS event_type,
@@ -1625,26 +1012,6 @@ def orders_without_lineitems_anti(spark: SparkSession, sf_dir: str) -> DataFrame
     return o.join(li, o["o_orderkey"] == li["l_orderkey"], "left_anti").select("o_orderkey")
 
 
-@register(
-    "customer_order_coalesce_outer",
-    """
-    SELECT c_custkey,
-           COALESCE(CAST(cnt AS BIGINT), 0) AS n_orders
-    FROM customer
-    LEFT JOIN (SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey) oc
-      ON c_custkey = oc.o_custkey
-    """,
-)
-def customer_order_coalesce_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT JOIN + COALESCE default (SURVEY J1/F5)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    oc = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("cnt"))
-    return c.join(oc, c["c_custkey"] == oc["o_custkey"], "left").select(
-        "c_custkey", F.coalesce(F.col("cnt"), F.lit(0)).alias("n_orders")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Training-data pipeline: text analysis / dedup / similarity / multimodal
 # ---------------------------------------------------------------------------
@@ -1711,22 +1078,6 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "text_token_counts",
-    r"""
-    SELECT doc_id,
-           len(regexp_split_to_array(trim(text), '\s+')) AS n_ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS n_bpe_tokens
-    FROM documents
-    """,
-)
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace + BPE-ish pre-tokenizer counts."""
-    from .functions.text import token_counts
-
-    return token_counts(load_table(spark, sf_dir, "documents"))
-
-
-@register(
     "text_repetition",
     """
     WITH n AS (
@@ -1751,78 +1102,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import repetition_scores
 
     return repetition_scores(load_table(spark, sf_dir, "documents"))
-
-
-_TOKEN_BUDGET_ORACLE = f"""
-WITH f0 AS (
-    SELECT doc_id, text,
-           len(regexp_extract_all(lower(text), '{_LANG_RE["de"]}')) AS score_de,
-           len(regexp_extract_all(lower(text), '{_LANG_RE["en"]}')) AS score_en,
-           len(regexp_extract_all(lower(text), '{_LANG_RE["es"]}')) AS score_es,
-           len(regexp_extract_all(lower(text), '{_LANG_RE["fr"]}')) AS score_fr
-    FROM documents),
-f AS (
-    SELECT doc_id,
-           CASE WHEN score_de = 0 AND score_en = 0 AND score_es = 0 AND score_fr = 0
-                THEN 'und'
-                WHEN score_de >= score_en AND score_de >= score_es AND score_de >= score_fr
-                THEN 'de'
-                WHEN score_en >= score_es AND score_en >= score_fr THEN 'en'
-                WHEN score_es >= score_fr THEN 'es'
-                ELSE 'fr' END AS detected_lang,
-           COALESCE(len(regexp_extract_all(text,
-                        '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')), 0) AS n_bpe_tokens,
-           md5(CAST(doc_id AS VARCHAR)) AS h,
-           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 256 AS bucket
-    FROM f0),
-b AS (
-    SELECT detected_lang, bucket, SUM(n_bpe_tokens) AS btok
-    FROM f GROUP BY 1, 2),
-c AS (
-    SELECT detected_lang, bucket,
-           COALESCE(SUM(btok) OVER (PARTITION BY detected_lang ORDER BY bucket
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-    FROM b),
-d AS (
-    SELECT f.doc_id, f.detected_lang, f.n_bpe_tokens, c.cum_before,
-           SUM(f.n_bpe_tokens) OVER (PARTITION BY f.detected_lang, f.bucket
-                    ORDER BY f.h, f.doc_id ROWS UNBOUNDED PRECEDING) AS dcum
-    FROM f JOIN c ON f.detected_lang = c.detected_lang AND f.bucket = c.bucket)
-SELECT doc_id, detected_lang, CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens
-FROM d WHERE cum_before + dcum <= 20000
-"""
-
-
-@register("corpus_token_budget_sample", _TOKEN_BUDGET_ORACLE)
-def corpus_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language token-budget sampling in deterministic hash order,
-    bucket-coarse so no language needs a single-partition sort (the
-    pretraining-mix construction step)."""
-    from .functions.corpus import token_budget_sample
-
-    return token_budget_sample(load_table(spark, sf_dir, "documents"))
-
-
-_NORM_SQL = (
-    "array_to_string(list_sort(list_distinct(regexp_split_to_array(trim("
-    "regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+'))), ' ')"
-)
-
-
-@register(
-    "text_fingerprints",
-    f"""
-    SELECT doc_id,
-           sha256(text) AS exact_hash,
-           md5({_NORM_SQL}) AS fingerprint
-    FROM documents
-    """,
-)
-def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sha256 exact-dup key + md5 token-set fingerprint."""
-    from .functions.text import fingerprints
-
-    return fingerprints(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1853,8 +1132,8 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     hardening proved INSUFFICIENT -- so every engine-divergent surface
     leaves the hashed bytes at once. (a) Tokenization is the
     ``word_tokens`` lowercase-alnum normalization, the exact shape the
-    driver environment already hash-matches (corpus_decontaminate,
-    text_fingerprints), not raw '\\s+' splitting. (b) The score is a
+    driver environment already hash-matches (corpus_decontaminate),
+    not raw '\\s+' splitting. (b) The score is a
     scaled BIGINT (millibits: ROUND(H*1000)): integer columns hash
     identically under any driver canonicalization, and a libm or
     sum-order skew of ~1e-12 can only flip the 1e-3 grid within 1e-12
@@ -1868,46 +1147,6 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "n_distinct_words",
         F.round(F.col("entropy_bits") * 1000, 0).cast("bigint").alias("entropy_mbits"),
-    )
-
-
-@register(
-    "text_unigram_logprob",
-    """
-    WITH w AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(
-                   regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                   '\\s+')) AS w
-        FROM documents),
-    words AS (SELECT doc_id, w FROM w WHERE w <> ''),
-    mat AS (SELECT doc_id, w, COUNT(*) AS c FROM words GROUP BY 1, 2),
-    freq AS (SELECT w, SUM(c) AS n FROM mat GROUP BY w),
-    tot AS (SELECT SUM(n) AS total FROM freq)
-    SELECT doc_id,
-           CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(ROUND(SUM(c * log10(CAST(n AS DOUBLE) / CAST(total AS DOUBLE)))
-                      / SUM(c) * 1000, 0) AS BIGINT) AS avg_logprob_m
-    FROM mat JOIN freq USING (w) CROSS JOIN tot
-    GROUP BY doc_id
-    """,
-)
-def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc mean unigram log10-probability under the corpus's own
-    unigram LM -- the CCNet-style perplexity-filter quality signal
-    (functions/text.py unigram_logprob): rare-token gibberish scores
-    low, boilerplate high. One model-build shuffle + one scoring join
-    + one rollup. Hash-hardened like text_word_entropy (r7 VERDICT
-    directive 1): word_tokens normalization + scaled-BIGINT score
-    (milli-log10, ROUND(avg*1000)) so the hashed bytes are
-    integer-only on both engines."""
-    from .functions.text import unigram_logprob
-
-    return unigram_logprob(
-        load_table(spark, sf_dir, "documents"), decimals=None, normalized=True
-    ).select(
-        "doc_id",
-        "n_tokens",
-        F.round(F.col("avg_logprob") * 1000, 0).cast("bigint").alias("avg_logprob_m"),
     )
 
 
@@ -1984,20 +1223,6 @@ reach(id, r) AS (
     SELECT reach.id, e.dst FROM reach JOIN edges e ON e.src = reach.r)
 SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id
 """
-
-
-@register("dedup_clusters", _CLUSTERS_ORACLE)
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash-LSH candidate pairs:
-    cluster_id = min doc_id per component (singletons keep their own
-    id). Pairwise dedup output becomes keep/drop sets -- the step a
-    training-data pipeline actually acts on. Shares the pinned cluster
-    assignment with the corpus_clean_* queries (one LSH pass for all
-    three consumers)."""
-    from .functions.corpus import cluster_assignments
-
-    docs = load_table(spark, sf_dir, "documents")
-    return cluster_assignments(docs, cache_key=sf_dir)
 
 
 _KEEP_BEST_ORACLE = f"""
@@ -2108,81 +1333,6 @@ def source_profile_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PII_SCAN_COLS = ("lang", "source", "contact_note", "support_line")
-_PII_SCAN_PATTERNS = (
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"),
-    ("phone", r"[0-9]{3}-[0-9]{3}-[0-9]{4}"),
-    ("ip", r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"),
-)
-
-# The synthetic corpus carries no natural PII, so the scan target
-# plants the seller.sql bait shape deterministically on BOTH sides:
-# an email in every 7th doc's innocently-named contact_note, a phone
-# in every 11th doc's support_line.
-_PII_SCAN_SYNTH = """
-    synth AS (
-        SELECT lang, source,
-               CASE WHEN doc_id % 7 = 0
-                    THEN 'reach user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                    ELSE 'no contact on file' END AS contact_note,
-               CASE WHEN doc_id % 11 = 0
-                    THEN 'call 555-' || CAST(100 + doc_id % 900 AS VARCHAR)
-                         || '-' || CAST(1000 + doc_id % 9000 AS VARCHAR)
-                    ELSE '-' END AS support_line
-        FROM documents)
-"""
-
-_PII_SCAN_ORACLE = "WITH " + _PII_SCAN_SYNTH + " UNION ALL ".join(
-    f"""
-    SELECT '{c}' AS column_name, '{p}' AS pattern, COUNT(*) AS n_rows,
-           CAST(count_if(regexp_matches({c}, '{rx}')) AS BIGINT)
-               AS n_matching_rows
-    FROM synth"""
-    for c in _PII_SCAN_COLS
-    for p, rx in _PII_SCAN_PATTERNS
-)
-
-
-@register("documents_pii_scan", _PII_SCAN_ORACLE)
-def documents_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-side PII bait detection (catalog/profile.py pii_scan): rows
-    matching each PII value pattern, per (column, pattern) -- the
-    governance check that catches sensitive values in innocently-named
-    columns, which the reference's metadata-only prompts are
-    structurally blind to (its demo data plants exactly that bait: an
-    email in seller.city, seller.sql:28). One aggregation pass for all
-    column x pattern counts + a plan-level unpivot; zero counts are
-    reported too (the all-clear is information)."""
-    from .catalog.profile import pii_scan
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "lang",
-        "source",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.lit("reach user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com"),
-            ),
-        )
-        .otherwise(F.lit("no contact on file"))
-        .alias("contact_note"),
-        F.when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(
-                F.lit("call 555-"),
-                (F.lit(100) + F.col("doc_id") % 900).cast("string"),
-                F.lit("-"),
-                (F.lit(1000) + F.col("doc_id") % 9000).cast("string"),
-            ),
-        )
-        .otherwise(F.lit("-"))
-        .alias("support_line"),
-    )
-    return pii_scan(docs, list(_PII_SCAN_COLS))
-
-
 _ZIP_VIOLATIONS_ORACLE = """
 WITH synth AS (
     SELECT CASE WHEN doc_id % 13 = 0
@@ -2243,27 +1393,6 @@ _CONTAM_GRAMS_SQL = r"""
                GROUP BY gram HAVING COUNT(DISTINCT bench_id) <= 1000))
 """
 
-_CONTAM_PAIRS_ORACLE = f"""
-{_CONTAM_GRAMS_SQL}
-SELECT d.doc_id, b.bench_id, COUNT(*) AS n_shared_grams
-FROM dg AS d JOIN bg AS b USING (gram)
-GROUP BY d.doc_id, b.bench_id
-"""
-
-
-@register("corpus_contamination_pairs", _CONTAM_PAIRS_ORACLE)
-def corpus_contamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test decontamination check: word-8-gram overlap between
-    every document and a held-out benchmark slice (doc_id % 97 == 0).
-    Both sides explode to distinct (id, gram) tables; the join
-    shuffles on the gram key only, with ubiquitous benchmark grams
-    capped (stop-gram rule) so boilerplate can't create a hot key."""
-    from .functions.corpus import contamination_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return contamination_pairs(docs, bench, n=8)
-
 
 _DECONTAM_ORACLE = f"""
 {_CONTAM_GRAMS_SQL}
@@ -2283,57 +1412,6 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     return decontaminate(docs, bench, n=8).select("doc_id")
-
-
-_SIMHASH_ORACLE = f"""
-WITH
-norm AS (
-    SELECT doc_id, {_NORM_SQL} AS norm FROM documents),
-toks AS (
-    SELECT doc_id, unnest(list_distinct(string_split(norm, ' '))) AS tok FROM norm),
-hashed AS (
-    SELECT doc_id, ('0x' || substr(md5(tok), 1, 8))::BIGINT AS h FROM toks),
-votes AS (
-    SELECT doc_id, r.range AS bit,
-           SUM(CASE WHEN (h >> CAST(r.range AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-    FROM hashed CROSS JOIN range(32) r
-    GROUP BY doc_id, r.range)
-SELECT doc_id,
-       CAST(SUM(CASE WHEN v >= 0 THEN (1::BIGINT << CAST(bit AS INT)) ELSE 0 END)
-            AS BIGINT) AS simhash
-FROM votes GROUP BY doc_id
-"""
-
-
-# dedup_simhash (bare fingerprints) retired r8: dedup_simhash_hamming
-# composes the identical signature construction (its oracle embeds
-# _SIMHASH_ORACLE above) and then exercises the pigeonhole pair search
-# on top, so the fingerprint math stays driver-verified through it.
-
-
-_SIMHASH_CHUNK_ORACLE = f"""
-WITH
-sims AS ({_SIMHASH_ORACLE}),
-chunks AS (
-    SELECT doc_id, simhash, r.range AS pos,
-           (simhash >> CAST(r.range * 8 AS INT)) & 255 AS val
-    FROM sims CROSS JOIN range(4) r)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM chunks a JOIN chunks b ON a.pos = b.pos AND a.val = b.val
-                           AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
-@register("dedup_simhash_hamming", _SIMHASH_CHUNK_ORACLE)
-def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocking-free SimHash near-dup pairs (hamming <= 3) via the
-    Manku pigeonhole chunk trick: candidates shuffle on (chunk pos,
-    chunk value), never the O(n^2) pair space."""
-    from .functions.dedup import simhash_chunk_pairs
-
-    return simhash_chunk_pairs(load_table(spark, sf_dir, "documents"), max_hamming=3)
 
 
 @register(
@@ -2369,137 +1447,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QVEC_SQL = "[CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT) for x in embedding]"
 _DOT_SQL = "CAST(list_sum([qa.qvec[i] * qb.qvec[i] for i in range(1, 65)]) AS BIGINT)"
 
-_ANN_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id, {_QVEC_SQL} AS qvec FROM embeddings),
-n AS (
-    SELECT vec_id, qvec,
-           CAST(list_sum([qvec[i] * qvec[i] for i in range(1, 65)]) AS BIGINT) AS qnorm
-    FROM q),
-sims AS (
-    SELECT qa.vec_id AS query_id, qb.vec_id AS neighbor_id,
-           CAST({_DOT_SQL} AS DOUBLE) /
-               (sqrt(CAST(qa.qnorm AS DOUBLE)) * sqrt(CAST(qb.qnorm AS DOUBLE))) AS cosine
-    FROM n qa JOIN n qb ON qa.vec_id <> qb.vec_id
-    WHERE qa.vec_id < 10),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS rn
-    FROM sims)
-SELECT query_id, neighbor_id, cosine FROM ranked WHERE rn <= 5
-"""
-
-
-@register("ann_cosine_topk", _ANN_ORACLE)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for query vecs 0..9: exact integer-
-    quantized dot products -> identical IEEE doubles in both engines."""
-    from .functions.similarity import brute_force_topk
-
-    return brute_force_topk(
-        load_table(spark, sf_dir, "embeddings"), query_ids=list(range(10)), k=5
-    )
-
-
-_ANN_LSH_ORACLE = f"""
-WITH base AS (
-    SELECT vec_id,
-           concat(
-               CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[3] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[4] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[5] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[6] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[7] >= 0 THEN '1' ELSE '0' END,
-               CASE WHEN embedding[8] >= 0 THEN '1' ELSE '0' END) AS bucket,
-           {_QVEC_SQL} AS qvec
-    FROM embeddings),
-n AS (
-    SELECT vec_id, bucket, qvec,
-           CAST(list_sum([qvec[i] * qvec[i] for i in range(1, 65)]) AS BIGINT) AS qnorm
-    FROM base),
-sims AS (
-    SELECT qa.vec_id AS query_id, qb.vec_id AS neighbor_id,
-           CAST({_DOT_SQL} AS DOUBLE) /
-               (sqrt(CAST(qa.qnorm AS DOUBLE)) * sqrt(CAST(qb.qnorm AS DOUBLE))) AS cosine
-    FROM n qa JOIN n qb ON qa.bucket = qb.bucket AND qa.vec_id <> qb.vec_id),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS rn
-    FROM sims)
-SELECT query_id, neighbor_id, cosine FROM ranked WHERE rn <= 5
-"""
-
-
-@register("ann_lsh_bucket_topk", _ANN_LSH_ORACLE)
-def ann_lsh_bucket_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed approximate top-5: candidates shuffle on the
-    bucket key only (the 100 TB path; brute force is the exact baseline).
-    hyperplanes=False pins the axis-aligned SQL-expressible baseline;
-    the package default is seeded random hyperplanes."""
-    from .functions.similarity import lsh_bucket_topk
-
-    return lsh_bucket_topk(
-        load_table(spark, sf_dir, "embeddings"), k=5, n_planes=8, hyperplanes=False
-    )
-
-
-_ANN_IVF_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id, {_QVEC_SQL} AS qvec FROM embeddings),
-n AS (
-    SELECT vec_id, qvec,
-           CAST(list_sum([qvec[i] * qvec[i] for i in range(1, 65)]) AS BIGINT) AS qnorm
-    FROM q),
-c0 AS (
-    SELECT vec_id AS cent_id, qvec AS cv, qnorm AS cn FROM n WHERE vec_id % 50 = 0),
-s0 AS (
-    SELECT n.vec_id, n.qvec, n.qnorm, c0.cent_id,
-           CAST(CAST(list_sum([n.qvec[i] * c0.cv[i] for i in range(1, 65)]) AS BIGINT)
-                AS DOUBLE) /
-               (sqrt(CAST(n.qnorm AS DOUBLE)) * sqrt(CAST(c0.cn AS DOUBLE))) AS csim
-    FROM n CROSS JOIN c0),
-a0 AS (
-    SELECT vec_id, qvec, qnorm, cent_id AS cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-    FROM s0),
-m0 AS (SELECT vec_id, qvec, qnorm, cell FROM a0 WHERE rn = 1),
-sums AS (
-    SELECT cell, r.range AS pos,
-           sum(qvec[CAST(r.range + 1 AS INT)]) AS s, count(*) AS cnt
-    FROM m0 CROSS JOIN range(64) r GROUP BY 1, 2),
-c1 AS (
-    SELECT cell AS cent_id,
-           list(CAST(floor(CAST(s AS DOUBLE) / cnt) AS BIGINT) ORDER BY pos) AS cv
-    FROM sums GROUP BY cell),
-c1n AS (
-    SELECT cent_id, cv,
-           CAST(list_sum([cv[i] * cv[i] for i in range(1, 65)]) AS BIGINT) AS cn
-    FROM c1),
-s1 AS (
-    SELECT n.vec_id, n.qvec, n.qnorm, c1n.cent_id,
-           CAST(CAST(list_sum([n.qvec[i] * c1n.cv[i] for i in range(1, 65)]) AS BIGINT)
-                AS DOUBLE) /
-               (sqrt(CAST(n.qnorm AS DOUBLE)) * sqrt(CAST(c1n.cn AS DOUBLE))) AS csim
-    FROM n CROSS JOIN c1n),
-a1 AS (
-    SELECT vec_id, qvec, qnorm, cent_id AS cell,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-    FROM s1),
-cells AS (SELECT vec_id, qvec, qnorm, cell FROM a1 WHERE rn = 1),
-sims AS (
-    SELECT qa.vec_id AS query_id, qb.vec_id AS neighbor_id,
-           CAST({_DOT_SQL} AS DOUBLE) /
-               (sqrt(CAST(qa.qnorm AS DOUBLE)) * sqrt(CAST(qb.qnorm AS DOUBLE))) AS cosine
-    FROM cells qa JOIN cells qb ON qa.cell = qb.cell AND qa.vec_id <> qb.vec_id),
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC, neighbor_id) AS rn
-    FROM sims)
-SELECT query_id, neighbor_id, cosine FROM ranked WHERE rn <= 5
-"""
-
 
 _IVF_CODEBOOK_CACHE: dict[tuple, DataFrame] = {}
 
@@ -2512,8 +1459,8 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook is trained by an index-build job and then probed by every
     query (functions/similarity.py ivf_assign docstring); re-running
     Lloyd per query would charge the build to each probe. The cached
-    object is the *identical* DataFrame, so ann_ivf_topk and
-    ann_ivf_multiprobe_topk stay bit-for-bit oracle-reproducible."""
+    object is the *identical* DataFrame, so dedup_semantic_keep stays
+    bit-for-bit oracle-reproducible."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cb = _IVF_CODEBOOK_CACHE.get(key)
     if cb is None:
@@ -2524,49 +1471,6 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         _IVF_CODEBOOK_CACHE[key] = cb
     return cb
-
-
-_IVF_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The built IVF index: every corpus vector's cell assignment
-    against the k-means codebook, materialized once per session per
-    dataset (eager checkpoint) and probed by every ivf query.
-
-    This is the other half of the index-build contract _ivf_codebook
-    establishes: in production the assignment is a warehouse table
-    written by the index-build job (similarity.ivf_assign docstring);
-    re-scoring the full corpus against the codebook per probe charges
-    the build's dominant cost -- a corpus x codebook broadcast
-    cross-score -- to every query (the r5 bench regression)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_INDEX_CACHE.get(key)
-    if idx is None:
-        from .functions.similarity import ivf_assign
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        # ivf_assign already ends in a (lazy) localCheckpoint; force it
-        # with one count instead of stacking a second pin on top, which
-        # would hold the full assignment in block storage TWICE.
-        idx = ivf_assign(emb, codebook=_ivf_codebook(spark, sf_dir))
-        idx.count()
-        _IVF_INDEX_CACHE[key] = idx
-    return idx
-
-
-@register("ann_ivf_topk", _ANN_IVF_ORACLE)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF single-probe top-5 against the k-means-refined codebook (the
-    trained index a production IVF build would use; r3 VERDICT
-    directive 2). The cell assignment comes from the shared per-session
-    index build (_ivf_index: codebook train + full-corpus assignment,
-    paid once); the probe itself is the capped cell-key pair join +
-    per-query top-k window only."""
-    from .functions.similarity import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, k=5, stride=50, assigned=_ivf_index(spark, sf_dir))
 
 
 _IVF_MULTIPROBE_ORACLE = f"""
@@ -2613,21 +1517,14 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(load_table(spark, sf_dir, "embeddings"), k=5, stride=50, n_probes=2)
 
 
-# ann_ivf_kmeans_assign retired r8: the Lloyd-refined assignment it
-# verified is the exact construction inside the shared _ivf_index,
-# which ann_ivf_topk / ann_ivf_multiprobe_topk / ann_ivf_index_search
-# all consume and keep driver-verified end-to-end.
-
-
 _IVF_WH_CACHE: dict[tuple, object] = {}
 
 
 def _ivf_wh(spark: SparkSession, sf_dir: str):
     """The PERSISTED IVF index (similarity.build_ivf_index): codebook +
     cell-partitioned assignment as warehouse tables, built once per
-    (session, dataset) into a scratch warehouse -- the durable twin of
-    the in-process _ivf_index cache, same build-once/probe-many
-    accounting (the one-time build lands in the bench cold pass)."""
+    (session, dataset) into a scratch warehouse -- the same
+    build-once/probe-many accounting as the _ivf_codebook cache (the one-time build lands in the bench cold pass)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     wh = _IVF_WH_CACHE.get(key)
     if wh is None:
@@ -2677,7 +1574,7 @@ def ann_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force DuckDB oracle (external queries are in the caller's id
     space: strike_self=False, so each query's own corpus twin tops its
     list at cosine 1.0). The pruned single/multi-probe paths keep their
-    own oracle rows (ann_ivf_topk, ann_ivf_multiprobe_topk) and the
+    own oracle row (ann_ivf_multiprobe_topk) and the
     partition-pruning scan contract is pytest-pinned in
     tests/test_ann_index.py. The 10-row query collect is request-sized
     by contract (functions/similarity.py ivf_search_index)."""
@@ -2729,107 +1626,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.25,
         n_planes=4,
         hyperplanes=False,  # axis-aligned SQL-expressible baseline
-    )
-
-
-@register(
-    "multimodal_decode_stats",
-    """
-    SELECT doc_id AS media_id,
-           ['image', 'audio', 'video'][(doc_id % 3) + 1] AS media_type,
-           CAST(length(text) AS INT) AS n_bytes,
-           CASE WHEN (doc_id % 3) = 0 OR (doc_id % 3) = 2
-                THEN CAST(16 + length(text) % 624 AS INT) END AS width,
-           CASE WHEN (doc_id % 3) = 0 OR (doc_id % 3) = 2
-                THEN CAST(16 + (length(text) * 7) % 464 AS INT) END AS height,
-           CASE WHEN (doc_id % 3) = 0 THEN 1
-                WHEN (doc_id % 3) = 1 THEN CAST(1 + length(text) % 1000 AS INT)
-                ELSE CAST(1 + length(text) % 120 AS INT) END AS n_frames
-    FROM documents
-    """,
-)
-def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched mapInPandas decode of binary media columns (decode
-    itself is a deterministic stub; the Spark plumbing is real). The
-    oracle recomputes the stub arithmetic from text length (payloads
-    are the UTF-8 text bytes; corpus is ASCII so chars == bytes)."""
-    from .functions.multimodal import decode_media, synth_media_df
-
-    media = synth_media_df(load_table(spark, sf_dir, "documents"))
-    return decode_media(media).drop("feature")
-
-
-@register(
-    "multimodal_resize",
-    """
-    WITH m AS (
-        SELECT doc_id AS media_id,
-               ['image', 'audio', 'video'][(doc_id % 3) + 1] AS media_type,
-               length(text) AS n
-        FROM documents),
-    d AS (
-        SELECT media_id, media_type,
-               CASE WHEN media_type <> 'audio' THEN CAST(16 + n % 624 AS INT) END AS w,
-               CASE WHEN media_type <> 'audio' THEN CAST(16 + (n * 7) % 464 AS INT) END AS h
-        FROM m),
-    r AS (
-        SELECT media_id, media_type, w, h,
-               CASE WHEN w IS NULL THEN NULL
-                    WHEN greatest(w, h) <= 64 THEN w
-                    ELSE greatest(1, CAST(w * 64 // greatest(w, h) AS INT)) END AS out_width,
-               CASE WHEN h IS NULL THEN NULL
-                    WHEN greatest(w, h) <= 64 THEN h
-                    ELSE greatest(1, CAST(h * 64 // greatest(w, h) AS INT)) END AS out_height
-        FROM d)
-    SELECT media_id, media_type, out_width, out_height,
-           CAST(out_width * out_height * 3 AS INT) AS thumb_len
-    FROM r
-    """,
-)
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving thumbnail pass (resize stubbed, integer target
-    dims exact): 1->1 mapInPandas; audio rows pass with NULL dims. The
-    oracle recomputes the integer dimension math; the thumbnail buffer
-    is checked by its real length."""
-    from .functions.multimodal import resize_media, synth_media_df
-
-    media = synth_media_df(load_table(spark, sf_dir, "documents"))
-    return resize_media(media).select(
-        "media_id",
-        "media_type",
-        "out_width",
-        "out_height",
-        F.length("thumbnail").cast("int").alias("thumb_len"),
-    )
-
-
-@register(
-    "multimodal_frame_samples",
-    """
-    WITH v AS (
-        SELECT doc_id AS media_id, CAST(1 + length(text) % 120 AS INT) AS n_frames
-        FROM documents WHERE doc_id % 3 = 2),
-    s AS (
-        SELECT media_id, n_frames, CAST((n_frames + 3) // 4 AS INT) AS stride FROM v)
-    SELECT media_id, n_frames, CAST(r.range * stride AS INT) AS frame_no,
-           sha256(CAST(media_id AS VARCHAR) || ':' ||
-                  CAST(CAST(r.range * stride AS INT) AS VARCHAR)) AS frame_hex
-    FROM s CROSS JOIN range(4) r
-    WHERE r.range * stride < n_frames
-    """,
-)
-def multimodal_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evenly-strided frame sampling for video rows (<= 4 frames each):
-    the 1->N mapInPandas shape. Frame bytes are the deterministic stub
-    digest, compared by hex against the oracle's sha256."""
-    from .functions.multimodal import sample_frames, synth_media_df
-
-    media = synth_media_df(load_table(spark, sf_dir, "documents"))
-    return sample_frames(media).select(
-        "media_id",
-        "n_frames",
-        "frame_no",
-        F.lower(F.hex("frame")).alias("frame_hex"),
     )
 
 
@@ -3006,30 +1802,6 @@ def hub_load_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("load_ts", F.date_format("load_ts", "yyyy-MM-dd HH:mm:ss"))
 
 
-@register(
-    "sat_load_lineitem_composite",
-    f"""
-    SELECT DISTINCT
-           sha256(concat_ws(',', CAST(l_orderkey AS VARCHAR),
-                                 CAST(l_linenumber AS VARCHAR))) AS hub_lineitem_hk,
-           '{LOAD_TS_STR}' AS load_ts,
-           'main' AS record_source,
-           sha256(concat_ws(',', CAST(CAST(l_quantity AS DECIMAL(38,2)) AS VARCHAR),
-                                 l_returnflag)) AS sat_lineitem_hd,
-           CAST(l_quantity AS DOUBLE) AS l_quantity, l_returnflag
-    FROM lineitem
-    """,
-)
-def sat_load_lineitem_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Satellite for the composite-key hub: hash-diff over descriptors,
-    key hash over both parts."""
-    from .build.loader import satellite_stage_df
-
-    src = load_table(spark, sf_dir, "lineitem")
-    df = satellite_stage_df(src, lineitem_business_key(), "lineitem", load_ts=LOAD_TS)
-    return df.withColumn("load_ts", F.date_format("load_ts", "yyyy-MM-dd HH:mm:ss"))
-
-
 # ---------------------------------------------------------------------------
 # DV link tables (extension completing the reference's Awaiting-Link path)
 # ---------------------------------------------------------------------------
@@ -3145,57 +1917,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sat_current_view",
-    f"""
-    WITH sat AS (
-        SELECT sha256(CAST(c_custkey AS VARCHAR)) AS hub_customer_hk,
-               CASE WHEN c_custkey % 10 = 0 THEN '2024-06-05' ELSE '{LOAD_TS_STR}' END
-                   AS load_ts,
-               CASE WHEN c_custkey % 10 = 0 THEN 'v2' ELSE 'v1' END AS version_tag,
-               c_mktsegment
-        FROM customer
-        UNION ALL
-        SELECT sha256(CAST(c_custkey AS VARCHAR)), '{LOAD_TS_STR}', 'v1', c_mktsegment
-        FROM customer WHERE c_custkey % 10 = 0)
-    SELECT hub_customer_hk, load_ts, version_tag, c_mktsegment
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY hub_customer_hk
-                                       ORDER BY load_ts DESC, version_tag DESC) AS rn
-          FROM sat)
-    WHERE rn = 1
-    """,
-)
-def sat_current_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DV read-side: current-state satellite view (latest row per hub
-    key by load_ts) -- the standard consumption pattern over hash-diff
-    history, as a row_number window. Fixture simulates a second load
-    that updated every 10th customer."""
-    from pyspark.sql import Window
-
-    c = load_table(spark, sf_dir, "customer")
-    hk = F.sha2(F.col("c_custkey").cast("string"), 256).alias("hub_customer_hk")
-    v1 = c.select(
-        hk, F.lit(LOAD_TS_STR).alias("load_ts"), F.lit("v1").alias("version_tag"),
-        "c_mktsegment",
-    )
-    v2 = (
-        c.filter(F.col("c_custkey") % 10 == 0)
-        .select(
-            hk, F.lit("2024-06-05").alias("load_ts"), F.lit("v2").alias("version_tag"),
-            "c_mktsegment",
-        )
-    )
-    hist = v1.unionByName(v2)
-    w = Window.partitionBy("hub_customer_hk").orderBy(
-        F.col("load_ts").desc(), F.col("version_tag").desc()
-    )
-    return (
-        hist.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-@register(
     "dv_round_trip_customer",
     """
     SELECT sha256(CAST(c_custkey AS VARCHAR)) AS hub_customer_hk,
@@ -3235,67 +1956,6 @@ def dv_round_trip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plan; the oracle is DuckDB's native ASOF JOIN -- two independent
 # implementations of the same semantics.
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "events_asof_last_purchase",
-    """
-    WITH p AS (
-        SELECT user_id, ts, MAX(event_id) AS purchase_event_id,
-               arg_max(value, event_id) AS purchase_value
-        FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts),
-    c AS (
-        SELECT event_id AS click_event_id, user_id, ts AS click_ts
-        FROM events WHERE event_type = 'click')
-    SELECT c.click_event_id, c.user_id, c.click_ts,
-           p.ts AS purchase_ts, p.purchase_event_id,
-           p.purchase_value
-    FROM c ASOF LEFT JOIN p
-      ON c.user_id = p.user_id AND c.click_ts >= p.ts
-    """,
-)
-def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each click event joined as-of to the same user's latest
-    purchase at or before it (clicks before any purchase keep NULLs).
-    The attribution-style query every event warehouse runs; purchases
-    are pre-deduplicated per (user, instant) so 'latest' is
-    deterministic."""
-    from .functions.asof import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", F.col("ts").alias("purchase_ts"))
-        .agg(F.max(F.struct("event_id", "value")).alias("s"))
-        .select(
-            "user_id",
-            "purchase_ts",
-            F.col("s.event_id").alias("purchase_event_id"),
-            F.col("s.value").alias("purchase_value"),
-        )
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"),
-        "user_id",
-        F.col("ts").alias("click_ts"),
-    )
-    out = asof_join(
-        clicks,
-        purchases,
-        on=["user_id"],
-        left_ts="click_ts",
-        right_ts="purchase_ts",
-        payload=["purchase_event_id", "purchase_value"],
-        suffix="",
-    )
-    return out.select(
-        "click_event_id",
-        "user_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_event_id",
-        "purchase_value",
-    )
 
 
 @register(
@@ -3409,45 +2069,6 @@ def events_range_click_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register(
-    "events_range_same_user_attribution",
-    """
-    WITH p AS (SELECT event_id, user_id, ts FROM events
-               WHERE event_type = 'purchase'),
-         c AS (SELECT user_id, ts AS click_ts FROM events
-               WHERE event_type = 'click')
-    SELECT p.event_id, p.user_id, p.ts, COUNT(c.click_ts) AS n_clicks
-    FROM p LEFT JOIN c
-      ON c.user_id = p.user_id
-     AND c.click_ts BETWEEN p.ts - INTERVAL 3600 SECOND AND p.ts
-    GROUP BY p.event_id, p.user_id, p.ts
-    """,
-)
-def events_range_same_user_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed range join: same-user clicks in the hour before each
-    purchase. The shuffle key is (user_id, bin) -- equi keys tighten
-    candidates AND spread hot time buckets across users."""
-    from .functions.rangejoin import range_join_agg
-
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts")
-    )
-    return range_join_agg(
-        purchases,
-        clicks,
-        left_ts="ts",
-        right_ts="click_ts",
-        lower_s=-3600,
-        upper_s=0,
-        on=["user_id"],
-        aggs=[F.count("click_ts").alias("n_clicks")],
-    )
-
-
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling (functions/sampling.py): the keep
 # decision is pure integer arithmetic on the row key, so the DuckDB
@@ -3483,30 +2104,6 @@ def documents_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         strata_col="lang",
         default_rate=0.5,
     )
-
-
-@register(
-    "documents_sample_fixed_n",
-    """
-    WITH r AS (
-        SELECT doc_id, lang, source, n_chars,
-               ROW_NUMBER() OVER (
-                   PARTITION BY lang
-                   ORDER BY (doc_id * 2654435761) % 1000003, doc_id
-               ) AS rn
-        FROM documents)
-    SELECT doc_id, lang, source, n_chars FROM r WHERE rn <= 20
-    """,
-)
-def documents_sample_fixed_n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly 20 docs per language (deterministic n-smallest-rank
-    selection) -- the eval-set carve-out shape."""
-    from .functions.sampling import stratified_fixed_n
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    return stratified_fixed_n(docs, key_col="doc_id", n=20, strata_col="lang")
 
 
 # ---------------------------------------------------------------------------
@@ -3547,78 +2144,6 @@ def documents_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="doc_id",
         n={"en": 30, "zh": 60, "de": 40},
         strata_col="lang",
-    )
-
-
-@register(
-    "events_salted_type_stats",
-    """
-    SELECT event_type,
-           COUNT(value) AS n_events,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(14,6))) AS VARCHAR) AS DOUBLE)
-             AS value_sum,
-           MIN(value) AS value_min,
-           MAX(value) AS value_max,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(14,6))) AS VARCHAR) AS DOUBLE)
-             / COUNT(value) AS value_avg
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def events_salted_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type stats through the salted two-phase plan: 5
-    groups x 10k+ rows is exactly the low-cardinality shape where the
-    final shuffle funnels everything into 5 tasks -- the salt spreads
-    phase 1 over 32x more reducers, and the merge is exact."""
-    from .functions.skew import salted_agg
-
-    # SUM rides an exact DECIMAL (per-row cast parity verified; raw
-    # double summation is ORDER-dependent and diverged 1 ulp from the
-    # oracle at sf0.1 -- r11 find); min/max/count are order-free and
-    # stay on the raw double
-    ev = load_table(spark, sf_dir, "events")
-    res = salted_agg(
-        ev.select(
-            "event_type",
-            "value",
-            F.col("value").cast("decimal(14,6)").alias("value_dec"),
-        ),
-        keys=["event_type"],
-        metrics=[
-            ("count", "value", "n_events"),
-            ("sum", "value_dec", "value_sum"),
-            ("min", "value", "value_min"),
-            ("max", "value", "value_max"),
-        ],
-        n_salts=32,
-    )
-    return res.select(
-        "event_type",
-        "n_events",
-        F.col("value_sum").cast("double").alias("value_sum"),
-        "value_min",
-        "value_max",
-        (F.col("value_sum").cast("double") / F.col("n_events")).alias(
-            "value_avg"
-        ),
-    )
-
-
-@register(
-    "events_distinct_users_by_type",
-    """
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_users
-    FROM events GROUP BY event_type
-    """,
-)
-def events_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-type distinct users via the two-phase dedup plan (the
-    wide shuffle runs on (type, user), not type)."""
-    from .functions.skew import distinct_count_skewsafe
-
-    ev = load_table(spark, sf_dir, "events")
-    return distinct_count_skewsafe(
-        ev, keys=["event_type"], col="user_id", alias="n_users"
     )
 
 
@@ -3708,43 +2233,6 @@ def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_interarrival_stats",
-    """
-    WITH g AS (
-        SELECT user_id,
-               epoch_us(ts) - LAG(epoch_us(ts))
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        FROM events)
-    SELECT user_id,
-           COUNT(gap_us) AS n_gaps,
-           SUM(gap_us) / COUNT(gap_us) AS avg_gap_us,
-           MAX(gap_us) AS max_gap_us
-    FROM g GROUP BY user_id
-    """,
-)
-def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user inter-arrival gaps via LAG over (user, ts, event_id)
-    -- exact integer microseconds so the window arithmetic is
-    engine-portable; one shuffle on user_id shared by the window and
-    the aggregate."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = ev.select(
-        "user_id",
-        (
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-        ).alias("gap_us"),
-    )
-    return g.groupBy("user_id").agg(
-        F.count("gap_us").alias("n_gaps"),
-        (F.sum("gap_us") / F.count("gap_us")).alias("avg_gap_us"),
-        F.max("gap_us").alias("max_gap_us"),
-    )
-
-
-@register(
     "part_fuzzy_name_pairs",
     """
     WITH p AS (SELECT p_partkey, p_name, p_brand,
@@ -3779,147 +2267,9 @@ def part_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's BIGINT (dtype_audit zero-warning discipline)
 
 
-@register(
-    "documents_keyword_tfidf",
-    """
-    WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-               FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM w
-                WHERE term IN ('spark', 'merge', 'window')
-                GROUP BY doc_id, term),
-         dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM w
-                   WHERE term IN ('spark', 'merge', 'window')
-                   GROUP BY term),
-         n AS (SELECT COUNT(*) AS n FROM documents)
-    SELECT tf.doc_id, SUM(tf.tf * n.n / dfreq.df) AS score
-    FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-    GROUP BY tf.doc_id
-    """,
-)
-def documents_keyword_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword relevance over the corpus: tf * N/df summed over the
-    query terms (log-free idf keeps the arithmetic engine-exact)."""
-    from .functions.match import keyword_tfidf_scores
-
-    docs = load_table(spark, sf_dir, "documents")
-    return keyword_tfidf_scores(docs, ["spark", "merge", "window"])
-
-
 # (events_value_median_by_type retired r7: the sketch bounds-check row
 # now computes exact per-type quantiles inside its verifier, and the
 # winsorized-stats row keeps the exact-percentile shape driver-covered.)
-
-
-@register(
-    "events_value_winsorized_stats",
-    """
-    WITH b AS (SELECT event_type,
-                      quantile_cont(value, 0.05) AS p05,
-                      quantile_cont(value, 0.95) AS p95
-               FROM events GROUP BY event_type)
-    SELECT e.event_type, b.p05, b.p95,
-           SUM(LEAST(GREATEST(e.value, b.p05), b.p95))
-               / COUNT(e.value) AS winsorized_mean
-    FROM events e JOIN b ON e.event_type = b.event_type
-    GROUP BY e.event_type, b.p05, b.p95
-    """,
-)
-def events_value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust (winsorized) mean: clip at the exact interpolated
-    p05/p95 per group, then average -- outlier-resistant feature
-    stats. Percentile bounds broadcast back onto the fact side; exact
-    percentile needs the per-group sort, so at 100 TB swap in the
-    percentile_approx sketch bounds (same clip step)."""
-    ev = load_table(spark, sf_dir, "events")
-    bounds = ev.groupBy("event_type").agg(
-        F.percentile("value", 0.05).alias("p05"),
-        F.percentile("value", 0.95).alias("p95"),
-    )
-    return (
-        ev.join(F.broadcast(bounds), "event_type")
-        .groupBy("event_type", "p05", "p95")
-        .agg(
-            (
-                F.sum(F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95")))
-                / F.count("value")
-            ).alias("winsorized_mean")
-        )
-    )
-
-
-@register(
-    "events_click_purchase_funnel",
-    """
-    WITH f AS (SELECT user_id,
-                      MIN(ts) FILTER (WHERE event_type = 'click') AS first_click
-               FROM events GROUP BY user_id),
-         p AS (SELECT e.user_id, MIN(e.ts) AS first_purchase_after
-               FROM events e JOIN f ON e.user_id = f.user_id
-               WHERE e.event_type = 'purchase' AND e.ts > f.first_click
-               GROUP BY e.user_id)
-    SELECT f.user_id, f.first_click, p.first_purchase_after,
-           (p.first_purchase_after IS NOT NULL) AS converted
-    FROM f LEFT JOIN p ON f.user_id = p.user_id
-    """,
-)
-def events_click_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion funnel: per user, first click and first purchase
-    strictly after it. Conditional MIN + one broadcast-joined second
-    pass -- the standard two-stage funnel shape (stage N+1 needs stage
-    N's anchor)."""
-    ev = load_table(spark, sf_dir, "events")
-    f = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias(
-            "first_click"
-        )
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(f, "user_id")
-        .filter(F.col("ts") > F.col("first_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_purchase_after"))
-    )
-    return f.join(p, "user_id", "left").select(
-        "user_id",
-        "first_click",
-        "first_purchase_after",
-        F.col("first_purchase_after").isNotNull().alias("converted"),
-    )
-
-
-@register(
-    "dedup_ngram_containment",
-    """
-    WITH sh AS (
-        SELECT doc_id, lang,
-               list_distinct([substr(norm, i, 3)
-                   for i in range(1, greatest(length(norm) - 2, 1) + 1)]) AS sh
-        FROM (SELECT doc_id, lang,
-                     regexp_replace(lower(text), '\\s+', ' ', 'g') AS norm
-              FROM documents))
-    SELECT id_a, id_b, containment_ab, containment_ba FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh)
-                   AS containment_ab,
-               CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(b.sh)
-                   AS containment_ba
-        FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-    WHERE containment_ab >= 0.5 OR containment_ba >= 0.5
-    """,
-)
-def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric near-dup verifier: shingle containment catches a doc
-    embedded in a larger one where union-normalized Jaccard stays low
-    (concatenated corpora / quote farms)."""
-    from .functions.dedup import ngram_containment_pairs
-
-    return ngram_containment_pairs(
-        load_table(spark, sf_dir, "documents"),
-        blocking_col="lang",
-        shingle_k=3,
-        threshold=0.5,
-    )
 
 
 _ANN_FILTERED_ORACLE = f"""
@@ -4286,32 +2636,6 @@ def q4_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q13_order_count_distribution",
-    """
-    WITH per_cust AS (
-        SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-        FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_custkey)
-    SELECT c_count, COUNT(*) AS custdist
-    FROM per_cust
-    GROUP BY c_count
-    """,
-)
-def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 silhouette: LEFT JOIN preserving order-less customers,
-    then the distribution of per-customer order counts. Two shuffles
-    (custkey join+agg, then the tiny distribution agg)."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-@register(
     "q18_large_volume_orders",
     """
     WITH big AS (
@@ -4522,35 +2846,6 @@ def time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "lineitem_stats_by_flag",
-    """
-    SELECT l_returnflag,
-           COUNT(*) AS n,
-           ROUND(STDDEV_SAMP(l_quantity), 6) AS qty_stddev,
-           ROUND(VAR_SAMP(l_discount), 6) AS disc_var,
-           ROUND(CORR(l_quantity, l_extendedprice), 6) AS qty_price_corr,
-           ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 6) AS qty_price_covar
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-)
-def lineitem_stats_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregate shapes (stddev/variance/correlation/
-    covariance) per return flag -- single-pass moment aggregation,
-    map-side partials, 3 output groups. Rounded to 6 decimals on both
-    engines: moment merges are FP-order-dependent at the 1e-12 level,
-    far below the comparison precision."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.stddev_samp("l_quantity"), 6).alias("qty_stddev"),
-        F.round(F.var_samp("l_discount"), 6).alias("disc_var"),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price_corr"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 6).alias("qty_price_covar"),
-    )
-
-
-@register(
     "documents_pii_redaction",
     """
     WITH synth AS (
@@ -4681,89 +2976,6 @@ def documents_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame
     return remove_repeated_segments(docs, seg_words=10, max_docs=1)
 
 
-@register(
-    "customer_balance_ranks",
-    """
-    SELECT c_custkey, c_mktsegment,
-           DENSE_RANK()   OVER w AS bal_dense_rank,
-           NTILE(4)       OVER w AS bal_quartile,
-           ROUND(PERCENT_RANK() OVER w, 9) AS bal_pct_rank,
-           ROUND(CUME_DIST()    OVER w, 9) AS bal_cume_dist
-    FROM customer
-    WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-    """,
-)
-def customer_balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking-function family (dense_rank / ntile / percent_rank /
-    cume_dist) per market segment -- one shuffle on the segment key
-    serves all four windows (shared partitioning + ordering);
-    deterministic tiebreak on the key column."""
-    from pyspark.sql.window import Window
-
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), "c_custkey"
-    )
-    return c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.dense_rank().over(w).alias("bal_dense_rank"),
-        F.ntile(4).over(w).alias("bal_quartile"),
-        F.round(F.percent_rank().over(w), 9).alias("bal_pct_rank"),
-        F.round(F.cume_dist().over(w), 9).alias("bal_cume_dist"),
-    )
-
-
-# ---- round-7 registrations (mid-order: first driver rows due r8) ----
-
-_PACK_SEQUENCES_ORACLE = """
-WITH f AS (
-    SELECT doc_id,
-           COALESCE(len(regexp_extract_all(text,
-                        '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')), 0)
-               AS n_bpe_tokens,
-           md5(CAST(doc_id AS VARCHAR)) AS h,
-           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 256
-               AS bucket
-    FROM documents),
-b AS (SELECT bucket, SUM(n_bpe_tokens) AS btok FROM f GROUP BY 1),
-c AS (
-    SELECT bucket,
-           COALESCE(SUM(btok) OVER (ORDER BY bucket
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS bucket_offset
-    FROM b),
-d AS (
-    SELECT f.doc_id, f.n_bpe_tokens,
-           c.bucket_offset
-           + COALESCE(SUM(f.n_bpe_tokens) OVER (PARTITION BY f.bucket
-                      ORDER BY f.h, f.doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS global_offset
-    FROM f JOIN c USING (bucket))
-SELECT doc_id,
-       CAST(n_bpe_tokens AS BIGINT) AS n_bpe_tokens,
-       CAST(global_offset AS BIGINT) AS global_offset,
-       CAST(global_offset // 2048 AS BIGINT) AS seq_id,
-       CAST(global_offset % 2048 AS BIGINT) AS seq_offset
-FROM d
-"""
-
-
-@register("documents_pack_sequences", _PACK_SEQUENCES_ORACLE)
-def documents_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence-packing placement map (functions/corpus.py
-    pack_sequences): every doc's global token offset and first-token
-    (seq_id, seq_offset) under 2048-token pack-then-chunk -- the
-    batch-construction step a pretraining writer consumes. The global
-    order is the bucket-coarse md5 construction shared with
-    token_budget_sample: a <=256-row bucket window plus bounded
-    intra-bucket windows, no unbounded sort on either engine."""
-    from .functions.corpus import pack_sequences
-
-    return pack_sequences(load_table(spark, sf_dir, "documents"), seq_tokens=2048)
-
-
 _BIGRAM_LOGPROB_ORACLE = """
 WITH toks AS (
     SELECT doc_id,
@@ -4790,7 +3002,7 @@ GROUP BY doc_id
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc mean conditional bigram log10-probability under the
     corpus's own bigram LM (functions/text.py bigram_logprob) -- the
-    order-sensitive quality tier above text_unigram_logprob: word
+    order-sensitive quality tier above a unigram model: word
     salad scores low even when its unigrams are common. Two
     map-side-combined count shuffles build the model, one scoring join
     and one rollup apply it. Hash-hardened BEFORE its first driver row
@@ -4869,7 +3081,7 @@ _PQ_INDEX_CACHE: dict[tuple, tuple] = {}
 def _pq_index(spark: SparkSession, sf_dir: str):
     """Session-cached PQ index (codebook + encoded codes + corpus
     count) for the recall-bounds row: the build-once/probe-many
-    contract of functions/pq.py, same accounting as _ivf_index -- the
+    contract of functions/pq.py, same accounting as _ivf_wh -- the
     deterministic one-time build (pq_train + pq_encode, both exact
     integer constructions) is charged to the session's cold pass, and
     every probe reads the identical pinned frames."""
@@ -4923,7 +3135,7 @@ def ann_pq_recall_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_topk calls -> ONE ADC pass over the session-cached index): the
     trained codebook + encoded codes are the build-once/probe-many
     index product, cached per (session, sf_dir) exactly like
-    _ivf_index / _ivf_wh (the one-time build lands in the cold pass);
+    _ivf_wh (the one-time build lands in the cold pass);
     each measured call then scans the codes ONCE with a corpus-length
     shortlist, giving the complete ADC ranking as a pinned pair frame
     -- the ADC top-5 and top-32 legs are ONE row_number window over
@@ -5064,7 +3276,7 @@ _JSONL_LANDING_CACHE: dict[tuple, str] = {}
 
 def _jsonl_landing_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Write-once-per-session landing-zone JSONL derived from documents
-    (same accounting as _ivf_index / the merge-verb scratch templates:
+    (same accounting as _ivf_wh / the merge-verb scratch templates:
     fixture construction lands in the cold pass; measured reps pay only
     the ingest under test)."""
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -5133,10 +3345,7 @@ def documents_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-8 registrations (MID-order: outside the 50-row driver cap this
-# round per the rotation note; oracles locally verified at sf0.01 and
-# benched from day 1; first driver rows due r9): model-based data
-# selection (functions/selection.py).
+# Model-based data selection (functions/selection.py)
 # ---------------------------------------------------------------------------
 
 _TOKS_SQL = """
@@ -5220,59 +3429,6 @@ def documents_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPAN_SCRUB_ORACLE = """
-WITH toks AS (
-    SELECT doc_id,
-           COALESCE(list_filter(regexp_split_to_array(trim(regexp_replace(
-               lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+'),
-               x -> x <> ''), []) AS a
-    FROM documents),
-inst AS (
-    SELECT doc_id, s.pos AS pos, s.gram AS gram
-    FROM (SELECT doc_id,
-                 unnest([ {'pos': i, 'gram': array_to_string(a[i:i+7], ' ')}
-                          for i in range(1, len(a) - 8 + 2) ]) AS s
-          FROM toks)),
-dup AS (
-    SELECT gram
-    FROM (SELECT DISTINCT doc_id, gram FROM inst)
-    GROUP BY gram HAVING COUNT(*) >= 2),
-flags AS (
-    SELECT doc_id, list_sort(list(DISTINCT pos)) AS ss
-    FROM inst JOIN dup USING (gram) GROUP BY doc_id),
-j AS (
-    SELECT t.doc_id, t.a, COALESCE(f.ss, CAST([] AS INTEGER[])) AS ss
-    FROM toks t LEFT JOIN flags f USING (doc_id)),
-k AS (
-    SELECT doc_id, a,
-           [ a[i] for i in range(1, len(a) + 1)
-             if len(list_filter(ss, s -> s <= i AND i < s + 8)) = 0 ] AS kept
-    FROM j)
-SELECT doc_id,
-       CAST(len(a) AS BIGINT) AS n_tokens,
-       CAST(len(a) - len(kept) AS BIGINT) AS n_removed,
-       COALESCE(array_to_string(kept, ' '), '') AS clean_text
-FROM k
-"""
-
-
-@register("documents_span_scrub", _SPAN_SCRUB_ORACLE)
-def documents_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus exact-substring scrub (functions/corpus.py
-    remove_duplicated_spans): every token position covered by a word
-    8-gram repeated in >=2 distinct docs is struck and the survivors
-    reassembled in order -- the removal ACTION on the
-    duplicated_span_stats signal (same gram doc-frequency model, same
-    AQE-skew-split instance join, plus one flagged-starts rollup and a
-    per-row array reassembly). Hashed bytes are BIGINT counts plus the
-    reconstructed token string -- no floats anywhere."""
-    from .functions.corpus import remove_duplicated_spans
-
-    return remove_duplicated_spans(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", "n_tokens", "n_removed", "clean_text"
-    )
-
-
 _SEM_DEDUP_ORACLE = f"""
 WITH q AS (
     SELECT vec_id, {_QVEC_SQL} AS qvec FROM embeddings),
@@ -5340,7 +3496,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook the IVF family probes), within-cell cosine pairs, and the
     deterministic keep-farthest-from-centroid dominance rule. The
     oracle replays the identical exact-int construction in SQL --
-    Lloyd-1 assignment CTEs shared textually with _ANN_IVF_ORACLE,
+    Lloyd-1 assignment CTEs,
     full within-cell pairs (every cell is under the 1024 cap at this
     SF, so the Spark side takes the exact all-pairs kernel path) --
     and the hashed bytes are integer-only (ids, cells, 0/1 verdicts).
@@ -5571,13 +3727,6 @@ def orders_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         not_null=["o_custkey", "o_orderdate"],
         fk={"o_custkey": (customer, "c_custkey")},
     )
-
-
-# ---------------------------------------------------------------------------
-# r9 mid-order registrations (first driver rows due r10, per the r8
-# VERDICT directive-4 designations). All five passed the hardened
-# tools/dtype_audit.py hard-error gate before entering this file.
-# ---------------------------------------------------------------------------
 
 
 @register(
@@ -5870,51 +4019,6 @@ def documents_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return source_overlap_matrix(load_table(spark, sf_dir, "documents"))
 
 
-# ---------------------------------------------------------------------------
-# r10 mid-order registrations (first driver rows due r11, per the r9
-# VERDICT directive-6 designations). All four passed the hardened
-# tools/dtype_audit.py hard-error gate before entering this file.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "quality_binned_sample",
-    """
-    WITH b AS (
-        SELECT doc_id, lang, source, n_chars,
-               (CASE WHEN n_chars >= 150 THEN 1 ELSE 0 END
-              + CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS bin
-        FROM documents WHERE n_chars IS NOT NULL)
-    SELECT doc_id, lang, source, n_chars, CAST(bin AS BIGINT) AS quality_bin
-    FROM b
-    WHERE (doc_id * 2654435761) % 1000003 <
-          (CASE bin WHEN 0 THEN 250000 WHEN 1 THEN 600001 ELSE 900002 END)
-    """,
-)
-def quality_binned_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-curriculum mixture (functions/sampling.py
-    quality_binned_sample): keep low-quality docs at 25%, mid at 60%,
-    high at 90%, binned by FIXED n_chars cut points (150, 300) -- the
-    "sample low-quality text down" corpus recipe. Binning and the keep
-    decision are both pure pushed filters (zero shuffle at any scale);
-    the deterministic multiplicative-hash rank and the threshold
-    integers int(rate * 1_000_003) are the exact cross-engine sampler
-    family math (documents_stratified_sample precedent), and the
-    emitted bin is BIGINT."""
-    from .functions.sampling import quality_binned_sample as qbs
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    return qbs(
-        docs,
-        key_col="doc_id",
-        score_col="n_chars",
-        thresholds=[150.0, 300.0],
-        rates=[0.25, 0.6, 0.9],
-    )
-
-
 @register(
     "tokenizer_stats",
     """
@@ -6018,82 +4122,6 @@ def inference_batch_plan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return batch_plan_stats(plan)
 
 
-_DATACARD_ORACLE = r"""
-WITH b AS (
-  SELECT source, lang, text,
-         (text IS NOT NULL AND length(trim(text)) > 0) AS nonempty,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_words,
-         length(regexp_replace(text, '\s+', '', 'g')) AS n_word_chars,
-         len(regexp_extract_all(text, '#|\.\.\.')) AS n_symbols,
-         regexp_split_to_array(text, '\n') AS lines,
-         regexp_split_to_array(trim(text), '\s+') AS words,
-         lower(text) AS low,
-         length(text) AS chars
-  FROM documents),
-c AS (
-  SELECT source, lang, text, nonempty, n_words, n_word_chars, n_symbols,
-         chars,
-         len(lines) AS n_lines,
-         len(list_filter(lines, ln -> regexp_matches(trim(ln), '^[-*•]'))) AS n_bullet,
-         len(list_filter(lines, ln -> regexp_matches(rtrim(ln), '\.\.\.$'))) AS n_ell,
-         len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha_words,
-         (CASE WHEN regexp_matches(low, '\bthe\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bbe\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bto\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bof\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\band\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bthat\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bhave\b') THEN 1 ELSE 0 END
-        + CASE WHEN regexp_matches(low, '\bwith\b') THEN 1 ELSE 0 END) AS n_stop
-  FROM b),
-v AS (
-  SELECT *,
-         (n_words >= 50 AND n_words <= 100000
-          AND n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words
-          AND 10 * n_symbols <= n_words AND 10 * n_bullet <= 9 * n_lines
-          AND 10 * n_ell <= 3 * n_lines AND 5 * n_alpha_words >= 4 * n_words
-          AND n_stop >= 1) AS gopher_pass
-  FROM c)
-SELECT source, lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(CASE WHEN NOT nonempty THEN 1 END) AS BIGINT) AS n_empty,
-       CAST(COUNT(DISTINCT CASE WHEN nonempty THEN text END)
-            AS BIGINT) AS n_distinct_texts,
-       CAST(COUNT(CASE WHEN nonempty THEN 1 END)
-            - COUNT(DISTINCT CASE WHEN nonempty THEN text END)
-            AS BIGINT) AS n_exact_dups,
-       CAST(COUNT(CASE WHEN gopher_pass THEN 1 END) AS BIGINT) AS n_gopher_pass,
-       CAST(COUNT(CASE WHEN nonempty AND n_words < 50 THEN 1 END)
-            AS BIGINT) AS n_short,
-       CAST(SUM(COALESCE(chars, 0)) AS BIGINT) AS total_chars,
-       CAST(SUM(CASE WHEN nonempty THEN n_words ELSE 0 END)
-            AS BIGINT) AS total_words,
-       CAST(MIN(chars) AS BIGINT) AS min_chars,
-       CAST(MAX(chars) AS BIGINT) AS max_chars,
-       CAST(SUM(CASE WHEN nonempty THEN n_stop ELSE 0 END)
-            AS BIGINT) AS total_stopword_hits
-FROM v GROUP BY source, lang
-"""
-
-
-@register("corpus_datacard", _DATACARD_ORACLE)
-def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(source, lang) corpus data card (functions/datacard.py
-    corpus_datacard; Gebru et al. 2021 datasheets): doc/char/word
-    totals, exact-duplicate rate via distinct sha2 digests, the Gopher
-    verdict pass count (rule expressions composed INLINE -- one
-    conditional-agg pass, no doc-grain join), empty/short counts, and
-    exact min/max lengths. The two percentile_approx distribution
-    fields are EXCLUDED from the oracle surface (sketch-approximate by
-    design; everything hashed here is BIGINT or a group key).
-    ``min_stopwords=1`` for the same synthetic-vocabulary reason as
-    documents_gopher_rules."""
-    from .functions.datacard import corpus_datacard as dcard
-
-    docs = load_table(spark, sf_dir, "documents")
-    return dcard(docs, min_stopwords=1).drop("median_chars", "p95_chars")
-
-
 _WINNOW_ORACLE = r"""
 WITH n AS (
   SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS nm
@@ -6136,10 +4164,6 @@ def documents_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, k=8, w=4)
 
-
-# -- r11 MID-order registrations: the r10 VERDICT directive-4 oracle
-# designations for the r10 session ops. Positions 51+, outside the
-# driver's 50-row cap; first driver rows due r12 (see rotation note).
 
 _SFT_SPANS_ORACLE = r"""
 WITH t AS (
@@ -6486,16 +4510,6 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Round-12 registrations (MID-order: outside the 50-row driver cap this
-# round per the rotation note; each locally verified via
-# tools/check_oracle.py at sf0.01 AND sf0.001 + a clean hard-error
-# dtype_audit before registration; first driver rows due r13). The
-# r11 VERDICT directives 2-3: oracle slots for the r11 session ops
-# (NDV ledger, classifier training, semantic decontamination) and the
-# designated r13 candidates (preference pairs, winnowing near-dup).
-# ---------------------------------------------------------------------------
-
 _NDV_BOUNDS_ORACLE = """
 SELECT 'doc_id' AS col_name, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_exact,
        TRUE AS within_bounds
@@ -6823,8 +4837,7 @@ FROM capped WHERE rn <= 8
 @register("preference_pairs_orders", _PREFERENCE_ORACLE)
 def preference_pairs_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPO/RLHF preference-pair assembly (functions/preference.py
-    preference_pairs, all_pairs strategy; the r11 note's designated
-    r13 candidate): orders as a ratings table (prompt = customer,
+    preference_pairs, all_pairs strategy): orders as a ratings table (prompt = customer,
     response = order, score = total price), every strictly-ordered
     pair kept gap-descending up to 8 per prompt. Fully deterministic
     cross-engine: scores are the SAME parquet doubles on both sides,
@@ -6904,8 +4917,7 @@ WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
 def winnow_near_dup_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-candidates near-dup pairs with exact shingle-Jaccard
     verification (functions/text.py winnow_near_dup_pairs at the
-    operator defaults; the r11 note's designated r13 candidate):
-    MOSS fingerprints (k=16, w=8) -> hot-bucket-capped overlap join
+    operator defaults): MOSS fingerprints (k=16, w=8) -> hot-bucket-capped overlap join
     (>= 2 shared fingerprints) -> exact 5-shingle Jaccard >= 0.5.
     Everything the hash touches is exact integers except the final
     jaccard, an exact-int division (deterministic IEEE); the packed
@@ -6920,9 +4932,7 @@ def winnow_near_dup_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The image near-dup replay (registered r12, upgrading the r13
-# candidacy note after the hex-slice byte replay proved byte-exact):
-# synth image payloads (doc_id % 3 = 0, payload = UTF-8 text bytes),
+# The image near-dup replay: synth image payloads (doc_id % 3 = 0, payload = UTF-8 text bytes),
 # the locality-preserving stub grid (per-cell byte averages over
 # hex-string slices), dHash bit assembly through HUGEINT with the
 # signed-64 fold, then the pigeonhole chunk join with the hot-bucket
@@ -7009,9 +5019,7 @@ def image_near_dup_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_near_dup_pairs(media, max_hamming=6)
 
 
-# The audio near-dup replay (registered r13, executing the r12 note's
-# designated candidacy; DENSIFIED r14 per the r13 VERDICT's What's
-# wrong #1): the image_near_dup_pairs_docs replay with a 65x1
+# The audio near-dup replay: the image_near_dup_pairs_docs replay with a 65x1
 # energy-envelope grid instead of 9x8 -- same hex-slice byte averages
 # (the Haitsma-Kalker-shape envelope under the stub codec), same dHash
 # comparisons folded through HUGEINT to signed-64, same capped
@@ -7232,10 +5240,8 @@ def video_near_dup_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_near_dup_pairs(media)
 
 
-# The unified media hash kernel replay (registered r13, the third
-# mid-order registration -- matched by events_hourly_rollup in
-# _NEXT_RETIREMENT_CANDIDATES): multimodal.media_hash_rows is the
-# media landing zone's ONE-PASS hash kernel (streaming/jobs.py
+# The unified media hash kernel replay: multimodal.media_hash_rows is
+# the media landing zone's ONE-PASS hash kernel (streaming/jobs.py
 # media_ingest_apply persists exactly these rows as its phash ledger
 # sidecar), so driver-verifying it verifies the zone's signature
 # surface. The SQL is the mechanical union of the three proven
@@ -7398,8 +5404,8 @@ def media_hash_rows_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mid-edit twins (media_id = doc_id + 10,000,000 for every
 # doc_id % 30 = 0 image, so the canonical re-point actually fires at
 # every SF -- 17 collapsed twins at sf0.01), the recursive-CTE
-# min-reachable connected components (the retired dedup_clusters
-# replay, still driver-proven), and a second recursive CC over the
+# min-reachable connected components (the _CLUSTERS_ORACLE replay,
+# driver-proven through dedup_keep_best_documents), and a second recursive CC over the
 # bipartite (media_cluster*2, text_cluster*2+1) graph for
 # pair_group. Links are derived in-query (no link table in the
 # synthetic corpus): image doc_id -> caption doc_id + 1, its twin ->
@@ -7521,7 +5527,7 @@ def media_text_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_cluster, pair_group) where pair_group is the bipartite CC
     over both sides' cluster ids -- the leakage_safe_split group key.
     Every stage exact integers (image dHash replay + two recursive-CTE
-    min-reachable CCs, dedup_clusters precedent)."""
+    min-reachable CCs, the _CLUSTERS_ORACLE precedent)."""
     from .functions.multimodal import (
         assemble_media_text_pairs,
         media_dup_clusters,
@@ -7559,10 +5565,8 @@ def media_text_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assemble_media_text_pairs(docs, links, clusters, quality_col="n_chars")
 
 
-# The media datacard replay (registered r14, the second r14 mid --
-# matched by events_salted_type_stats in _NEXT_RETIREMENT_CANDIDATES):
-# one conditional-agg pass per media type over the synthetic media
-# payloads. Everything is exact-integer except avg_bytes, a
+# The media datacard replay: one conditional-agg pass per media type
+# over the synthetic media payloads. Everything is exact-integer except avg_bytes, a
 # deterministic exact-int double division (sum/count of bigints, the
 # jaccard precedent). r15 (the r14 VERDICT's What's wrong #3):
 # synth_media_df now plants NULL meta on every 11th row, so
@@ -7614,17 +5618,14 @@ def media_datacard_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media_datacard(synth_media_df(docs))
 
 
-# ---- round-15 registrations (mid-order: first driver rows due r16) ----
-
-# Interleaved multimodal packing replay (r14 VERDICT #3 -- matched by
-# corpus_contamination_pairs in _NEXT_RETIREMENT_CANDIDATES): the
+# Interleaved multimodal packing replay (r14 VERDICT #3): the
 # pack_sequences bucket construction over example budgets of
 # text tokens + n_frames*16 vision tokens per linked media, then the
 # within-example media-first item layout. Every media cost replays the
 # deterministic stub decode's n_frames arithmetic (image 1, audio
 # 1 + bytes % 1000, video 1 + bytes % 120 -- functions/multimodal.py
-# _fake_decode); every offset is integer prefix-sum arithmetic, the
-# documents_pack_sequences precedent. Links: every doc carries its own
+# _fake_decode); every offset is integer prefix-sum arithmetic.
+# Links: every doc carries its own
 # synthetic media, and every image doc's media ALSO captions the next
 # doc (multi-item examples; the EXISTS drop mirrors the left_semi).
 _PACK_MULTIMODAL_ORACLE = """
@@ -7711,7 +5712,7 @@ def documents_pack_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic). Emits the per-ITEM placement rows -- media
     placeholders before the text span -- under 2048-token
     pack-then-chunk; same bucket-coarse md5 global order as
-    documents_pack_sequences, no unbounded sort on either engine."""
+    corpus.pack_sequences, no unbounded sort on either engine."""
     from .functions.corpus import pack_multimodal_sequences
     from .functions.multimodal import decode_media, synth_media_df
 
@@ -7730,8 +5731,7 @@ def documents_pack_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Media datacard drift replay (r14 VERDICT #6 -- matched by
-# ann_lsh_bucket_topk in _NEXT_RETIREMENT_CANDIDATES): two
+# Media datacard drift replay (r14 VERDICT #6): two
 # conditional-agg cards full-outer-joined on media_type, integer
 # old/new/delta fields only (avg_bytes stays on the card surface), the
 # rel_threshold=0.5 double comparison rewritten as the exactly-
@@ -7818,8 +5818,7 @@ def media_datacard_drift_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Media decode-rule verdict replay (r14 VERDICT #5 -- matched by
-# sat_load_lineitem_composite in _NEXT_RETIREMENT_CANDIDATES): the
+# Media decode-rule verdict replay (r14 VERDICT #5): the
 # landing zone's structural quality gate and this row share ONE rule
 # kernel (multimodal.media_decode_rule_verdicts), so the driver row
 # verifies exactly what the gate rejects on. The stub decode is pure
@@ -7872,10 +5871,9 @@ def media_decode_rules_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Packed token-stream replay (the packing WRITER, r15 -- matched by
-# documents_pack_sequences in _NEXT_RETIREMENT_CANDIDATES: this oracle
-# replays that row's ENTIRE placement CTE before exploding per-token,
-# the exact-subset retirement precedent). Text-only rendering (no
+# Packed token-stream replay (the packing WRITER): this oracle
+# replays corpus.pack_sequences' whole placement construction before
+# exploding per-token. Text-only rendering (no
 # links), hashed-vocab ids: token_id = md5-prefix % 32768, the same
 # md5 integer convention every bucket hash in this file uses; one
 # row per token position, zero-token docs emit nothing.
@@ -7938,12 +5936,10 @@ def documents_packed_token_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# Modality-budgeted sampling replay (r15 -- matched by
-# corpus_token_budget_sample in _NEXT_RETIREMENT_CANDIDATES: this
-# oracle replays that row's ENTIRE lang-CASE + bucket-greedy prefix
-# construction and extends the budget cost with the media bill, the
-# exact-subset retirement precedent; empty links degenerate to the
-# retired row byte-exactly). Links: docs with doc_id % 5 != 0 carry
+# Modality-budgeted sampling replay: this oracle replays
+# corpus.token_budget_sample's whole lang-CASE + bucket-greedy prefix
+# construction and extends the budget cost with the media bill (empty
+# links degenerate to the text-only token budget). Links: docs with doc_id % 5 != 0 carry
 # their own synthetic media (so text-only examples exist and the
 # left-join COALESCE leg discriminates); image media additionally
 # caption the next doc (multi-item bills); every media cost replays

@@ -1,10 +1,9 @@
 """Persisted IVF index: build-once/probe-many as warehouse tables.
 
-The per-session eager-checkpoint cache (queries_catalog._ivf_index) is
-the in-process shadow of this; these tests pin the durable form: a
-codebook + cell-partitioned assignment table, probed without any
-re-scoring, and searched by external query vectors with a
-partition-pruned read.
+The catalog's per-session cache (queries_catalog._ivf_wh) builds this
+index once per session; these tests pin the durable form: a codebook +
+cell-partitioned assignment table, probed without any re-scoring, and
+searched by external query vectors with a partition-pruned read.
 """
 
 import pytest

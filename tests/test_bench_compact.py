@@ -13,12 +13,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
-from pg_auto_dw_spark import queries_catalog as qc  # noqa: E402
 from tools.bench_compare import decode_q  # noqa: E402
 
 
 def _benched_order() -> list[str]:
-    return [n for n in bench.HEADLINE if n not in qc._RETIRED]
+    return bench.HEADLINE
 
 
 def _encode(timings: dict[str, float]) -> dict:

@@ -21,8 +21,6 @@ def test_rotation_sets_disjoint_and_complete():
     registered = set(qc._QUERIES)
     assert pri <= registered
     assert dep <= registered
-    # nothing retired may appear in either rotation list
-    assert not (qc._RETIRED & (pri | dep))
 
 
 def test_queries_order_is_priority_mid_deprioritized():
@@ -33,16 +31,16 @@ def test_queries_order_is_priority_mid_deprioritized():
     # mid-order rows are exactly the registrations in NEITHER list
     expected_mid = [
         n for n in qc._QUERIES
-        if n not in set(qc._PRIORITY) | set(qc._DEPRIORITIZED) | qc._RETIRED
+        if n not in set(qc._PRIORITY) | set(qc._DEPRIORITIZED)
     ]
     assert mid == expected_mid
 
 
 def test_no_row_more_than_one_round_stale():
-    """Every non-retired registration sits in _PRIORITY (verified this
-    round), _DEPRIORITIZED (verified last round), or mid-order (new,
-    first driver row next round). Anything else would rot unverified."""
-    covered = set(qc._PRIORITY) | set(qc._DEPRIORITIZED) | qc._RETIRED
+    """Every registration sits in _PRIORITY (verified this round),
+    _DEPRIORITIZED (verified last round), or mid-order (new, first
+    driver row next round). Anything else would rot unverified."""
+    covered = set(qc._PRIORITY) | set(qc._DEPRIORITIZED)
     uncovered = [n for n in qc._QUERIES if n not in covered]
     # mid-order registrations are allowed, but each must be matched by
     # a DESIGNATED retirement candidate so the next rotation's
@@ -60,13 +58,11 @@ def test_no_row_more_than_one_round_stale():
 def test_retirement_candidates_are_resting_and_distinct():
     """Candidates must come from the RESTING set (they were verified
     last round, so retiring them never loses an in-window row -- the
-    r11 pii_scan lesson) and must not collide with anything already
-    retired."""
+    r11 pii_scan lesson)."""
     cands = qc._NEXT_RETIREMENT_CANDIDATES
     assert len(set(cands)) == len(cands)
     not_resting = [c for c in cands if c not in set(qc._DEPRIORITIZED)]
     assert not_resting == [], not_resting
-    assert not (set(cands) & qc._RETIRED)
 
 
 def test_every_rotation_row_has_an_oracle():
@@ -77,10 +73,18 @@ def test_every_rotation_row_has_an_oracle():
     assert missing == [], missing
 
 
-def test_retired_builders_stay_benched():
-    bench = qc.bench_queries()
-    gone = [n for n in qc._RETIRED if n in qc._QUERIES and n not in bench]
-    assert gone == []
+def test_every_registration_is_a_live_row():
+    """Retiring a row deletes its builder and oracle: a registration
+    outside queries() would be code nothing verifies or benches."""
+    assert set(qc._QUERIES) == set(qc.queries())
+
+
+def test_bench_headline_rows_are_live():
+    import bench  # the repo root is on sys.path via conftest.py
+
+    live = qc.queries()
+    missing = [n for n in bench.HEADLINE if n not in live]
+    assert missing == [], missing
 
 
 def test_registration_docstrings_match_replay_parameters():

@@ -93,7 +93,7 @@ def test_no_unbounded_sql_cache_in_package():
     Allowed form: a persist() paired with an unpersist() in the same
     file (bounded lifetime, as the hub/sat/link loaders do). Everything
     else must use localCheckpoint (RDD block pin) or an explicit
-    eager-checkpointed per-session index (queries_catalog._ivf_index).
+    eager-checkpointed per-session index (queries_catalog._ivf_wh).
     """
     import os
     import re

@@ -38,9 +38,8 @@ def decode_q(art: dict) -> dict:
 
     _sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
-    from pg_auto_dw_spark import queries_catalog
 
-    order = [n for n in bench.HEADLINE if n not in queries_catalog._RETIRED]
+    order = bench.HEADLINE
     if len(order) != len(art["q"]) or (
         hashlib.md5(",".join(order).encode()).hexdigest()[:8] != art.get("qk")
     ):

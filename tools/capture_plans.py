@@ -36,8 +36,8 @@ def main() -> None:
 
     spark = get_spark("capture_plans")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    qmap = queries_catalog.bench_queries()
-    names = [n for n in bench.HEADLINE if n not in queries_catalog._RETIRED]
+    qmap = queries_catalog.queries()
+    names = bench.HEADLINE
     if only:
         names = [n for n in names if n in only]
     for name in names:

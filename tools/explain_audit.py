@@ -17,21 +17,18 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDIT = [
-    "hub_load_customer",
+    "hub_load_lineitem_composite",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_local_supplier_volume",
     "dedup_minhash_lsh_pairs",
-    "ann_cosine_topk",  # scans=0 in the final plan: the corpus is read
-    # once at (lazy) checkpoint materialization and both join sides
-    # consume the pin -- previously 4 scans (2 logical x AQE reuse)
+    "ann_cosine_topk_filtered",
     "scd2_partitioned_merge",  # returns the merged table scan; the merge
     # itself already ran -- audit checks the final-state read prunes
-    "events_asof_last_purchase",  # as-of join: expect ZERO join operators
+    "pit_user_daily",  # as-of join: union + carry-forward, no range join
     "corpus_decontaminate",
     "events_range_click_attribution",  # range join: expect NO nested loop
     "documents_stratified_sample",  # expect 1 scan, 0 exchanges
-    "events_salted_type_stats",  # expect 2 exchange phases, 0 python
     "events_customer_salted_join",
     # r12 registrations (audited at registration: pruned scans,
     # pushdown, no sortmerge at this SF, zero python in the pair joins)
@@ -59,9 +56,7 @@ def main() -> None:
     from pg_auto_dw_spark.session import get_spark
 
     spark = get_spark("explain-audit")
-    # bench_queries: retirement frees a correctness-rotation slot, not
-    # the perf-canary audit (hub/sat loads and as-of stay auditable)
-    qmap = queries_catalog.bench_queries()
+    qmap = queries_catalog.queries()
     names = sys.argv[1:] or AUDIT
     for name in names:
         df = qmap[name](spark, sf_dir)

@@ -1,150 +1,169 @@
-"""10x scale probe for the round-5 operators.
+"""Scale probe: time catalog rows on a replicated dataset at several
+core counts.
 
-Derives a 10x dataset from $SPARK_GRAFT_SF_DIR (events/documents
-replicated with shifted ids -- same time span, so event DENSITY grows
-10x, the hard direction for interval joins) and times each round-5
-operator at 1x and 10x. Results feed the SCALE.md scale-up table.
+The rows named by --rows come from ``queries_catalog.queries()``. They
+run against $SPARK_GRAFT_SF_DIR replicated --factor times (see
+``replicate``; a factor of 1 reads the directory as it is). Each core
+count runs in its own child process, because ``local[N]`` is fixed per
+JVM. Per row: one warm-up pass, then REPS passes through the noop sink
+(every column is computed, nothing is count-pruned); the median of the
+reps is reported.
 
-Usage: python tools/scale_probe.py [ops...]
+Usage:
+    SPARK_GRAFT_SF_DIR=<test-data dir> python tools/scale_probe.py --rows q1_pricing_summary,dedup_exact_documents \\
+        --factor 10 --cores 8,32
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
+import shutil
+import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
+REPS = 3
+# Key columns shifted by rep * stride, one stride for all of them, so
+# every foreign key (o_custkey, l_orderkey, events.user_id) still joins
+# inside its own copy. Tables not named here are copied once.
+KEY_COLUMNS = {
+    "customer": ("c_custkey",),
+    "orders": ("o_orderkey", "o_custkey"),
+    "lineitem": ("l_orderkey",),
+    "events": ("event_id", "user_id"),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
+}
+
+
+def replicate(spark, src_dir: str, dst_dir: str, factor: int) -> None:
+    """Write ``factor`` disjoint copies of every KEY_COLUMNS table in
+    ``src_dir`` to ``dst_dir``, and copy every other parquet file once,
+    byte for byte. Copy ``rep`` adds ``rep * stride`` to each key
+    column, where stride is the smallest power of ten above every key
+    in the source."""
+    from pyspark.sql import functions as F
+
+    from pg_auto_dw_spark.session import prepare
+
+    prepare(spark)  # events.ts is TIMESTAMP(NANOS): read it as a long
+    os.makedirs(dst_dir, exist_ok=True)
+    tables = {}
+    for fn in sorted(os.listdir(src_dir)):
+        name, ext = os.path.splitext(fn)
+        if ext != ".parquet":
+            continue
+        src = os.path.join(src_dir, fn)
+        if name in KEY_COLUMNS:
+            tables[name] = spark.read.parquet(src)
+        else:  # a table is one parquet file or a directory of them
+            copy = shutil.copytree if os.path.isdir(src) else shutil.copyfile
+            copy(src, os.path.join(dst_dir, fn))
+    top = max(
+        (v or 0 for name, df in tables.items()
+         for v in df.agg(*[F.max(c) for c in KEY_COLUMNS[name]]).first()),
+        default=0,
+    )
+    stride = 10 ** len(str(top))
+    reps = spark.range(factor, numPartitions=factor).select(F.col("id").alias("__rep"))
+    for name, df in tables.items():
+        keys, types = KEY_COLUMNS[name], dict(df.dtypes)
+        df.crossJoin(reps).select(
+            *[
+                (F.col(c) + F.col("__rep") * stride).cast(types[c]).alias(c)
+                if c in keys
+                else F.col(c)
+                for c in df.columns
+            ]
+        ).write.parquet(os.path.join(dst_dir, f"{name}.parquet"))
+
+
+def child(data_dir: str, rows: list[str]) -> None:
+    """Time ``rows`` in this process's session and print one
+    CHILD_RESULT line."""
+    from pg_auto_dw_spark import queries_catalog
+    from pg_auto_dw_spark.session import get_spark
+
+    cpus = os.environ["SPARK_GRAFT_CPUS"]
+    spark = get_spark(f"scale-probe-{cpus}")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    qmap = queries_catalog.queries()
+    out = {}
+    for name in rows:
+        runs = []
+        for i in range(REPS + 1):  # pass 0 is the warm-up
+            spark.sparkContext.setJobDescription(f"probe {name} pass {i}")
+            t0 = time.time()
+            qmap[name](spark, data_dir).write.format("noop").mode("overwrite").save()
+            runs.append(round(time.time() - t0, 3))
+        out[name] = {"median": statistics.median(runs[1:]), "reps": runs[1:]}
+    print("CHILD_RESULT " + json.dumps(out))
+    spark.stop()
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from pg_auto_dw_spark.session import get_spark
-    from pg_auto_dw_spark.sources import load_table
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--rows", required=True, help="comma-separated queries() names")
+    ap.add_argument("--factor", type=int, default=1, help="copies of each keyed table")
+    ap.add_argument("--cores", default=str(os.cpu_count()), help="comma-separated core counts")
+    ap.add_argument("--child", help=argparse.SUPPRESS)  # internal: one core count
+    args = ap.parse_args()
+    rows = [r for r in args.rows.split(",") if r]
+    if args.child:
+        child(args.child, rows)
+        return
 
-    spark = get_spark("scale-probe")
-    out_dir = "/tmp/scale_probe_10x"
-    ev_path, doc_path = f"{out_dir}/events", f"{out_dir}/documents"
-    if not os.path.isdir(ev_path):
-        ev = load_table(spark, sf_dir, "events")
-        reps = spark.range(10).select(F.col("id").alias("rep"))
-        (
-            ev.crossJoin(reps)
-            .select(
-                (F.col("event_id") + F.col("rep") * 10_000_000).alias("event_id"),
-                "ts",
-                (F.col("user_id") + F.col("rep") * 10_000).alias("user_id"),
-                "event_type",
-                "value",
-                "props",
+    from pg_auto_dw_spark import queries_catalog
+
+    unknown = [r for r in rows if r not in queries_catalog.queries()]
+    if unknown:
+        ap.error(f"not in queries(): {', '.join(unknown)}")
+    cores = [c for c in args.cores.split(",") if c]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        ap.error("set SPARK_GRAFT_SF_DIR to a test-data directory")
+    tmp = tempfile.mkdtemp(prefix="scale_probe_") if args.factor > 1 else None
+    results: dict[str, dict] = {}
+    try:
+        if tmp:
+            from pg_auto_dw_spark.session import get_spark
+
+            spark = get_spark("scale-probe-replicate")
+            replicate(spark, sf_dir, tmp, args.factor)
+            spark.stop()
+        data_dir = tmp or sf_dir
+        for c in cores:
+            r = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--child", data_dir,
+                 "--rows", ",".join(rows)],
+                env=dict(os.environ, SPARK_GRAFT_CPUS=c),
+                capture_output=True, text=True,
             )
-            .repartition(64)
-            .write.mode("overwrite")
-            .parquet(ev_path)
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        (
-            docs.crossJoin(reps)
-            .select(
-                (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"),
-                "text",
-                "lang",
-                "source",
-                "n_chars",
+            line = next(
+                (ln for ln in r.stdout.splitlines() if ln.startswith("CHILD_RESULT ")),
+                None,
             )
-            .repartition(32)
-            .write.mode("overwrite")
-            .parquet(doc_path)
-        )
-
-    def events(scale):
-        return (
-            load_table(spark, sf_dir, "events")
-            if scale == 1
-            else spark.read.parquet(ev_path)
-        )
-
-    def docs(scale):
-        return (
-            load_table(spark, sf_dir, "documents")
-            if scale == 1
-            else spark.read.parquet(doc_path)
-        )
-
-    from pg_auto_dw_spark.functions.match import keyword_tfidf_scores
-    from pg_auto_dw_spark.functions.rangejoin import range_join_agg
-    from pg_auto_dw_spark.functions.sampling import stratified_sample
-    from pg_auto_dw_spark.functions.skew import salted_agg
-    from pg_auto_dw_spark.functions.text import chunk_documents
-
-    def op_range(scale):
-        ev = events(scale)
-        p = ev.filter(F.col("event_type") == "purchase").select("event_id", "ts")
-        c = ev.filter(F.col("event_type") == "click").select(
-            F.col("ts").alias("cts"), F.col("value").alias("cv")
-        )
-        return range_join_agg(
-            p, c, "ts", "cts", -600, 0, aggs=[F.count("cts").alias("n")]
-        )
-
-    def op_sample(scale):
-        return stratified_sample(
-            docs(scale).select("doc_id", "lang"),
-            "doc_id",
-            {"en": 0.25, "zh": 0.8},
-            "lang",
-            0.5,
-        )
-
-    def op_salted(scale):
-        return salted_agg(
-            events(scale).select("event_type", "value"),
-            ["event_type"],
-            [("count", "value", "n"), ("sum", "value", "s")],
-        )
-
-    def op_chunk(scale):
-        return chunk_documents(docs(scale), 40, 20)
-
-    def op_tfidf(scale):
-        return keyword_tfidf_scores(docs(scale), ["spark", "merge", "window"])
-
-    from pg_auto_dw_spark.functions.corpus import leakage_safe_split
-    from pg_auto_dw_spark.functions.text import redact_pii
-
-    def op_pii(scale):
-        return redact_pii(docs(scale))
-
-    def op_split(scale):
-        return leakage_safe_split(docs(scale), val_fraction=0.1)
-
-    ops = {
-        "range_join_agg": op_range,
-        "stratified_sample": op_sample,
-        "salted_agg": op_salted,
-        "chunk_documents": op_chunk,
-        "keyword_tfidf": op_tfidf,
-        "redact_pii": op_pii,
-        "leakage_safe_split": op_split,
-    }
-    names = sys.argv[1:] or list(ops)
-    print(f"{'op':20s} {'1x(s)':>8s} {'10x(s)':>8s} {'ratio':>6s} {'rows1x':>10s} {'rows10x':>10s}")
-    for name in names:
-        fn = ops[name]
-        res = {}
-        for scale in (1, 10):
-            fn(scale).count()  # warm: codegen + footer cache
-            t0 = time.time()
-            n = fn(scale).count()
-            res[scale] = (time.time() - t0, n)
-        r = res[10][0] / max(res[1][0], 1e-9)
-        print(
-            f"{name:20s} {res[1][0]:8.2f} {res[10][0]:8.2f} {r:6.1f} "
-            f"{res[1][1]:10d} {res[10][1]:10d}"
-        )
-    spark.stop()
+            if line is None:
+                # keep the runs that did finish: print them before failing
+                print(json.dumps(results))
+                print(r.stdout[-3000:], file=sys.stderr)
+                print(r.stderr[-3000:], file=sys.stderr)
+                raise RuntimeError(f"child at {c} cores produced no result")
+            results[c] = json.loads(line[len("CHILD_RESULT "):])
+    finally:
+        if tmp:
+            shutil.rmtree(tmp, ignore_errors=True)
+    print(f"{'row':38s}" + "".join(f"{c + 'c med':>10s}" for c in cores))
+    for name in rows:
+        print(f"{name:38s}" + "".join(f"{results[c][name]['median']:10.3f}" for c in cores))
+    print(json.dumps({"factor": args.factor, "results": results}))
 
 
 if __name__ == "__main__":

@@ -26,7 +26,7 @@ def main() -> None:
 
     spark = get_spark("time_query")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qmap = queries_catalog.bench_queries()
+    qmap = queries_catalog.queries()
     for name in args:
         fn = qmap[name]
         t0 = time.time()
