@@ -29,8 +29,8 @@ from pg_auto_dw_spark import queries_catalog
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: DV build+load on sf0.001 customer; returns the hub."""
-    from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas
-    from pg_auto_dw_spark.build.loader import load_hub, load_satellite
+    from pg_auto_dw_spark.build.builder import build_and_load
+    from pg_auto_dw_spark.model.dv_schema import DVSchema
     from pg_auto_dw_spark.queries_catalog import customer_business_key
     from pg_auto_dw_spark.session import prepare
     from pg_auto_dw_spark.sources import load_table
@@ -39,14 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
     prepare(spark)
     sf_dir = "/root/testdata/sf0.001"
     wh = Warehouse(spark, tempfile.mkdtemp(prefix="autodw_entry_"))
-    bk = customer_business_key()
-    wh.create_table("dw.hub_customer", hub_schema(bk))
-    for name, schema in satellite_schemas(bk).items():
-        wh.create_table(f"dw.{name}", schema)
     source = load_table(spark, sf_dir, "customer")
-    load_ts = datetime.datetime(2024, 6, 1)
-    load_hub(wh, source, bk, load_ts=load_ts)
-    load_satellite(wh, source, bk, "customer", load_ts=load_ts)
+    dv = DVSchema(dw_schema="dw", business_keys=[customer_business_key()])
+    build_and_load(wh, lambda *_: source, dv, load_ts=datetime.datetime(2024, 6, 1))
     hub = wh.read("dw.hub_customer")
     # The driver collect()s this result; year-0001 ghost load_ts does not
     # fit in Python datetime / Arrow ns timestamps, so emit it as text.

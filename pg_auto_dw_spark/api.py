@@ -296,12 +296,7 @@ class AutoDW:
         """Build-test-rollback (docs go.md): assemble the ready set and
         render the DDL that WOULD run plus planned load counts; nothing
         is persisted (build_call/dv_repo untouched, no tables created)."""
-        from .build.builder import (
-            assemble_business_keys,
-            build_object_pull,
-            ready_build_call_rows,
-        )
-        from .build.ddl import hub_ddl_sql, satellite_ddl_sql
+        from .build.ddl import ddl_sql, hub_schema, satellite_schemas
         from .build.loader import hub_stage_df
 
         so = self.wh.read("auto_dw.source_objects")
@@ -321,8 +316,11 @@ class AutoDW:
         ddl: list[str] = []
         plan: list[str] = []
         for bk in business_keys:
-            ddl.append(hub_ddl_sql(self.dw_schema, bk))
-            ddl.extend(satellite_ddl_sql(self.dw_schema, bk).values())
+            ddl.append(ddl_sql(f"{self.dw_schema}.hub_{bk.name}", hub_schema(bk)))
+            ddl.extend(
+                ddl_sql(f"{self.dw_schema}.{name}", schema)
+                for name, schema in satellite_schemas(bk).items()
+            )
             schema_name, table_name = bk.source_table()
             n = hub_stage_df(self.resolve_source(schema_name, table_name), bk).count()
             plan.append(f"hub_{bk.name}: {n} keys staged")
@@ -340,8 +338,6 @@ class AutoDW:
     ) -> str:
         """go('Push-Table', 'schema.table'): re-load one source table
         through the latest deployed DVSchema (docs go.md)."""
-        from .build.loader import load_hub, load_satellite
-
         dv = self.latest_dv_schema()
         if dv is None:
             return "Push-Table | No deployed DVSchema found. Run go() first."
@@ -349,14 +345,15 @@ class AutoDW:
         for bk in dv.business_keys:
             s, t = bk.source_table()
             if (s.lower(), t.lower()) == (schema_name, table_name):
-                source = self.resolve_source(s, t)
-                n_hub = load_hub(self.wh, source, bk, dw_schema=dv.dw_schema, load_ts=load_ts)
-                n_sats = {
-                    key: load_satellite(
-                        self.wh, source, bk, key, dw_schema=dv.dw_schema, load_ts=load_ts
-                    )
-                    for key in bk.satellites()
-                }
+                counts = build_and_load(
+                    self.wh,
+                    self.resolve_source,
+                    DVSchema(dw_schema=dv.dw_schema, business_keys=[bk]),
+                    load_ts=load_ts,
+                    partition_by_load_date=self.partition_dv_by_load_date,
+                )
+                n_hub = counts[f"hub_{bk.name}"]
+                n_sats = {key: counts[f"sat_{key}"] for key in bk.satellites()}
                 msg = f"Push-Table | {qualified_table}: hub +{n_hub}, sats {n_sats}"
                 self._log("go", "INFO", msg)
                 return msg

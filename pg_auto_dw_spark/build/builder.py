@@ -33,18 +33,16 @@ def ready_build_call_rows(
     responses: DataFrame,
     threshold: str,
     build_id: str,
-    build_flag: str = "Build",
-    build_status: str = "RTD",
-    status: str = "Ready to Deploy",
 ) -> DataFrame:
     """insert_into_build_call's SELECT (queries.rs:324-415): transformer
-    response pks whose column status matches."""
+    response pks whose column status is Ready to Deploy, flagged as a
+    Build of RTD columns (go()'s defaults)."""
     prep = status_prep(source_objects, responses, threshold)
-    return prep.filter(F.col("status") == status).select(
+    return prep.filter(F.col("status") == "Ready to Deploy").select(
         F.col("pk_transformer_responses").alias("fk_transformer_responses"),
         F.lit(build_id).alias("build_id"),
-        F.lit(build_flag).alias("build_flag"),
-        F.lit(build_status).alias("build_status"),
+        F.lit("Build").alias("build_flag"),
+        F.lit("RTD").alias("build_status"),
     )
 
 
@@ -188,9 +186,15 @@ def build_and_load(
     """DDL + full load for a DVSchema. resolve_source(schema, table) ->
     DataFrame. Returns appended-row counts per target table.
 
+    Every hub and satellite of the build lands in ONE multi-table
+    warehouse transaction, as the reference runs its whole load script
+    in one SPI transaction (controller/dv_loader.rs:59-64): a failed load
+    leaves no table changed, and a re-run completes everything. The
+    tables are created first, because ``create_table`` writes outside any
+    transaction.
+
     ``partition_by_load_date`` creates date-partitioned hubs/satellites
     (the 100 TB layout -- incremental loads only touch new partitions)."""
-    counts: dict[str, int] = {}
     # two tables classified with the same BK name would silently fight
     # over one hub table; fail loudly and point at the multi-source API
     names = [bk.name for bk in dv.business_keys]
@@ -202,21 +206,22 @@ def build_and_load(
             "(build.loader.load_hub_multi)"
         )
     part = ["load_date"] if partition_by_load_date else None
+    tables = []
     for bk in dv.business_keys:
-        wh.create_table(
-            f"{dv.dw_schema}.hub_{bk.name}",
-            hub_schema(bk, partitioned=partition_by_load_date),
-            partition_by=part,
-        )
-        for name, schema in satellite_schemas(bk, partitioned=partition_by_load_date).items():
-            wh.create_table(f"{dv.dw_schema}.{name}", schema, partition_by=part)
-        schema_name, table_name = bk.source_table()
-        source = resolve_source(schema_name, table_name)
-        counts[f"hub_{bk.name}"] = load_hub(
-            wh, source, bk, dw_schema=dv.dw_schema, load_ts=load_ts
-        )
-        for key in bk.satellites():
-            counts[f"sat_{key}"] = load_satellite(
-                wh, source, bk, key, dw_schema=dv.dw_schema, load_ts=load_ts
+        schemas = {f"hub_{bk.name}": hub_schema(bk, partitioned=partition_by_load_date)}
+        schemas.update(satellite_schemas(bk, partitioned=partition_by_load_date))
+        for name, schema in schemas.items():
+            tables.append(f"{dv.dw_schema}.{name}")
+            wh.create_table(tables[-1], schema, partition_by=part)
+    counts: dict[str, int] = {}
+    with wh.transaction(tables) as txn:
+        for bk in dv.business_keys:
+            source = resolve_source(*bk.source_table())
+            counts[f"hub_{bk.name}"] = load_hub(
+                wh, source, bk, dv.dw_schema, load_ts, writer=txn.append
             )
+            for key in bk.satellites():
+                counts[f"sat_{key}"] = load_satellite(
+                    wh, source, bk, key, dv.dw_schema, load_ts, writer=txn.append
+                )
     return counts

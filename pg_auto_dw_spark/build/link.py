@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 from ..functions.hashing import pg_text_expr
 from ..warehouse import Warehouse
+from .loader import _append_new, _load_ts_col
 
 
 @dataclass
@@ -60,17 +61,6 @@ def link_schema(spec: LinkSpec) -> T.StructType:
     return T.StructType(fields)
 
 
-def link_ddl_sql(dw_schema: str, spec: LinkSpec) -> str:
-    cols = [
-        f"link_{spec.name}_hk STRING NOT NULL",
-        "load_ts TIMESTAMP NOT NULL",
-        "record_source STRING NOT NULL",
-    ] + [f"hub_{u.bk_name}_hk STRING NOT NULL" for u in spec.units]
-    return (
-        f"CREATE TABLE {dw_schema}.link_{spec.name} (\n    " + ",\n    ".join(cols) + "\n)"
-    )
-
-
 def link_stage_df(
     source: DataFrame, spec: LinkSpec, load_ts: datetime.datetime | None = None
 ) -> DataFrame:
@@ -78,8 +68,6 @@ def link_stage_df(
 
     def rendered(cols: list[str]):
         return [pg_text_expr(F.col(c), src_types.get(c, "string")) for c in cols]
-
-    from .loader import _load_ts_col
 
     # Dedup on the PRE-hash joined key strings and hash afterwards:
     # link_hk = sha256(joined), so dropDuplicates(joined) keeps exactly
@@ -118,14 +106,6 @@ def load_link(
 ) -> int:
     """Create-if-missing + anti-join insert of new link keys."""
     table = f"{dw_schema}.link_{spec.name}"
-    hk = f"link_{spec.name}_hk"
     wh.create_table(table, link_schema(spec))
     staged = link_stage_df(source, spec, load_ts=load_ts)
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        n = new_rows.count()
-        if n:
-            wh.append(table, new_rows.select(*[f.name for f in link_schema(spec).fields]))
-    finally:
-        new_rows.unpersist()
-    return n
+    return _append_new(wh, table, staged, [f"link_{spec.name}_hk"])

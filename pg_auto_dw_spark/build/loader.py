@@ -26,9 +26,10 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import pg_text_expr
@@ -76,15 +77,14 @@ def hub_stage_df(
     source: DataFrame,
     business_key: BusinessKey,
     load_ts: datetime.datetime | None = None,
-    distinct_keys: bool = True,
 ) -> DataFrame:
     """Staged hub rows from a source DataFrame (dv_loader.rs:160-176).
 
     hk = sha256(concat_ws(',', part::text...)); record_source = source
     schema name (dv_loader.rs:169-175). The reference relies on source
     PK uniqueness instead of de-duplicating; we drop duplicate keys
-    explicitly (``distinct_keys``) so a non-unique source can't corrupt
-    the hub -- semantics identical on unique sources.
+    explicitly so a non-unique source can't corrupt the hub --
+    semantics identical on unique sources.
     """
     hk_name = f"hub_{business_key.name}_hk"
     schema_name, _ = business_key.source_table()
@@ -96,13 +96,6 @@ def hub_stage_df(
         rendered = pg_text_expr(F.col(col_name), src_types.get(col_name, "string"))
         part_cols.append(rendered.alias(f"{p.alias}_bk"))
         part_exprs.append(rendered)
-    if not distinct_keys:
-        return source.select(
-            F.sha2(F.concat_ws(",", *part_exprs), 256).alias(hk_name),
-            _load_ts_col(load_ts).alias("load_ts"),
-            F.lit(schema_name).alias("record_source"),
-            *part_cols,
-        )
     # Dedup on the PRE-hash joined key string and hash afterwards: the
     # hk is sha256(joined), so dropDuplicates(joined) keeps exactly the
     # rows dropDuplicates(hk) kept while the dedup shuffle carries the
@@ -156,7 +149,7 @@ def satellite_stage_df(
     # within-batch dedup on (hk, hd): the anti-join only removes rows
     # already in the target, so without this a non-unique source would
     # append identical versions twice in one load (same hardening as
-    # hub_stage_df's distinct_keys). Dedup runs on the PRE-hash joined
+    # hub_stage_df's key dedup). Dedup runs on the PRE-hash joined
     # strings and the digests are computed after the shuffle (see
     # hub_stage_df / link_stage_df for the shuffle-width rationale).
     desc_aliases = [
@@ -176,12 +169,41 @@ def satellite_stage_df(
     )
 
 
-def _with_partition_cols(wh: Warehouse, table: str, df: DataFrame) -> DataFrame:
-    """Add the load_date partition column when the target table is
-    date-partitioned (100 TB layout, SCALE.md)."""
-    if "load_date" in [c for c in wh._partitioning.get(table, [])]:
-        df = df.withColumn("load_date", F.to_date("load_ts"))
-    return df
+def _append_new(
+    wh: Warehouse, table: str, staged: DataFrame, keys: list[str], writer=None
+) -> int:
+    """The INSERT...SELECT every vault load ends in: anti-join ``staged``
+    against the LIVE ``table`` on ``keys`` and append the new rows in
+    the table's column order through ``writer`` (default ``wh.append``).
+    Returns rows appended."""
+    if "load_date" in wh._partitioning.get(table, []):
+        # date-partitioned layout (100 TB, SCALE.md)
+        staged = staged.withColumn("load_date", F.to_date("load_ts"))
+    live = wh.read(table)
+    new_rows = staged.join(live.select(*keys), on=keys, how="left_anti").persist()
+    try:
+        # persist so count + append execute the scan/hash/anti-join once
+        n = new_rows.count()
+        if n:
+            (writer or wh.append)(table, new_rows.select(*live.columns))
+    finally:
+        new_rows.unpersist()
+    return n
+
+
+def _with_ghosts(
+    wh: Warehouse, table: str, staged: DataFrame, business_key: BusinessKey
+) -> DataFrame:
+    """Ghost init only when the hub is empty (dv_loader.rs:111-118 A4):
+    the -1/-2 rows ride the same append as the first keys, and a source
+    key that hashes to a ghost hk yields to the ghost."""
+    if wh.read(table).limit(1).count():
+        return staged
+    hk = F.col(f"hub_{business_key.name}_hk")
+    ghost_hks = [F.sha2(F.lit(s), 256) for s in ("-1", "-2")]
+    return ghost_records_df(staged, business_key).unionByName(
+        staged.filter(~hk.isin(*ghost_hks))
+    )
 
 
 def load_hub(
@@ -194,33 +216,13 @@ def load_hub(
 ) -> int:
     """Ghost-init + anti-join insert of new hub keys. Returns rows
     appended. ``writer`` overrides the append sink (a transaction's
-    ``txn.append`` for atomic whole-load commits); anti-joins always
-    read the LIVE table -- correct inside a transaction because hub
-    appends are key-novel by construction."""
+    ``txn.append`` for atomic whole-load commits); the anti-join always
+    reads the LIVE table, which is correct inside a transaction because
+    each table gets one append: the ghosts ride the same append as the
+    new keys, so no staged hub row is invisible to the anti-join."""
     table = f"{dw_schema}.hub_{business_key.name}"
-    sink = writer or wh.append
-    hk = f"hub_{business_key.name}_hk"
-    existing = wh.read(table)
-    appended = 0
-    # Ghost init only when the hub is empty (dv_loader.rs:111-118 A4).
-    if existing.limit(1).count() == 0:
-        ghosts = _with_partition_cols(wh, table, ghost_records_df(source, business_key))
-        sink(table, ghosts)
-        appended += 2
-    staged = _with_partition_cols(
-        wh, table, hub_stage_df(source, business_key, load_ts=load_ts)
-    )
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        # persist so count + append execute the scan/hash/anti-join once
-        n = new_rows.count()
-        if n:
-            sink(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return appended + n
+    staged = _with_ghosts(wh, table, hub_stage_df(source, business_key, load_ts), business_key)
+    return _append_new(wh, table, staged, [f"hub_{business_key.name}_hk"], writer)
 
 
 def load_satellite(
@@ -235,56 +237,9 @@ def load_satellite(
     """Anti-join (hk, hd) insert of new/changed satellite rows
     (dv_loader.rs:339-346). Returns rows appended. ``writer`` as in
     ``load_hub``."""
-    table = f"{dw_schema}.sat_{satellite_key}"
-    sink = writer or wh.append
-    hk = f"hub_{business_key.name}_hk"
-    hd = f"sat_{satellite_key}_hd"
-    staged = _with_partition_cols(
-        wh, table, satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts)
-    )
-    new_rows = staged.join(
-        wh.read(table).select(hk, hd), on=[hk, hd], how="left_anti"
-    ).persist()
-    try:
-        n = new_rows.count()
-        if n:
-            sink(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return n
-
-
-def load_dv_atomic(
-    wh: Warehouse,
-    source: DataFrame,
-    business_key: BusinessKey,
-    dw_schema: str = "dw",
-    load_ts: datetime.datetime | None = None,
-) -> dict[str, int]:
-    """The reference's one-transaction load script over the Warehouse
-    (controller/dv_loader.rs:59-64 runs hub+satellite inserts in ONE
-    Postgres transaction): the hub and every satellite land in one
-    multi-table commit. Per-table idempotency (anti-join) already makes
-    a crashed load re-runnable; the transaction additionally removes
-    the WINDOW where the hub shows keys whose satellite rows are not
-    yet visible -- readers see the batch entirely or not at all (at
-    pointer-swap granularity; see SCALE.md on cross-table read
-    isolation)."""
-    tables = [f"{dw_schema}.hub_{business_key.name}"] + [
-        f"{dw_schema}.sat_{key}" for key in business_key.satellites()
-    ]
-    counts: dict[str, int] = {}
-    with wh.transaction(tables) as txn:
-        counts[f"hub_{business_key.name}"] = load_hub(
-            wh, source, business_key, dw_schema, load_ts, writer=txn.append
-        )
-        for key in business_key.satellites():
-            counts[f"sat_{key}"] = load_satellite(
-                wh, source, business_key, key, dw_schema, load_ts, writer=txn.append
-            )
-    return counts
+    staged = satellite_stage_df(source, business_key, satellite_key, load_ts=load_ts)
+    keys = [f"hub_{business_key.name}_hk", f"sat_{satellite_key}_hd"]
+    return _append_new(wh, f"{dw_schema}.sat_{satellite_key}", staged, keys, writer)
 
 
 def load_hub_multi(
@@ -301,62 +256,26 @@ def load_hub_multi(
     ``sources`` pairs each DataFrame with the index into every part
     link's ``source_columns`` list that describes that source's column
     names (model/dv_schema.rs:38: Source Column Data is a Vec for
-    exactly this reason). Stages from all sources union; when two
-    sources carry the same key, the lower source index wins
-    deterministically; then the usual anti-join append.
+    exactly this reason). Each source stages through ``hub_stage_df``;
+    when two sources carry the same key, the lower source index wins
+    deterministically; then the usual ghost init and anti-join append.
     """
     table = f"{dw_schema}.hub_{business_key.name}"
     hk = f"hub_{business_key.name}_hk"
-    existing = wh.read(table)
-    appended = 0
-    if existing.limit(1).count() == 0:
-        ghosts = _with_partition_cols(
-            wh, table, ghost_records_df(sources[0][0], business_key)
-        )
-        wh.append(table, ghosts)
-        appended += 2
-
-    staged_parts = []
+    staged = None
     for priority, (source, src_idx) in enumerate(sources):
-        src_types = dict(source.dtypes)
-        part_cols, part_exprs = [], []
-        for p in business_key.business_key_part_links:
-            col_name = p.source_columns[src_idx].column_name
-            rendered = pg_text_expr(F.col(col_name), src_types.get(col_name, "string"))
-            part_cols.append(rendered.alias(f"{p.alias}_bk"))
-            part_exprs.append(rendered)
-        schema_name = business_key.business_key_part_links[0].source_columns[
-            src_idx
-        ].schema_name
-        staged_parts.append(
-            source.select(
-                F.sha2(F.concat_ws(",", *part_exprs), 256).alias(hk),
-                _load_ts_col(load_ts).alias("load_ts"),
-                F.lit(schema_name).alias("record_source"),
-                *part_cols,
-                F.lit(priority).alias("__prio"),
-            )
-        )
-    union = staged_parts[0]
-    for s in staged_parts[1:]:
-        union = union.unionByName(s)
-    from pyspark.sql import Window
-
+        # this source's view of the key: its own column names and schema
+        links = [
+            dataclasses.replace(p, source_columns=[p.source_columns[src_idx]])
+            for p in business_key.business_key_part_links
+        ]
+        view = dataclasses.replace(business_key, business_key_part_links=links)
+        part = hub_stage_df(source, view, load_ts=load_ts).withColumn("__prio", F.lit(priority))
+        staged = part if staged is None else staged.unionByName(part)
     w = Window.partitionBy(hk).orderBy("__prio")
     staged = (
-        union.withColumn("__rn", F.row_number().over(w))
+        staged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__prio")
     )
-    staged = _with_partition_cols(wh, table, staged)
-    new_rows = staged.join(wh.read(table).select(hk), on=hk, how="left_anti").persist()
-    try:
-        # persist so count + append execute the scan/hash/anti-join once
-        n = new_rows.count()
-        if n:
-            wh.append(
-                table, new_rows.select(*[f.name for f in wh.read(table).schema.fields])
-            )
-    finally:
-        new_rows.unpersist()
-    return appended + n
+    return _append_new(wh, table, _with_ghosts(wh, table, staged, business_key), [hk])

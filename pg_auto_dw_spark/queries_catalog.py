@@ -1933,19 +1933,16 @@ def dv_round_trip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are lossless."""
     import tempfile
 
-    from .build.ddl import hub_schema, satellite_schemas
-    from .build.loader import load_hub, load_satellite
+    from .build.builder import build_and_load
     from .build.views import business_view
+    from .model.dv_schema import DVSchema
     from .warehouse import Warehouse
 
     bk = customer_business_key()
     wh = Warehouse(spark, _scratch_dir("autodw_rt_"))
-    wh.create_table("dw.hub_customer", hub_schema(bk))
-    for name, schema in satellite_schemas(bk).items():
-        wh.create_table(f"dw.{name}", schema)
     src = load_table(spark, sf_dir, "customer")
-    load_hub(wh, src, bk, load_ts=LOAD_TS)
-    load_satellite(wh, src, bk, "customer", load_ts=LOAD_TS)
+    dv = DVSchema(dw_schema="dw", business_keys=[bk])
+    build_and_load(wh, lambda *_: src, dv, load_ts=LOAD_TS)
     return business_view(wh, bk)
 
 

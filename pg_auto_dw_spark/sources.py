@@ -25,19 +25,6 @@ from pyspark.sql import functions as F
 
 from .session import prepare
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table with schema normalization applied."""
@@ -62,12 +49,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ]
         )
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:
-    """Register every test table as a temp view (for spark.sql queries)."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_source(

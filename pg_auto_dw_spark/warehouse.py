@@ -731,12 +731,14 @@ class Warehouse:
     # -- writes ---------------------------------------------------------
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT...SELECT sink. With the default retention (1) this is
-        an in-place parquet append -- the cheap hot path for hub/sat
-        loads. Under ``retain_generations > 1`` the append becomes a
-        copy-on-write commit (hardlink live files into a fresh
-        generation, append there, pointer-swap) so that every retained
-        snapshot stays immutable -- an in-place append would leak new
-        files into the generation dir an older version still names."""
+        an in-place parquet append: no copy and no pointer swap, but no
+        atomicity across tables either (vault builds land through one
+        ``transaction`` instead). Under ``retain_generations > 1`` the
+        append becomes a copy-on-write commit (hardlink live files into a
+        fresh generation, append there, pointer-swap) so that every
+        retained snapshot stays immutable -- an in-place append would
+        leak new files into the generation dir an older version still
+        names."""
         if self.retain_generations > 1:
             with self.lock(name):
                 live = self.path(name)

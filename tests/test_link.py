@@ -5,7 +5,8 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from pg_auto_dw_spark.build.link import LinkSpec, LinkUnit, link_ddl_sql, load_link
+from pg_auto_dw_spark.build.ddl import ddl_sql
+from pg_auto_dw_spark.build.link import LinkSpec, LinkUnit, link_schema, load_link
 from pg_auto_dw_spark.sources import load_table
 from pg_auto_dw_spark.warehouse import Warehouse
 
@@ -54,6 +55,6 @@ def test_link_load_idempotent_and_hub_compatible(spark, warehouse_dir, sf_dir):
     }
     assert sample["hub_order_hk"] in hub_keys
 
-    ddl = link_ddl_sql("dw", s)
+    ddl = ddl_sql("dw.link_order_part_supplier", link_schema(s))
     assert "link_order_part_supplier_hk STRING NOT NULL" in ddl
     assert "hub_supplier_hk STRING NOT NULL" in ddl

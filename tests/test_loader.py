@@ -5,15 +5,19 @@ locally-computed SHA-256 oracle (FIXTURES.md section 3)."""
 import datetime
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas
+from pg_auto_dw_spark.build.builder import build_and_load
+from pg_auto_dw_spark.build.ddl import ddl_sql, hub_schema, satellite_schemas
+from pg_auto_dw_spark.build.link import link_schema
 from pg_auto_dw_spark.build.loader import (
     GHOST_LOAD_TS_STR,
     load_hub,
     load_satellite,
 )
-from pg_auto_dw_spark.build.spec import business_key_from_spec
+from pg_auto_dw_spark.build.spec import business_key_from_spec, dv_schema_from_spec
 from pg_auto_dw_spark.sources import load_table
 from pg_auto_dw_spark.warehouse import Warehouse
 
@@ -175,3 +179,92 @@ def test_warehouse_metadata_survives_new_instance(spark, warehouse_dir, sf_dir):
 
     parts = os.listdir(wh2.path("dw.hub_customer"))
     assert any(p == "load_date=2024-06-05" for p in parts)
+
+
+def test_float_descriptor_satellite_roundtrips(spark, warehouse_dir, sf_dir):
+    """A float/array descriptor must get a real type in the satellite
+    schema so the second read doesn't crash on parquet type mismatch."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    bk = business_key_from_spec(
+        "main", "embeddings", "embedding",
+        [("vec_id", "bigint")],
+        [("label", "int", False), ("embedding", "array<float>", False)],
+    )
+    schemas = satellite_schemas(bk)
+    field_types = {f.name: f.dataType for f in schemas["sat_embeddings"].fields}
+    assert field_types["embedding"] == T.ArrayType(T.FloatType())
+
+    wh = Warehouse(spark, warehouse_dir)
+    wh.create_table("dw.hub_embedding", hub_schema(bk))
+    for name, schema in schemas.items():
+        wh.create_table(f"dw.{name}", schema)
+    n = load_satellite(wh, emb, bk, "embeddings", load_ts=LOAD_TS)
+    assert n == emb.count()
+    # second load reads the table back -- crashes if types were corrupted
+    assert load_satellite(wh, emb, bk, "embeddings", load_ts=LOAD_TS) == 0
+
+
+def test_duplicate_bk_names_fail_loudly(spark, warehouse_dir, sf_dir):
+    bk1 = business_key_from_spec("main", "customer", "customer", [("c_custkey", "bigint")], [])
+    bk2 = business_key_from_spec("main", "orders", "customer", [("o_custkey", "bigint")], [])
+    dv = dv_schema_from_spec("dw", [bk1, bk2])
+    wh = Warehouse(spark, warehouse_dir)
+    with pytest.raises(ValueError, match="multi-source"):
+        build_and_load(wh, lambda s, t: None, dv)
+
+
+def test_satellite_within_batch_dedup(spark, warehouse_dir, sf_dir):
+    """Identical duplicate source rows produce ONE satellite row."""
+    src = load_table(spark, sf_dir, "customer").limit(20)
+    doubled = src.unionByName(src)
+    bk = business_key_from_spec(
+        "main", "customer", "customer", [("c_custkey", "bigint")],
+        [("c_name", "text", False)],
+    )
+    wh = Warehouse(spark, warehouse_dir)
+    for name, schema in satellite_schemas(bk).items():
+        wh.create_table(f"dw.{name}", schema)
+    assert load_satellite(wh, doubled, bk, "customer", load_ts=LOAD_TS) == 20
+
+
+def test_ddl_sql_pins_rendered_text(spark):
+    """The exact CREATE TABLE text for a two-part hub, a satellite with
+    int/decimal/double/array<float> descriptors, and a link."""
+    from pg_auto_dw_spark.queries_catalog import lineitem_business_key, lineitem_link_spec
+
+    assert ddl_sql("dw.hub_lineitem", hub_schema(lineitem_business_key())) == (
+        "CREATE TABLE dw.hub_lineitem (\n"
+        "    hub_lineitem_hk STRING NOT NULL,\n"
+        "    load_ts TIMESTAMP NOT NULL,\n"
+        "    record_source STRING NOT NULL,\n"
+        "    l_orderkey_bk STRING,\n"
+        "    l_linenumber_bk STRING\n"
+        ")"
+    )
+    bk = business_key_from_spec(
+        "main", "embeddings", "embedding", [("vec_id", "bigint")],
+        [("label", "int", False), ("price", "numeric(15,2)", False),
+         ("score", "double precision", False), ("embedding", "array<float>", False)],
+    )
+    assert ddl_sql("dw.sat_embeddings", satellite_schemas(bk)["sat_embeddings"]) == (
+        "CREATE TABLE dw.sat_embeddings (\n"
+        "    hub_embedding_hk STRING NOT NULL,\n"
+        "    load_ts TIMESTAMP NOT NULL,\n"
+        "    record_source STRING NOT NULL,\n"
+        "    sat_embeddings_hd STRING NOT NULL,\n"
+        "    label INT,\n"
+        "    price DECIMAL(15,2),\n"
+        "    score DOUBLE,\n"
+        "    embedding ARRAY<FLOAT>\n"
+        ")"
+    )
+    assert ddl_sql("dw.link_order_part_supplier", link_schema(lineitem_link_spec())) == (
+        "CREATE TABLE dw.link_order_part_supplier (\n"
+        "    link_order_part_supplier_hk STRING NOT NULL,\n"
+        "    load_ts TIMESTAMP NOT NULL,\n"
+        "    record_source STRING NOT NULL,\n"
+        "    hub_order_hk STRING NOT NULL,\n"
+        "    hub_part_hk STRING NOT NULL,\n"
+        "    hub_supplier_hk STRING NOT NULL\n"
+        ")"
+    )

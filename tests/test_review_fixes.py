@@ -3,17 +3,12 @@
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pg_auto_dw_spark.build.builder import assemble_business_keys, build_and_load
-from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas, spark_type_for
-from pg_auto_dw_spark.build.loader import load_satellite
-from pg_auto_dw_spark.build.spec import business_key_from_spec, dv_schema_from_spec
+from pg_auto_dw_spark.build.builder import assemble_business_keys
+from pg_auto_dw_spark.build.ddl import spark_type_for
 from pg_auto_dw_spark.sources import load_table
 from pg_auto_dw_spark.warehouse import Warehouse
-
-LOAD_TS = datetime.datetime(2024, 6, 1)
 
 
 def test_spark_type_for_covers_spark_ddl_names(spark):
@@ -27,52 +22,6 @@ def test_spark_type_for_covers_spark_ddl_names(spark):
     assert spark_type_for("varchar(10)") == T.StringType()
     assert spark_type_for("numeric(3,2)") == T.DecimalType(3, 2)
     assert spark_type_for("no_such_type") == T.StringType()
-
-
-def test_float_descriptor_satellite_roundtrips(spark, warehouse_dir, sf_dir):
-    """A float/array descriptor must get a real type in the satellite
-    schema so the second read doesn't crash on parquet type mismatch."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    bk = business_key_from_spec(
-        "main", "embeddings", "embedding",
-        [("vec_id", "bigint")],
-        [("label", "int", False), ("embedding", "array<float>", False)],
-    )
-    schemas = satellite_schemas(bk)
-    field_types = {f.name: f.dataType for f in schemas["sat_embeddings"].fields}
-    assert field_types["embedding"] == T.ArrayType(T.FloatType())
-
-    wh = Warehouse(spark, warehouse_dir)
-    wh.create_table("dw.hub_embedding", hub_schema(bk))
-    for name, schema in schemas.items():
-        wh.create_table(f"dw.{name}", schema)
-    n = load_satellite(wh, emb, bk, "embeddings", load_ts=LOAD_TS)
-    assert n == emb.count()
-    # second load reads the table back -- crashes if types were corrupted
-    assert load_satellite(wh, emb, bk, "embeddings", load_ts=LOAD_TS) == 0
-
-
-def test_duplicate_bk_names_fail_loudly(spark, warehouse_dir, sf_dir):
-    bk1 = business_key_from_spec("main", "customer", "customer", [("c_custkey", "bigint")], [])
-    bk2 = business_key_from_spec("main", "orders", "customer", [("o_custkey", "bigint")], [])
-    dv = dv_schema_from_spec("dw", [bk1, bk2])
-    wh = Warehouse(spark, warehouse_dir)
-    with pytest.raises(ValueError, match="multi-source"):
-        build_and_load(wh, lambda s, t: None, dv)
-
-
-def test_satellite_within_batch_dedup(spark, warehouse_dir, sf_dir):
-    """Identical duplicate source rows produce ONE satellite row."""
-    src = load_table(spark, sf_dir, "customer").limit(20)
-    doubled = src.unionByName(src)
-    bk = business_key_from_spec(
-        "main", "customer", "customer", [("c_custkey", "bigint")],
-        [("c_name", "text", False)],
-    )
-    wh = Warehouse(spark, warehouse_dir)
-    for name, schema in satellite_schemas(bk).items():
-        wh.create_table(f"dw.{name}", schema)
-    assert load_satellite(wh, doubled, bk, "customer", load_ts=LOAD_TS) == 20
 
 
 def test_assemble_tolerates_null_rows():

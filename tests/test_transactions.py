@@ -13,6 +13,7 @@ import os
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pg_auto_dw_spark.warehouse import Warehouse
@@ -289,37 +290,36 @@ def test_transaction_staged_append_is_atomic_with_overwrite(spark, warehouse_dir
     assert _vals(wh, "dv.sat") == {"y0", "y1"}
 
 
-def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, monkeypatch):
-    """load_dv_atomic: hub + satellites land in one commit; a failure
-    mid-load leaves NOTHING visible; the re-run completes everything
-    and matches the non-atomic loaders' final state."""
-    import pg_auto_dw_spark.build.loader as loader_mod
-    from pg_auto_dw_spark.build.ddl import hub_schema, satellite_schemas
-    from pg_auto_dw_spark.build.loader import load_dv_atomic
+def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, sf_dir, monkeypatch):
+    """build_and_load: hub + satellites land in one commit; a failure
+    mid-load leaves NOTHING visible; the re-run completes everything."""
+    import pg_auto_dw_spark.build.builder as builder_mod
+    from pg_auto_dw_spark.model.dv_schema import DVSchema
     from pg_auto_dw_spark.queries_catalog import customer_business_key
     from pg_auto_dw_spark.sources import load_table
 
     bk = customer_business_key()
+    dv = DVSchema(dw_schema="dw", business_keys=[bk])
     wh = Warehouse(spark, warehouse_dir)
-    wh.create_table(f"dw.hub_{bk.name}", hub_schema(bk))
-    for name, schema in satellite_schemas(bk).items():
-        wh.create_table(f"dw.{name}", schema)  # names come pre-prefixed
-    cust = load_table(spark, "/root/testdata/sf0.001", "customer")
+    cust = load_table(spark, sf_dir, "customer")
+
+    def load():
+        return builder_mod.build_and_load(wh, lambda *_: cust, dv)
 
     # sabotage the satellite leg on the first attempt
-    real_load_satellite = loader_mod.load_satellite
+    real_load_satellite = builder_mod.load_satellite
 
     def boom(*a, **k):
         raise RuntimeError("satellite leg failed")
 
-    monkeypatch.setattr(loader_mod, "load_satellite", boom)
+    monkeypatch.setattr(builder_mod, "load_satellite", boom)
     with pytest.raises(RuntimeError, match="satellite leg failed"):
-        load_dv_atomic(wh, cust, bk)
-    monkeypatch.setattr(loader_mod, "load_satellite", real_load_satellite)
+        load()
+    monkeypatch.setattr(builder_mod, "load_satellite", real_load_satellite)
     # the hub leg ran before the crash, but NOTHING is visible
     assert wh.read(f"dw.hub_{bk.name}").count() == 0
 
-    counts = load_dv_atomic(wh, cust, bk)
+    counts = load()
     n_cust = cust.count()
     assert counts[f"hub_{bk.name}"] == n_cust + 2  # ghosts + every key
     hub_n = wh.read(f"dw.hub_{bk.name}").count()
@@ -327,6 +327,74 @@ def test_atomic_dv_load_all_or_nothing(spark, warehouse_dir, monkeypatch):
     for key in bk.satellites():
         assert wh.read(f"dw.sat_{key}").count() > 0
     # idempotent: a second atomic run appends nothing
-    counts2 = load_dv_atomic(wh, cust, bk)
+    counts2 = load()
     assert all(v == 0 for v in counts2.values())
     assert wh.read(f"dw.hub_{bk.name}").count() == hub_n
+
+
+def _digest(df):
+    """(row count, order-independent content hash) of a table."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), str(row["h"])
+
+
+def test_go_crash_lands_nothing_and_rerun_matches_clean_go(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """go() whose second satellite load raises: no dw.* table gains a
+    file, and re-running go() leaves every hub and satellite equal to an
+    uninterrupted go() in a fresh warehouse."""
+    import pg_auto_dw_spark.build.builder as builder_mod
+    from tests.test_end_to_end import LOAD_TS, make_autodw
+
+    def ready_vault(name):
+        adw = make_autodw(spark, str(tmp_path / name), sf_dir)
+        adw.source_include("main")
+        adw.classify_pending()
+        return adw
+
+    def live_files(wh):
+        return {
+            n: {os.path.join(d, f) for d, _, fs in os.walk(wh.path(n)) for f in fs}
+            for n in wh._schemas
+            if n.startswith("dw.")
+        }
+
+    def vault_digests(adw):
+        dv = adw.latest_dv_schema()
+        names = [f"hub_{bk.name}" for bk in dv.business_keys]
+        names += [f"sat_{key}" for bk in dv.business_keys for key in bk.satellites()]
+        return {n: _digest(adw.wh.read(f"{dv.dw_schema}.{n}")) for n in names}
+
+    real_load_hub, real_load_satellite = builder_mod.load_hub, builder_mod.load_satellite
+    created: dict = {}
+    sat_calls = []
+
+    def load_hub(wh, *a, **k):
+        if not created:  # every table exists; no load has run yet
+            created.update(live_files(wh))
+        return real_load_hub(wh, *a, **k)
+
+    def load_satellite(*a, **k):
+        sat_calls.append(a)
+        if len(sat_calls) == 2:
+            raise RuntimeError("second satellite load failed")
+        return real_load_satellite(*a, **k)
+
+    adw = ready_vault("crashed")
+    monkeypatch.setattr(builder_mod, "load_hub", load_hub)
+    monkeypatch.setattr(builder_mod, "load_satellite", load_satellite)
+    with pytest.raises(RuntimeError, match="second satellite load failed"):
+        adw.go(load_ts=LOAD_TS)
+    assert created and live_files(adw.wh) == created
+    monkeypatch.undo()
+
+    adw.go(load_ts=LOAD_TS)
+    clean = ready_vault("clean")
+    clean.go(load_ts=LOAD_TS)
+    rerun = vault_digests(adw)
+    assert len(rerun) >= 4 and all(n > 0 for n, _ in rerun.values())
+    assert rerun == vault_digests(clean)
