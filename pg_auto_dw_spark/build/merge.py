@@ -40,8 +40,8 @@ from ..warehouse import Warehouse
 
 
 def _latest_per_key(batch: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
-    """Reduce a CDC-style batch to its newest row per key (the ADVICE-r4
-    lesson: two updates to one key in one batch must not both apply)."""
+    """Reduce a CDC-style batch to its newest row per key: two updates
+    to one key in one batch must not both apply."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
@@ -59,7 +59,7 @@ def _touched_partitions_cond(pcols: list[str], touched: list[tuple]):
     value, so a batch carrying rows in the null partition would fail to
     select that partition's current rows -- the dynamic overwrite would
     then replace the whole null partition with the batch rows only,
-    silently deleting the unmatched current rows (r5 review finding).
+    silently deleting the unmatched current rows.
     ``eqNullSafe`` also makes the predicate total (true/false, never
     NULL), so the negated form used by verify_partition_contract sees
     the null partition too."""
@@ -108,27 +108,22 @@ def merge_upsert(
         raise ValueError(f"merge_upsert requires a partitioned table; {table} has no spec")
     if order_col is not None:
         batch = _latest_per_key(batch, key_cols, order_col)
-    # Pin via persist, not eager checkpoint (r16, guide section 5): the
-    # stats aggregation below is the ONE action that both computes the
-    # metadata and populates the cache, so the separate checkpoint
-    # materialization job disappears. Later reads of the batch (the
-    # match join's build side, the union into the rewrite) hit the
-    # cache; MEMORY_AND_DISK storage spills rather than drops, and
-    # every consumer runs before the commit point, so a
-    # self-referential batch's recompute source (the old generation)
-    # is still on disk throughout. Unpersisted before return.
+    # Pin via persist, not eager checkpoint: the stats aggregation
+    # below is the ONE action that both computes the metadata and
+    # populates the cache, so no separate checkpoint job runs. Later
+    # reads of the batch (the match join's build side, the union into
+    # the rewrite) hit the cache; MEMORY_AND_DISK storage spills rather
+    # than drops, and every consumer runs before the commit point, so a
+    # self-referential batch's recompute source (the old generation) is
+    # still on disk throughout. Unpersisted before return.
     # ONE metadata pass over the pinned batch: total rows, distinct
     # keys (struct-wise, so NULL key fields compare like groupBy
     # equality), and the touched-partition set (bounded: one struct
-    # per partition). Replaces three separate jobs (dup-check count,
-    # batch count, distinct-partitions collect) -- each job pays the
-    # scheduler floor, which dominates metadata-sized merges on
-    # high-latency schedulers and costs a full barrier round-trip on a
-    # busy cluster. Pin + stats run BEFORE the table lock (r6 ADVICE):
-    # the batch is caller-side state, so the pre-lock result stays
-    # valid under the lock, and a duplicate-key batch now fails cheaply
-    # without ever holding the table's exclusive lock through its own
-    # materialization.
+    # per partition), instead of three jobs that each pay the
+    # scheduler floor. Pin + stats run BEFORE the table lock: the
+    # batch is caller-side state, so the pre-lock result stays valid
+    # under the lock, and a duplicate-key batch fails cheaply without
+    # holding the table's exclusive lock through its materialization.
     batch = batch.persist()
     try:
         stats = batch.agg(
@@ -162,16 +157,13 @@ def merge_upsert(
                         "partition column must be a function of the key"
                     )
             # The match-flag join is consumed exactly once, by the
-            # rewrite below, and its audit counts ride THAT action as
-            # an observe() metric node (r16, guide section 1.2: don't
-            # schedule extra jobs for numbers the write already
-            # computes). CollectMetrics sees every joined row BEFORE
-            # the carried-rows filter above it (filters do not push
-            # through it -- verified against the physical plan), so
-            # n_cur/n_matched are identical to the old separate
-            # aggregation. Replaces the eager checkpoint + count pair:
-            # pin job + agg job + write job collapse to the write job.
-            # No broadcast hint on the batch side: incremental batches
+            # rewrite below, and its audit counts ride THAT action as an
+            # observe() metric node: no extra jobs for numbers the write
+            # already computes. CollectMetrics sees every joined row
+            # BEFORE the carried-rows filter above it (filters do not
+            # push through it -- verified against the physical plan),
+            # so n_cur/n_matched equal a separate aggregation's. No
+            # broadcast hint on the batch side: incremental batches
             # usually fit, and AQE decides on size.
             obs = Observation()
             ann = cur.join(
@@ -240,19 +232,15 @@ def _files_containing_keys(
     dir (a bucket_of/layout mismatch), pruning for those keys is
     abandoned and they are range-checked against every file -- a
     deletion must never silently skip a victim."""
-    import pyarrow.parquet as pq
-
-    live = wh.path(table)
     pcols = wh._partitioning.get(table, [])
+    files = list(wh.data_files(table))
     by_bucket: dict[str, list] | None = None
     if bucket_of is not None and len(pcols) == 1:
         by_bucket = {}
         for k in keys:
             by_bucket.setdefault(_bucket_key(bucket_of(k)), []).append(k)
         seen_dirs = {
-            d
-            for rel in wh.data_files(table)
-            if (d := _partition_value(rel, pcols[0])) is not None
+            d for rel in files if (d := _partition_value(rel, pcols[0])) is not None
         }
         orphans = sorted(
             {k for b, ks in by_bucket.items() if b not in seen_dirs for k in ks}
@@ -266,36 +254,26 @@ def _files_containing_keys(
                 d: sorted(set(by_bucket.get(d, [])) | set(orphans))
                 for d in seen_dirs
             }
-    affected: list[str] = []
+    cands: dict[str, list] = {}
     clean: list[str] = []
-    for rel in wh.data_files(table):
+    for rel in files:
         cand = keys
         if by_bucket is not None:
             d = _partition_value(rel, pcols[0])
             # a data file outside any partition dir is checked against
             # every key (never prune on absent layout information)
             cand = keys if d is None else by_bucket.get(d, [])
-            if not cand:
-                clean.append(rel)
-                continue
-        hit = True
-        try:
-            md = pq.ParquetFile(os.path.join(live, rel)).metadata
-            j = md.schema.names.index(key_col)
-            fmn = fmx = None
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(j).statistics
-                if st is None or not st.has_min_max:
-                    fmn = fmx = None
-                    break
-                fmn = st.min if fmn is None else min(fmn, st.min)
-                fmx = st.max if fmx is None else max(fmx, st.max)
-            if isinstance(fmn, (int, float)) and isinstance(fmx, (int, float)):
-                # any candidate key inside [fmn, fmx]?
-                i = bisect.bisect_left(cand, fmn)
-                hit = i < len(cand) and cand[i] <= fmx
-        except (OSError, ValueError, KeyError):
-            hit = True
+        if cand:
+            cands[rel] = cand
+        else:
+            clean.append(rel)
+    affected: list[str] = []
+    for rel, fr in wh.file_ranges(table, [key_col], list(cands)).items():
+        rng, cand = fr[key_col], cands[rel]
+        # any candidate key inside [lo, hi]? (no stats: never skip blind)
+        hit = rng is None or (
+            bisect.bisect_right(cand, rng[1]) > bisect.bisect_left(cand, rng[0])
+        )
         (affected if hit else clean).append(rel)
     return affected, clean
 
@@ -304,11 +282,11 @@ def _annotate_victims(cur: DataFrame, key_lit: DataFrame, key_col: str):
     """ONE victim-flag join over the rows under rewrite; the survivor
     frame is returned with the deletion count attached as an observe()
     metric, so the caller's rewrite action computes both in a single
-    job (r16 -- was pin job + count job + write job). CollectMetrics
+    job instead of a pin job + count job + write job. CollectMetrics
     sees every joined row before the survivor filter (filters do not
-    push through it), so the count equals the old separate
-    aggregation. Read ``obs.get["n_del"]`` only AFTER the write.
-    ``key_lit`` is distinct, so the left join never fans out."""
+    push through it), so the count equals a separate aggregation's.
+    Read ``obs.get["n_del"]`` only AFTER the write. ``key_lit`` is
+    distinct, so the left join never fans out."""
     obs = Observation()
     ann = cur.join(
         F.broadcast(key_lit.withColumn("__victim", F.lit(1))),
@@ -354,9 +332,9 @@ def delete_keys(
     if not keys:
         return {"rows_deleted": 0, "files_rewritten": 0, "files_carried": len(wh.data_files(table))}
     # Build the key-literal frame with the TABLE's column type, not a
-    # type sniffed from the first collected value (r5 review finding:
-    # isinstance guessing mistyped date/timestamp/decimal/boolean keys,
-    # yielding a wrong schema or an opaque createDataFrame failure).
+    # type sniffed from the first collected value: isinstance guessing
+    # mistypes date/timestamp/decimal/boolean keys, yielding a wrong
+    # schema or an opaque createDataFrame failure.
     try:
         key_field = next(
             f for f in wh.read(table).schema.fields if f.name == key_col

@@ -60,44 +60,6 @@ from ..warehouse import Warehouse
 SCD2_META = ("valid_from", "valid_to", "current_flag", "deleted_flag")
 
 
-def _file_key_ranges(live_dir: str, bucket_dirs: list[str], key_col: str):
-    """Per-file (min, max) of ``key_col`` from parquet footer stats for
-    every data file under the given partition dirs -- metadata-sized
-    work (one footer read per file). Returns
-    ``{rel_path: (min, max) | None}``; None = stats unavailable
-    (never prune that file)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, tuple | None] = {}
-    for bd in bucket_dirs:
-        pdir = os.path.join(live_dir, bd)
-        if not os.path.isdir(pdir):
-            continue
-        for fn in sorted(os.listdir(pdir)):
-            if not fn.endswith(".parquet") or fn.startswith(("_", ".")):
-                continue
-            rel = os.path.join(bd, fn)
-            try:
-                md = pq.ParquetFile(os.path.join(pdir, fn)).metadata
-                names = md.schema.names
-                j = names.index(key_col)
-                lo = hi = None
-                for i in range(md.num_row_groups):
-                    st = md.row_group(i).column(j).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                # only numeric stats are safe to compare (string footer
-                # stats may be truncated bounds)
-                ok = isinstance(lo, (int, float)) and isinstance(hi, (int, float))
-                out[rel] = (lo, hi) if ok else None
-            except (OSError, ValueError, KeyError):
-                out[rel] = None
-    return out
-
-
 def with_bucket(
     df: DataFrame,
     key_cols: list[str],
@@ -156,18 +118,15 @@ def _plan_file_pruning(
     for lo, hi in branges.values():
         if not isinstance(lo, (int, float)) or not isinstance(hi, (int, float)):
             return None
-    live = wh.path(table)
-    bucket_dirs = [f"{bucket_col}={int(b)}" for b in branges]
-    franges = _file_key_ranges(live, bucket_dirs, key_col)
+    dirs = {f"{bucket_col}={int(b)}" for b in branges}
+    files = sorted(rel for rel in wh.data_files(table) if rel.split(os.sep, 1)[0] in dirs)
     kept = []
-    for rel, rng in franges.items():
-        b = int(rel.split("=", 1)[1].split(os.sep, 1)[0])
-        lo_hi = branges.get(b)
-        if rng is None or lo_hi is None:
-            kept.append(rel)  # no stats / stray file: must read it
-        elif not (rng[1] < lo_hi[0] or rng[0] > lo_hi[1]):
-            kept.append(rel)  # key range intersects the batch
-    return kept, len(franges)
+    for rel, fr in wh.file_ranges(table, [key_col], files).items():
+        rng = fr[key_col]
+        lo, hi = branges[int(rel.split("=", 1)[1].split(os.sep, 1)[0])]
+        if rng is None or not (rng[1] < lo or rng[0] > hi):
+            kept.append(rel)  # no stats, or key range intersects the batch
+    return kept, len(files)
 
 
 def merge_batch(
@@ -284,13 +243,13 @@ def merge_batch(
             .unionByName(inserts.withColumn("_closed_now", zero))
         )
         # The merged frame is consumed exactly once, by the rewrite:
-        # its audit counts ride that action as observe() metrics (r16,
-        # guide section 1.2) instead of paying a pin job + a count job
-        # first. The write targets a FRESH generation dir (copy-on-
-        # write), so reading the partitions being replaced needs no
-        # pin for correctness, and CollectMetrics sits above the whole
-        # merge (nothing filters between it and the write), so the
-        # counts equal the old separate aggregation.
+        # its audit counts ride that action as observe() metrics
+        # instead of a pin job + a count job first. The write targets a
+        # FRESH generation dir (copy-on-write), so reading the
+        # partitions being replaced needs no pin for correctness, and
+        # CollectMetrics sits above the whole merge (nothing filters
+        # between it and the write), so the counts equal a separate
+        # aggregation's.
         obs = Observation()
         final_touched = final_touched.observe(
             obs,

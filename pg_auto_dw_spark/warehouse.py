@@ -3,29 +3,37 @@
 The reference materializes everything as Postgres tables in the
 ``auto_dw`` schema (reference: utility/sql/info_tables.sql). Delta Lake
 is not available in this environment, so the warehouse manages plain
-parquet directories with three write modes that cover every sink the
-reference uses (SURVEY.md S5-S9):
+parquet directories. The write verbs cover every sink the reference
+uses (SURVEY.md S5-S9):
 
-- ``append``      -> INSERT...SELECT sinks (S7). Hub/sat loads are made
-                     idempotent *structurally* (anti-join before append,
-                     reference: dv_loader.rs:177-181,339-346), so append
-                     alone never duplicates.
-- ``overwrite``   -> the SCD2 UPDATE sinks (S8). Metadata tables are
-                     catalog-sized (rows = number of source columns), so
-                     a full rewrite per merge is cheap; atomicity comes
-                     from generation-dir + pointer-file commit (below).
-- ``create``      -> DDL sink (S6) with an explicit StructType.
+- ``create_table``          -> DDL sink (S6) with an explicit StructType.
+- ``append``                -> INSERT...SELECT sinks (S7). Hub/sat loads
+                               are idempotent *structurally* (anti-join
+                               before append, reference:
+                               dv_loader.rs:177-181,339-346).
+- ``overwrite``             -> the SCD2 UPDATE sinks (S8): full rewrite.
+- ``overwrite_partitions``  -> partition-pruned rewrite (dynamic
+                               partition overwrite).
+- ``replace_files``         -> file-granular rewrite (drop some files,
+                               add new ones).
+- ``transaction``           -> the same writes over several tables,
+                               all-or-nothing.
 
-Crash safety: ``overwrite`` never renames the live directory. It writes
-a fresh generation dir (``<table>__gen-<id>``), then commits by
-atomically ``os.replace``-ing a pointer file (``<table>.live``) that
-names the live generation -- the single-transaction stand-in for the
-reference's one-script SCD2 merge (reference:
-controller/dv_loader.rs:59-64). A crash before the pointer swap leaves
-the old generation live; a crash after it leaves the new one live; in
-neither window is the table missing or half-renamed. Orphan
-generations and legacy ``.staging-*``/``.old-*`` dirs are garbage-
-collected on ``Warehouse`` init.
+Every copy-on-write verb lands its data through one staging routine,
+``_stage``: a fresh generation dir (``<table>__gen-<id>``) gets the
+kept files of the base generation by hardlink (parquet files never
+change once written, so generations share them) and the new rows
+written with the table's partition spec. One commit point makes it
+live: ``_commit_generation`` atomically ``os.replace``-s a pointer file
+(``<table>.live``) naming the generation -- the stand-in for the
+reference's one-script SCD2 merge (controller/dv_loader.rs:59-64). A
+crash before the pointer swap leaves the old generation live; a crash
+after it leaves the new one live; in neither window is the table
+missing or half-written. Orphan generations and legacy
+``.staging-*``/``.old-*`` dirs are garbage-collected on ``Warehouse``
+init. The one write that stages nothing is ``append`` under the
+default retention of one generation: it adds files to the live dir in
+place, copying nothing.
 
 Scale posture: data-plane tables (hubs/satellites) are written with
 ``partitionBy`` when a partition spec is registered -- at 100 TB you
@@ -81,7 +89,7 @@ class Warehouse:
         self._load_meta()
         if retain_generations is not None and max(1, retain_generations) != self.retain_generations:
             self.retain_generations = max(1, retain_generations)
-            self._save_meta()
+            self._save_meta(retain=True)
         self._recover_transactions()
         self._gc_stale_dirs()
 
@@ -158,13 +166,17 @@ class Warehouse:
     def _meta_path(self) -> str:
         return os.path.join(self.root, "_warehouse_meta.json")
 
-    def _load_meta(self) -> None:
+    def _read_meta(self) -> dict:
         import json
 
-        if not os.path.isfile(self._meta_path()):
-            return
-        with open(self._meta_path()) as f:
-            meta = json.load(f)
+        try:
+            with open(self._meta_path()) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
+    def _load_meta(self) -> None:
+        meta = self._read_meta()
         self.retain_generations = max(1, int(meta.get("retain_generations", 1)))
         for name, entry in meta.get("tables", {}).items():
             if entry.get("schema"):
@@ -174,25 +186,36 @@ class Warehouse:
             if entry.get("dropped"):
                 self._dropped[name] = dict(entry["dropped"])
 
-    def _save_meta(self) -> None:
+    def _save_meta(self, names=(), retain: bool = False) -> None:
+        """Merge this instance's entries for ``names`` (and, with
+        ``retain``, its retention knob) into the meta file. The file is
+        re-read under its own flock, so two instances on one root never
+        erase each other's registrations; a merge that changes nothing
+        writes nothing."""
         import json
 
-        tables = {}
-        for name in set(self._schemas) | set(self._partitioning):
-            tables[name] = {
-                "schema": self._schemas[name].jsonValue() if name in self._schemas else None,
-                "partition_by": self._partitioning.get(name),
-                "dropped": self._dropped.get(name) or None,
-            }
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"tables": tables, "retain_generations": self.retain_generations},
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-        os.replace(tmp, self._meta_path())
+        with self._flock("_warehouse_meta.lock"):
+            meta = self._read_meta()
+            tables = dict(meta.get("tables", {}))
+            for name in names:
+                if name not in self._schemas and name not in self._partitioning:
+                    tables.pop(name, None)
+                    continue
+                tables[name] = {
+                    "schema": self._schemas[name].jsonValue() if name in self._schemas else None,
+                    "partition_by": self._partitioning.get(name),
+                    "dropped": self._dropped.get(name) or None,
+                }
+            retention = meta.get("retain_generations", self.retain_generations)
+            if retain:
+                retention = self.retain_generations
+            new = {"tables": tables, "retain_generations": retention}
+            if new == meta:
+                return
+            tmp = self._meta_path() + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(new, f, indent=1, sort_keys=True)
+            os.replace(tmp, self._meta_path())
 
     # -- paths ----------------------------------------------------------
     def _base(self, name: str) -> str:
@@ -326,14 +349,12 @@ class Warehouse:
     # see table A new and table B old for a moment (read-committed per
     # table) -- the documented gap an ACID format with multi-table
     # transactions (or a catalog-level snapshot) would close.
-    def _txn_lock_path(self) -> str:
-        return os.path.join(self.root, "_txn.lock")
-
     @contextlib.contextmanager
-    def _txn_guard(self):
-        """Global flock serializing journal write/recovery (same
-        single-host scope as the per-table locks)."""
-        fd = os.open(self._txn_lock_path(), os.O_CREAT | os.O_RDWR, 0o644)
+    def _flock(self, fname: str):
+        """Exclusive flock on ``<root>/<fname>`` (same single-host scope
+        as the per-table locks). ``_txn.lock`` is the global guard that
+        serializes journal write/recovery."""
+        fd = os.open(os.path.join(self.root, fname), os.O_CREAT | os.O_RDWR, 0o644)
         try:
             fcntl.flock(fd, fcntl.LOCK_EX)
             yield
@@ -369,7 +390,7 @@ class Warehouse:
         generation is skipped -- so a crash during recovery just
         re-runs it.
 
-        FENCED (r5 review): the journal records each table's
+        FENCED: the journal records each table's
         pre-commit pointer target; a table whose pointer names neither
         that dir nor the journaled generation was advanced by a LATER
         writer (one still initialized across the crash window) and is
@@ -380,7 +401,7 @@ class Warehouse:
         tables swapped pre-crash keep the transaction's generations,
         the fenced table keeps the newer writer's -- the same
         last-writer-wins outcome the newer commit already created."""
-        with self._txn_guard():
+        with self._flock("_txn.lock"):
             try:
                 entries = os.listdir(self.root)
             except FileNotFoundError:
@@ -433,7 +454,7 @@ class Warehouse:
         one loader process, controller/dv_loader.rs:59-64)."""
         names = sorted(set(names))
         with contextlib.ExitStack() as stack:
-            stack.enter_context(self._txn_guard())
+            stack.enter_context(self._flock("_txn.lock"))
             for n in names:
                 stack.enter_context(self.lock(n))
             txn = _Transaction(self, names)
@@ -501,28 +522,27 @@ class Warehouse:
         """CREATE TABLE: register schema and write an empty dataset."""
         if self.exists(name):
             if if_not_exists:
+                if name not in self._schemas:
+                    self._load_meta()  # may be registered by another instance
                 self._schemas.setdefault(name, schema)
                 if partition_by:
                     self._partitioning.setdefault(name, partition_by)
-                self._save_meta()
+                self._save_meta([name])
                 return
             raise ValueError(f"table {name} already exists")
         self._schemas[name] = schema
         if partition_by:
             self._partitioning[name] = partition_by
-        self._save_meta()
+        self._save_meta([name])
         # Zero-partition empty frame: createDataFrame([], schema)
         # parallelizes over defaultParallelism, so the metadata-only
         # CREATE was a 32-empty-task write job (~0.5s each; four of
         # them per fresh index warehouse). An emptyRDD write still runs
         # one commit job, but with one (or zero) tasks instead of
-        # defaultParallelism empty tasks (guide section 5: metadata work
-        # should not fan out).
+        # defaultParallelism empty tasks: metadata work should not fan
+        # out.
         empty = self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), schema)
-        writer = empty.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(name))
+        self._writer(name, empty, "overwrite").parquet(self.path(name))
 
     def evolve_schema(
         self,
@@ -586,7 +606,7 @@ class Warehouse:
             fields = [f for f in fields if f.name != c]
             have.discard(c)
         self._schemas[name] = T.StructType(fields)
-        self._save_meta()
+        self._save_meta([name])
         return self._schemas[name]
 
     def drop_table(self, name: str) -> None:
@@ -609,20 +629,19 @@ class Warehouse:
         self._schemas.pop(name, None)
         self._partitioning.pop(name, None)
         self._dropped.pop(name, None)
-        self._save_meta()
+        self._save_meta([name])
 
     # -- reads ----------------------------------------------------------
-    def read(self, name: str) -> DataFrame:
+    def _reader(self, name: str):
+        """A parquet reader with the registered schema: partitionBy moves
+        partition columns into directory names, and the full schema keeps
+        types stable even for an empty table."""
         if name in self._schemas:
-            return self.spark.read.schema(self._add_partition_fields(name)).parquet(
-                self.path(name)
-            )
-        return self.spark.read.parquet(self.path(name))
+            return self.spark.read.schema(self._schemas[name])
+        return self.spark.read
 
-    def _add_partition_fields(self, name: str) -> T.StructType:
-        # partitionBy moves partition cols into directory names; supplying
-        # the full schema keeps types stable even for an empty table.
-        return self._schemas[name]
+    def read(self, name: str) -> DataFrame:
+        return self._reader(name).parquet(self.path(name))
 
     def read_files(self, name: str, rel_paths: list[str]) -> DataFrame:
         """Read a specific subset of a partitioned table's data files
@@ -630,9 +649,7 @@ class Warehouse:
         columns derived from the directory names, so the frame has the
         same schema as ``read`` -- the scan just lists fewer files."""
         live = self.path(name)
-        reader = self.spark.read.option("basePath", live)
-        if name in self._schemas:
-            reader = reader.schema(self._add_partition_fields(name))
+        reader = self._reader(name).option("basePath", live)
         return reader.parquet(*[os.path.join(live, p) for p in rel_paths])
 
     # -- time travel ----------------------------------------------------
@@ -688,10 +705,7 @@ class Warehouse:
         committed at ``version``. The generation dir must still be
         retained -- raise (never silently read the wrong data) if the
         retention window has GCed it."""
-        d = self._version_dir(name, version)
-        if name in self._schemas:
-            return self.spark.read.schema(self._add_partition_fields(name)).parquet(d)
-        return self.spark.read.parquet(d)
+        return self._reader(name).parquet(self._version_dir(name, version))
 
     def vacuum(self, name: str, retain: int | None = None) -> dict:
         """Delta VACUUM analog: reap retained generations beyond
@@ -729,52 +743,71 @@ class Warehouse:
             self._commit_generation(name, d, action=f"rollback(to={version})")
 
     # -- writes ---------------------------------------------------------
+    def _writer(self, name: str, df: DataFrame, mode: str):
+        """``df.write`` in ``mode`` with the table's partition spec."""
+        writer = df.write.mode(mode)
+        if name in self._partitioning:
+            writer = writer.partitionBy(*self._partitioning[name])
+        return writer
+
+    def _stage(self, name: str, df: DataFrame, mode: str, base: str | None = None,
+               drop=()) -> str:
+        """Write one new generation of ``name`` without touching the live
+        pointer, and return its path. Every copy-on-write verb (and every
+        ``transaction`` write) lands its data here; ``_commit_generation``
+        or the transaction journal makes it live.
+
+        The generation gets every file under ``base`` except ``drop``
+        (paths relative to ``base``) by hardlink, then ``df`` is written
+        into it in ``mode``: ``append``, ``overwrite``, or ``dynamic``
+        (replace only the partitions ``df`` has rows in). Until the
+        commit the generation is an orphan that init-time GC reaps, so a
+        crash anywhere in here leaves the previous state live."""
+        gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
+        if base is not None and os.path.isdir(base):
+            self._link_tree(base, gen, {os.path.normpath(p) for p in drop})
+        writer = self._writer(name, df, "append" if mode == "append" else "overwrite")
+        if mode == "dynamic":
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        writer.parquet(gen)
+        return gen
+
+    def _link_tree(self, src: str, dst: str, drop=frozenset()) -> None:
+        """Hardlink every file under ``src`` except the relative paths in
+        ``drop`` into ``dst``, preserving the directory layout. Parquet
+        files are immutable once written, so sharing inodes between
+        generations is safe; linking is O(file count) metadata ops, never
+        a data copy. Falls back to copy2 on filesystems without hardlinks
+        (cross-device, some network FS)."""
+        for walk_root, _dirs, files in os.walk(src):
+            rel = os.path.relpath(walk_root, src)
+            target = os.path.normpath(os.path.join(dst, rel))
+            os.makedirs(target, exist_ok=True)
+            for fn in files:
+                if os.path.normpath(os.path.join(rel, fn)) in drop:
+                    continue
+                s, d = os.path.join(walk_root, fn), os.path.join(target, fn)
+                try:
+                    os.link(s, d)
+                except OSError:
+                    shutil.copy2(s, d)
+
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT...SELECT sink. With the default retention (1) this is
         an in-place parquet append: no copy and no pointer swap, but no
         atomicity across tables either (vault builds land through one
         ``transaction`` instead). Under ``retain_generations > 1`` the
-        append becomes a copy-on-write commit (hardlink live files into a
-        fresh generation, append there, pointer-swap) so that every
+        append is copy-on-write (live files hardlinked into a fresh
+        generation, new rows appended there, pointer-swap) so that every
         retained snapshot stays immutable -- an in-place append would
         leak new files into the generation dir an older version still
         names."""
         if self.retain_generations > 1:
             with self.lock(name):
-                live = self.path(name)
-                gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-                if os.path.isdir(live):
-                    self._link_tree(live, gen)
-                else:
-                    os.makedirs(gen, exist_ok=True)
-                writer = df.write.mode("append")
-                if name in self._partitioning:
-                    writer = writer.partitionBy(*self._partitioning[name])
-                writer.parquet(gen)
+                gen = self._stage(name, df, "append", base=self.path(name))
                 self._commit_generation(name, gen, action="append")
             return
-        writer = df.write.mode("append")
-        if name in self._partitioning:
-            writer = writer.partitionBy(*self._partitioning[name])
-        writer.parquet(self.path(name))
-
-    def _link_tree(self, src: str, dst: str) -> None:
-        """Hardlink every file under ``src`` into ``dst`` preserving the
-        directory layout. Parquet files are immutable once written, so
-        sharing inodes between generations is safe; linking is O(file
-        count) metadata ops, never a data copy. Falls back to copy2 on
-        filesystems without hardlinks (cross-device, some network FS)."""
-        for walk_root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(walk_root, src)
-            target = dst if rel == "." else os.path.join(dst, rel)
-            os.makedirs(target, exist_ok=True)
-            for fn in files:
-                s = os.path.join(walk_root, fn)
-                d = os.path.join(target, fn)
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
+        self._writer(name, df, "append").parquet(self.path(name))
 
     def overwrite_partitions(self, name: str, df: DataFrame) -> None:
         """Partition-pruned rewrite: replace ONLY the partitions whose
@@ -786,12 +819,9 @@ class Warehouse:
         change one load date.
 
         Crash safety matches ``overwrite``: the dynamic overwrite runs
-        against a copy-on-write generation dir (untouched partitions
-        hardlinked in, O(file count) metadata ops, no data copied), and
-        the atomic pointer replace is the commit point. A crash at any
-        instant leaves either the old or the new generation fully live
-        -- never a half-replaced partition -- so rows of keys absent
-        from the batch can never be lost.
+        against a copy-on-write generation, and the atomic pointer
+        replace is the commit point, so rows of keys absent from the
+        batch can never be lost.
 
         Requires a registered partition spec. Because the write lands
         in a fresh generation dir, ``df`` may freely derive from this
@@ -807,78 +837,26 @@ class Warehouse:
                 "requires one (register it via create_table(partition_by=...))"
             )
         with self.lock(name):
-            live = self.path(name)
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            if os.path.isdir(live):
-                self._link_tree(live, gen)
-            else:
-                os.makedirs(gen, exist_ok=True)
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*self._partitioning[name])
-                .parquet(gen)
-            )
+            gen = self._stage(name, df, "dynamic", base=self.path(name))
             self._commit_generation(name, gen, action="overwrite_partitions")
 
     def replace_files(self, name: str, df: DataFrame, drop_files: list[str]) -> None:
-        """File-granular copy-on-write replacement: build a new
-        generation hardlinking every live file EXCEPT ``drop_files``
-        (paths relative to the live dir), land ``df`` (written with the
-        table's partition spec) into the generation, then pointer-
-        commit. Commit semantics are identical to ``overwrite``/
-        ``overwrite_partitions`` -- one atomic pointer replace, either
-        the old or the new state fully live -- but the rewrite
-        granularity is FILES, not partitions: when a bucket partition
-        is large, a merge that read only the files whose key range
-        intersects its batch rewrites only those (the write-
-        amplification knob at 100 TB; an ACID table format's MERGE
-        INTO replaces exactly this, see SCALE.md).
-
-        ``df`` is written through a ``_staging`` subdir inside the
-        generation (underscore-hidden from every scan) and its data
-        files are then moved into their partition dirs -- a crash at
-        any point before the pointer swap leaves an orphan generation
-        that init-time GC reaps."""
+        """File-granular copy-on-write replacement: a new generation
+        holds every live file EXCEPT ``drop_files`` (paths relative to
+        the live dir) plus ``df`` appended with the table's partition
+        spec, then one pointer commit -- the same commit semantics as
+        ``overwrite``/``overwrite_partitions``, either the old or the
+        new state fully live. The rewrite granularity is FILES, not
+        partitions: when a bucket partition is large, a merge that read
+        only the files whose key range intersects its batch rewrites
+        only those (the write-amplification knob at 100 TB; an ACID
+        table format's MERGE INTO replaces exactly this, see SCALE.md)."""
         if name not in self._partitioning:
             raise ValueError(
                 f"table {name} has no partition spec; replace_files requires one"
             )
         with self.lock(name):
-            live = self.path(name)
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            drop = {os.path.normpath(p) for p in drop_files}
-            for walk_root, _dirs, files in os.walk(live):
-                rel_dir = os.path.relpath(walk_root, live)
-                target = gen if rel_dir == "." else os.path.join(gen, rel_dir)
-                os.makedirs(target, exist_ok=True)
-                for fn in files:
-                    rel = os.path.normpath(fn if rel_dir == "." else os.path.join(rel_dir, fn))
-                    if rel in drop:
-                        continue
-                    s = os.path.join(walk_root, fn)
-                    d = os.path.join(target, fn)
-                    try:
-                        os.link(s, d)
-                    except OSError:
-                        shutil.copy2(s, d)
-            staging = os.path.join(gen, "_staging")
-            (
-                df.write.mode("overwrite")
-                .partitionBy(*self._partitioning[name])
-                .parquet(staging)
-            )
-            for walk_root, _dirs, files in os.walk(staging):
-                rel_dir = os.path.relpath(walk_root, staging)
-                if rel_dir == ".":
-                    continue  # root holds only _SUCCESS
-                target = os.path.join(gen, rel_dir)
-                os.makedirs(target, exist_ok=True)
-                for fn in files:
-                    if fn.startswith(("_", ".")):
-                        continue
-                    os.replace(os.path.join(walk_root, fn), os.path.join(target, fn))
-            shutil.rmtree(staging, ignore_errors=True)
+            gen = self._stage(name, df, "append", base=self.path(name), drop=drop_files)
             self._commit_generation(name, gen, action="replace_files")
 
     def overwrite(self, name: str, df: DataFrame) -> None:
@@ -897,12 +875,7 @@ class Warehouse:
         nested acquisition here is reentrant.
         """
         with self.lock(name):
-            gen = self._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-            writer = df.write.mode("overwrite")
-            if name in self._partitioning:
-                writer = writer.partitionBy(*self._partitioning[name])
-            writer.parquet(gen)
-            self._commit_generation(name, gen)
+            self._commit_generation(name, self._stage(name, df, "overwrite"))
 
     def data_files(self, name: str) -> dict[str, int]:
         """Live data files (path relative to the live dir -> bytes);
@@ -918,46 +891,52 @@ class Warehouse:
                 out[rel] = os.path.getsize(os.path.join(walk_root, fn))
         return out
 
+    def file_ranges(
+        self, name: str, cols: list[str], files: list[str] | None = None
+    ) -> dict[str, dict[str, tuple | None]]:
+        """Per live data file (``files``, relative to the live dir;
+        default all), each column's ``(min, max)`` folded over the
+        parquet footer's row-group stats -- or None where the file has
+        no numeric stats for it (string stats may be truncated bounds;
+        a missing column, e.g. a partition column, has none). Metadata-
+        sized work: one footer read per file, the manifest stats an
+        ACID format keeps in its metadata layer."""
+        import pyarrow.parquet as pq
+
+        live = self.path(name)
+        out: dict[str, dict[str, tuple | None]] = {}
+        for rel in self.data_files(name) if files is None else files:
+            out[rel] = rng = dict.fromkeys(cols)
+            try:
+                md = pq.ParquetFile(os.path.join(live, rel)).metadata
+            except (OSError, ValueError):
+                continue
+            names = md.schema.names
+            for c in (c for c in cols if c in names):
+                j = names.index(c)
+                st = [md.row_group(g).column(j).statistics for g in range(md.num_row_groups)]
+                if not st or any(x is None or not x.has_min_max for x in st):
+                    continue
+                lo, hi = min(x.min for x in st), max(x.max for x in st)
+                if isinstance(lo, (int, float)) and isinstance(hi, (int, float)):
+                    rng[c] = (lo, hi)
+        return out
+
     def prune_files(self, name: str, ranges: dict[str, tuple]) -> list[str]:
         """Data-skipping file list: the live files whose parquet footer
         min/max for EVERY column in ``ranges`` intersects the given
         [lo, hi] (inclusive). Files without usable numeric stats are
-        kept (never prune blind). Metadata-sized work -- one footer
-        read per file; this is the manifest-stats pruning an ACID
-        format does from its metadata layer, and it composes with
+        kept (never prune blind). It composes with
         ``compact(cluster_by=...)``: a z-ordered table yields tight
         per-file boxes, so multi-column predicates skip most files."""
-        import pyarrow.parquet as pq
-
-        live = self.path(name)
-        keep: list[str] = []
-        for rel in self.data_files(name):
-            ok = True
-            try:
-                md = pq.ParquetFile(os.path.join(live, rel)).metadata
-                names = md.schema.names
-                for col, (lo, hi) in ranges.items():
-                    j = names.index(col)
-                    fmn = fmx = None
-                    for i in range(md.num_row_groups):
-                        st = md.row_group(i).column(j).statistics
-                        if st is None or not st.has_min_max:
-                            fmn = fmx = None
-                            break
-                        fmn = st.min if fmn is None else min(fmn, st.min)
-                        fmx = st.max if fmx is None else max(fmx, st.max)
-                    if not isinstance(fmn, (int, float)) or not isinstance(
-                        fmx, (int, float)
-                    ):
-                        continue  # no stats -> cannot prune on this column
-                    if fmx < lo or fmn > hi:
-                        ok = False
-                        break
-            except (OSError, ValueError, KeyError):
-                ok = True
-            if ok:
-                keep.append(rel)
-        return keep
+        return [
+            rel
+            for rel, fr in self.file_ranges(name, list(ranges)).items()
+            if all(
+                fr[c] is None or not (fr[c][1] < lo or fr[c][0] > hi)
+                for c, (lo, hi) in ranges.items()
+            )
+        ]
 
     def read_pruned(self, name: str, ranges: dict[str, tuple]) -> DataFrame:
         """Read only the files ``prune_files`` keeps, then apply the
@@ -1105,25 +1084,20 @@ class _Transaction:
         self._names = set(names)
         self._staged: dict[str, str] = {}
 
-    def _check(self, name: str) -> None:
+    def _put(self, name: str, df, mode: str, layered: bool = True) -> None:
+        """Stage one write of ``name``. Writes within one transaction
+        COMPOSE: a layered write builds on the already-staged state, not
+        the pre-transaction live dir (append-after-append must keep both
+        batches; merge-after-append must see the appended rows). The
+        superseded staged generation is removed."""
         if name not in self._names:
             raise ValueError(
                 f"table {name} was not declared in transaction({sorted(self._names)})"
             )
-
-    def _fresh_gen(self, name: str) -> str:
-        return self._wh._base(name) + "__gen-" + uuid.uuid4().hex[:8]
-
-    def _base_dir(self, name: str) -> str:
-        """Writes within one transaction COMPOSE: a second write to the
-        same table builds on the already-staged state, not the
-        pre-transaction live dir (append-after-append must keep both
-        batches; merge-after-append must see the appended rows)."""
-        return self._staged.get(name) or self._wh.path(name)
-
-    def _swap_staged(self, name: str, gen: str) -> None:
+        base = (self._staged.get(name) or self._wh.path(name)) if layered else None
+        gen = self._wh._stage(name, df, mode, base=base)
         old = self._staged.get(name)
-        if old is not None and old != gen:
+        if old is not None:
             shutil.rmtree(old, ignore_errors=True)
         self._staged[name] = gen
 
@@ -1131,13 +1105,7 @@ class _Transaction:
         """Stage a full rewrite of ``name`` (commits on txn exit); any
         earlier staged state of this table is replaced, as a full
         overwrite semantically must."""
-        self._check(name)
-        gen = self._fresh_gen(name)
-        writer = df.write.mode("overwrite")
-        if name in self._wh._partitioning:
-            writer = writer.partitionBy(*self._wh._partitioning[name])
-        writer.parquet(gen)
-        self._swap_staged(name, gen)
+        self._put(name, df, "overwrite", layered=False)
 
     def append(self, name: str, df) -> None:
         """Stage an append (commits with the transaction): the current
@@ -1146,39 +1114,15 @@ class _Transaction:
         transaction, so hub+sat appends and a dimension merge can land
         atomically together (reference parity: the entire load script
         in one transaction, dv_loader.rs:59-64)."""
-        self._check(name)
-        gen = self._fresh_gen(name)
-        base = self._base_dir(name)
-        if os.path.isdir(base):
-            self._wh._link_tree(base, gen)
-        else:
-            os.makedirs(gen, exist_ok=True)
-        writer = df.write.mode("append")
-        if name in self._wh._partitioning:
-            writer = writer.partitionBy(*self._wh._partitioning[name])
-        writer.parquet(gen)
-        self._swap_staged(name, gen)
+        self._put(name, df, "append")
 
     def overwrite_partitions(self, name: str, df) -> None:
-        """Stage a partition-pruned rewrite (CoW hardlink + dynamic
-        overwrite, same shape as Warehouse.overwrite_partitions),
-        layered over any earlier staged state of this table."""
-        self._check(name)
+        """Stage a partition-pruned rewrite (same shape as
+        Warehouse.overwrite_partitions), layered over any earlier staged
+        state of this table."""
         if name not in self._wh._partitioning:
             raise ValueError(f"table {name} has no partition spec")
-        gen = self._fresh_gen(name)
-        base = self._base_dir(name)
-        if os.path.isdir(base):
-            self._wh._link_tree(base, gen)
-        else:
-            os.makedirs(gen, exist_ok=True)
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self._wh._partitioning[name])
-            .parquet(gen)
-        )
-        self._swap_staged(name, gen)
+        self._put(name, df, "dynamic")
 
     def _commit(self) -> None:
         import json
@@ -1198,7 +1142,7 @@ class _Transaction:
                         "tables": {
                             n: os.path.basename(g) for n, g in self._staged.items()
                         },
-                        # Fencing (r5 review): each table's pre-commit
+                        # Fencing: each table's pre-commit
                         # pointer target. Recovery rolls forward only if
                         # the pointer still names this dir -- a pointer
                         # that advanced past it means a later writer

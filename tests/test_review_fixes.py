@@ -61,62 +61,11 @@ def test_schema_level_context_description(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-5 session review pins (warehouse retention/transactions, merge
-# verbs, schema evolution)
+# Merge-verb pins (delete_keys bucket pruning, merge_upsert partition
+# contract)
 # ---------------------------------------------------------------------------
 
 _KV = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())])
-
-
-def _kv(spark, tag, n=4):
-    return spark.createDataFrame([(i, f"{tag}{i}") for i in range(n)], _KV)
-
-
-def test_retention_survives_default_reopen(spark, tmp_path):
-    """A read-only open with the default retention must NOT GC the
-    snapshots a previous owner configured to keep."""
-    root = str(tmp_path / "wh")
-    wh = Warehouse(spark, root, retain_generations=3)
-    wh.create_table("m.t", _KV)
-    for tag in "abc":
-        wh.overwrite("m.t", _kv(spark, tag))
-    avail_before = sum(1 for h in wh.history("m.t") if h["available"])
-    ro = Warehouse(spark, root)  # monitoring open, no knob passed
-    assert ro.retain_generations == 3  # inherited from the sidecar meta
-    assert sum(1 for h in ro.history("m.t") if h["available"]) == avail_before
-    # the owner can still time travel
-    assert {r["v"] for r in wh.read_version("m.t", 1).collect()} == {f"a{i}" for i in range(4)}
-
-
-def test_transaction_writes_to_same_table_compose(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.create_table("m.t", _KV)
-    wh.overwrite("m.t", _kv(spark, "base"))
-    with wh.transaction(["m.t"]) as txn:
-        txn.append("m.t", _kv(spark, "x", n=1))
-        txn.append("m.t", _kv(spark, "y", n=1))  # must keep x0 too
-    got = {r["v"] for r in wh.read("m.t").collect()}
-    assert got == {f"base{i}" for i in range(4)} | {"x0", "y0"}
-    with wh.transaction(["m.t"]) as txn:
-        txn.overwrite("m.t", _kv(spark, "o", n=2))
-        txn.append("m.t", _kv(spark, "z", n=1))  # builds on the staged overwrite
-    assert {r["v"] for r in wh.read("m.t").collect()} == {"o0", "o1", "z0"}
-
-
-def test_evolve_schema_blocks_dropped_readd_with_new_type(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.create_table("m.t", _KV)
-    wh.append("m.t", _kv(spark, "a"))
-    wh.evolve_schema("m.t", drop=["v"])
-    with pytest.raises(ValueError, match="previously dropped with type"):
-        wh.evolve_schema("m.t", add=[T.StructField("v", T.LongType())])
-    # the guard survives a fresh open (ledger persisted)
-    wh2 = Warehouse(spark, str(tmp_path / "wh"))
-    with pytest.raises(ValueError, match="previously dropped with type"):
-        wh2.evolve_schema("m.t", add=[T.StructField("v", T.LongType())])
-    # same-type re-add is allowed and resurfaces the old values
-    wh2.evolve_schema("m.t", add=[T.StructField("v", T.StringType())])
-    assert {r["v"] for r in wh2.read("m.t").collect()} == {f"a{i}" for i in range(4)}
 
 
 def test_delete_keys_bucket_fn_type_mismatch_fails_safe(spark, tmp_path):
@@ -147,18 +96,6 @@ def test_delete_keys_bucket_fn_type_mismatch_fails_safe(spark, tmp_path):
     stats2 = delete_keys(wh2, "m.t", victims, "k", bucket_of=lambda k: k % 2)
     assert stats2["rows_deleted"] == 1
     assert stats2["files_rewritten"] <= n_b1
-
-
-def test_history_marks_single_live_version_after_rollback(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), retain_generations=3)
-    wh.create_table("m.t", _KV)
-    wh.overwrite("m.t", _kv(spark, "good"))
-    wh.overwrite("m.t", _kv(spark, "bad"))
-    wh.rollback("m.t", 1)
-    hist = wh.history("m.t")
-    live = [h for h in hist if h["live"]]
-    assert len(live) == 1
-    assert live[0]["version"] == hist[-1]["version"]  # the rollback commit itself
 
 
 def test_merge_upsert_verify_partition_contract(spark, tmp_path):

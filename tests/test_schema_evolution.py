@@ -73,3 +73,26 @@ def test_evolution_guards(spark, warehouse_dir):
         wh.evolve_schema("m.p", drop=["b"])
     with pytest.raises(ValueError, match="does not exist"):
         wh.evolve_schema("m.p", drop=["nope"])
+
+
+_KV = SCHEMA
+
+
+def _kv(spark, tag, n=4):
+    return spark.createDataFrame([(i, f"{tag}{i}") for i in range(n)], _KV)
+
+
+def test_evolve_schema_blocks_dropped_readd_with_new_type(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.create_table("m.t", _KV)
+    wh.append("m.t", _kv(spark, "a"))
+    wh.evolve_schema("m.t", drop=["v"])
+    with pytest.raises(ValueError, match="previously dropped with type"):
+        wh.evolve_schema("m.t", add=[T.StructField("v", T.LongType())])
+    # the guard survives a fresh open (ledger persisted)
+    wh2 = Warehouse(spark, str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="previously dropped with type"):
+        wh2.evolve_schema("m.t", add=[T.StructField("v", T.LongType())])
+    # same-type re-add is allowed and resurfaces the old values
+    wh2.evolve_schema("m.t", add=[T.StructField("v", T.StringType())])
+    assert {r["v"] for r in wh2.read("m.t").collect()} == {f"a{i}" for i in range(4)}

@@ -229,3 +229,38 @@ def test_snapshot_diff_rejects_key_as_compare_column(spark):
     df = spark.createDataFrame([(1, "a")], "id long, name string")
     with _pytest.raises(ValueError, match="key columns cannot"):
         snapshot_diff(df, df, ["id"], compare_columns=["id", "name"])
+
+
+_KV = SCHEMA
+
+
+def _kv(spark, tag, n=4):
+    return spark.createDataFrame([(i, f"{tag}{i}") for i in range(n)], _KV)
+
+
+def test_retention_survives_default_reopen(spark, tmp_path):
+    """A read-only open with the default retention must NOT GC the
+    snapshots a previous owner configured to keep."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root, retain_generations=3)
+    wh.create_table("m.t", _KV)
+    for tag in "abc":
+        wh.overwrite("m.t", _kv(spark, tag))
+    avail_before = sum(1 for h in wh.history("m.t") if h["available"])
+    ro = Warehouse(spark, root)  # monitoring open, no knob passed
+    assert ro.retain_generations == 3  # inherited from the sidecar meta
+    assert sum(1 for h in ro.history("m.t") if h["available"]) == avail_before
+    # the owner can still time travel
+    assert {r["v"] for r in wh.read_version("m.t", 1).collect()} == {f"a{i}" for i in range(4)}
+
+
+def test_history_marks_single_live_version_after_rollback(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"), retain_generations=3)
+    wh.create_table("m.t", _KV)
+    wh.overwrite("m.t", _kv(spark, "good"))
+    wh.overwrite("m.t", _kv(spark, "bad"))
+    wh.rollback("m.t", 1)
+    hist = wh.history("m.t")
+    live = [h for h in hist if h["live"]]
+    assert len(live) == 1
+    assert live[0]["version"] == hist[-1]["version"]  # the rollback commit itself

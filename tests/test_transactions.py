@@ -398,3 +398,22 @@ def test_go_crash_lands_nothing_and_rerun_matches_clean_go(
     rerun = vault_digests(adw)
     assert len(rerun) >= 4 and all(n > 0 for n, _ in rerun.values())
     assert rerun == vault_digests(clean)
+
+
+_KV = SCHEMA
+_kv = _df
+
+
+def test_transaction_writes_to_same_table_compose(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.create_table("m.t", _KV)
+    wh.overwrite("m.t", _kv(spark, "base"))
+    with wh.transaction(["m.t"]) as txn:
+        txn.append("m.t", _kv(spark, "x", n=1))
+        txn.append("m.t", _kv(spark, "y", n=1))  # must keep x0 too
+    got = {r["v"] for r in wh.read("m.t").collect()}
+    assert got == {f"base{i}" for i in range(4)} | {"x0", "y0"}
+    with wh.transaction(["m.t"]) as txn:
+        txn.overwrite("m.t", _kv(spark, "o", n=2))
+        txn.append("m.t", _kv(spark, "z", n=1))  # builds on the staged overwrite
+    assert {r["v"] for r in wh.read("m.t").collect()} == {"o0", "o1", "z0"}

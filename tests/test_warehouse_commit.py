@@ -1,5 +1,5 @@
-"""Crash-safety of Warehouse.overwrite: generation-dir + pointer-file
-commit (the single-transaction stand-in for the reference's one-script
+"""Crash-safety of the Warehouse's staged writes: generation-dir +
+pointer-file commit (the single-transaction stand-in for the reference's one-script
 SCD2 merge, reference: controller/dv_loader.rs:59-64).
 
 Each test simulates one crash window and asserts the table stays
@@ -9,6 +9,7 @@ the leftovers."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -294,56 +295,78 @@ def test_blocking_lock_failure_raises_not_unserialized(spark, warehouse_dir, mon
             pass
 
 
-def test_overwrite_partitions_crash_keeps_old_state(spark, warehouse_dir, monkeypatch):
-    """overwrite_partitions is copy-on-write: a crash before the pointer
-    commit leaves the PREVIOUS table state fully live -- including
-    current/history rows of keys absent from the batch (ADVICE r4: the
-    old in-place dynamic overwrite could lose them permanently)."""
-    import pytest
+PSCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("b", T.LongType()),
+    ]
+)
 
-    from pyspark.sql import functions as F
 
-    pschema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("v", T.StringType()),
-            T.StructField("b", T.LongType()),
-        ]
-    )
-    wh = Warehouse(spark, warehouse_dir)
-    wh.create_table("m.p", pschema, partition_by=["b"])
-    full = spark.createDataFrame([(i, f"v{i}", i % 2) for i in range(10)], pschema)
-    wh.append("m.p", full)
-    before = {(r["k"], r["v"], r["b"]) for r in wh.read("m.p").collect()}
+def _rows(wh, name="m.p"):
+    return {(r["k"], r["v"], r["b"]) for r in wh.read(name).collect()}
 
-    # batch touches partition b=0 only, and carries only keys 0 and 2:
-    # under in-place dynamic overwrite a crash mid-write could drop
-    # keys 4, 6, 8 forever
-    batch = spark.createDataFrame([(0, "NEW0", 0), (2, "NEW2", 0)], pschema)
+
+def _inodes(d):
+    return {
+        os.path.relpath(os.path.join(r, f), d): os.stat(os.path.join(r, f)).st_ino
+        for r, _, fs in os.walk(d)
+        for f in fs
+        if not f.startswith(("_", "."))
+    }
+
+
+@pytest.mark.parametrize(
+    "verb", ["append", "overwrite", "overwrite_partitions", "replace_files"]
+)
+def test_staged_write_crash_keeps_old_state(spark, warehouse_dir, monkeypatch, verb):
+    """Every single-table write that stages a generation is crash safe:
+    when the pointer commit fails, the table reads EXACTLY its previous
+    state -- including rows of keys absent from the batch, which an
+    in-place dynamic overwrite could lose -- a reopen reaps the orphan
+    generation, and a re-run lands the write. ``append`` stages only
+    under a retention window above one generation."""
+    wh = Warehouse(spark, warehouse_dir, retain_generations=2 if verb == "append" else None)
+    wh.create_table("m.p", PSCHEMA, partition_by=["b"])
+    wh.append("m.p", spark.createDataFrame([(i, f"v{i}", i % 2) for i in range(10)], PSCHEMA))
+    before = _rows(wh)
+    old_inodes = _inodes(wh.path("m.p"))
+    # the batch touches partition b=0 only and carries only keys 0 and 2
+    batch = spark.createDataFrame([(0, "NEW0", 0), (2, "NEW2", 0)], PSCHEMA)
+    drop = [min(old_inodes)]  # replace_files: one file of partition b=0
+    args = (drop,) if verb == "replace_files" else ()
+    lost = {(r["k"], r["v"], r["b"]) for r in wh.read_files("m.p", drop).collect()}
 
     def crash(self, name, gen_dir, action="overwrite"):
         raise RuntimeError("simulated crash before pointer commit")
 
     monkeypatch.setattr(Warehouse, "_commit_generation", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        wh.overwrite_partitions("m.p", batch)
+        getattr(wh, verb)("m.p", batch, *args)
     monkeypatch.undo()
+    assert _rows(wh) == before
+    live = os.path.basename(wh.path("m.p"))
+    assert [e for e in os.listdir(warehouse_dir) if "__gen-" in e and e != live]
 
-    # the table reads back EXACTLY the pre-merge state
-    assert {(r["k"], r["v"], r["b"]) for r in wh.read("m.p").collect()} == before
-    # a fresh Warehouse GCs the orphaned generation and the re-run lands
     wh2 = Warehouse(spark, warehouse_dir)
-    orphans = [e for e in os.listdir(warehouse_dir) if "__gen-" in e]
-    live = os.path.basename(wh2.path("m.p"))
-    assert all(e == live for e in orphans)
-    wh2.overwrite_partitions("m.p", batch)
-    after = {(r["k"], r["v"], r["b"]) for r in wh2.read("m.p").collect()}
-    # partition-granular semantics: touched partition b=0 is replaced by
-    # the batch; UNTOUCHED partition b=1 survives byte-identical (it is
-    # merge_batch's job to carry non-batch rows of touched partitions)
-    assert after == {(0, "NEW0", 0), (2, "NEW2", 0)} | {
-        t for t in before if t[2] == 1
-    }
+    assert all(e == live for e in os.listdir(warehouse_dir) if "__gen-" in e)
+    assert _rows(wh2) == before
+    getattr(wh2, verb)("m.p", batch, *args)
+    new = {(0, "NEW0", 0), (2, "NEW2", 0)}
+    assert _rows(wh2) == {
+        "append": before | new,
+        "overwrite": new,
+        # the touched partition b=0 is replaced by the batch; b=1 survives
+        "overwrite_partitions": new | {t for t in before if t[2] == 1},
+        "replace_files": (before - lost) | new,
+    }[verb]
+    if verb == "replace_files":
+        new_live = wh2.path("m.p")
+        new_inodes = _inodes(new_live)
+        carried = {p: i for p, i in old_inodes.items() if p not in drop}
+        assert carried and all(new_inodes.get(p) == i for p, i in carried.items())
+        assert not any("_staging" in ds for _, ds, _ in os.walk(new_live))
 
 
 def test_compact_reduces_files_preserves_rows(spark, warehouse_dir, sf_dir):

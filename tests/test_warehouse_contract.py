@@ -92,3 +92,27 @@ def test_maybe_compact_triggers_on_small_file_pressure(spark, warehouse_dir):
     assert after["small_files"] <= 16
     # data intact through the rewrite
     assert wh.read("m.t").count() == 2100
+
+
+def test_two_instances_keep_each_others_registrations(spark, warehouse_dir):
+    """Two Warehouse objects on one root: B registering a table must not
+    erase A's registration, or a later open appends to A's partitioned
+    table without its spec and the row is lost to every read."""
+    import json
+    import os
+
+    a = Warehouse(spark, warehouse_dir)
+    b = Warehouse(spark, warehouse_dir)
+    a.create_table("a.x", SCHEMA, partition_by=["b"])
+    a.append("a.x", spark.createDataFrame([(1, "one", 0), (2, "two", 1)], SCHEMA))
+    b.create_table("b.y", SCHEMA)
+    with open(os.path.join(warehouse_dir, "_warehouse_meta.json")) as f:
+        assert set(json.load(f)["tables"]) == {"a.x", "b.y"}
+    c = Warehouse(spark, warehouse_dir)
+    assert c._partitioning["a.x"] == ["b"]
+    c.append("a.x", spark.createDataFrame([(3, "three", 0)], SCHEMA))
+    assert sorted(r["k"] for r in Warehouse(spark, warehouse_dir).read("a.x").collect()) == [1, 2, 3]
+    # a drop through one instance removes only that entry
+    b.drop_table("b.y")
+    with open(os.path.join(warehouse_dir, "_warehouse_meta.json")) as f:
+        assert set(json.load(f)["tables"]) == {"a.x"}
